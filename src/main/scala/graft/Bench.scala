@@ -6,7 +6,8 @@ import graft.jobs.{ExtractionJob, JobConfig, TierJob}
 import graft.pages.PagesTable
 
 /** Benchmark main: headline queries + extraction throughput on
-  * SPARK_GRAFT_SF_DIR at local[SPARK_GRAFT_CPUS].
+  * SPARK_GRAFT_SF_DIR at local[SPARK_GRAFT_CPUS] (default: every available
+  * processor).
   *
   * Prints ONE JSON line:
   *   {"metric":"total","value":<sec>,"unit":"sec",
@@ -38,70 +39,17 @@ import graft.pages.PagesTable
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
 
-    // Host-state probe: a fixed single-threaded workload (1e7 splitmix64
-    // steps + fp mix). The VM throttles monotonically under sustained
-    // load and recovers when idle (BASELINE.md, measured 731→557 pages/s
-    // over 10 min on an identical binary), so every throughput figure in
-    // this run must be read against this number: the BASELINE.md band
-    // publishes the probe range it was recorded under.
-    def probeStMops(): Double = {
-      def run(): Double = {
-        val t0 = System.nanoTime()
-        var s = 0x9e3779b97f4a7c15L; var acc = 0.0; var i = 0
-        while (i < 10000000) {
-          s += 0x9e3779b97f4a7c15L
-          var z = s
-          z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-          z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-          acc += java.lang.Double.longBitsToDouble((z >>> 12) | 0x3ff0000000000000L)
-          i += 1
-        }
-        if (acc == Double.MinValue) println(acc) // keep the loop live
-        10000000.0 / ((System.nanoTime() - t0) / 1e3) // M ops/sec
-      }
-      run() // JIT warmup
-      (1 to 3).map(_ => run()).max
-    }
-
-    // Multi-core probe: the same loop on one thread per vCPU. The VM caps
-    // MULTI-core throughput under sustained load while single-thread
-    // turbo stays near-flat (measured: a 4x extract collapse with the
-    // 1-thread probe down only 8%), so the 32-thread aggregate is the
-    // number every parallel figure must be read against — BASELINE.md
-    // publishes the docs/s : mt-probe ratio band. Re-samplable: the
-    // tier-job phase takes a fresh adjacent sample (see below), closing
-    // the round-3 gap where the run's only probe was minutes stale by
-    // the time the longest phase started.
-    def probeMtMops(): Double = {
-      val nt = cpus.toInt
-      def run(): Double = {
-        val threads = (0 until nt).map { _ =>
-          new Thread(() => {
-            var s = 0x9e3779b97f4a7c15L; var acc = 0.0; var i = 0
-            while (i < 10000000) {
-              s += 0x9e3779b97f4a7c15L
-              var z = s
-              z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-              z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-              acc += java.lang.Double.longBitsToDouble((z >>> 12) | 0x3ff0000000000000L)
-              i += 1
-            }
-            if (acc == Double.MinValue) println(acc)
-          })
-        }
-        val t0 = System.nanoTime()
-        threads.foreach(_.start())
-        threads.foreach(_.join())
-        nt * 10000000.0 / ((System.nanoTime() - t0) / 1e3)
-      }
-      run() // warmup
-      (1 to 2).map(_ => run()).max
-    }
-    val probeMops = probeStMops()
-    val probeMt = probeMtMops()
+    // Host-state probes: the VM throttles under sustained load and
+    // recovers when idle (BASELINE.md, 731→557 pages/s over 10 min on one
+    // binary), so every figure in this run is read against them — one
+    // thread for turbo state, one per vCPU for the multi-core cap that
+    // `hostStamp` re-samples before each long phase.
+    val probeMops = HostProbe.stProbe()
+    val probeMt = HostProbe.mtProbe(cpus.toInt)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -136,7 +84,7 @@ object Bench {
     // r4, now also bracketing the heavy extras (e12..g12) and the e1
     // baseline, whose r4 readings were capped by the run's own tail.
     def hostStamp(prefix: String): Unit = {
-      extras += s"${prefix}_probe_mt_mops" -> f"${probeMtMops()}%.1f"
+      extras += s"${prefix}_probe_mt_mops" -> f"${HostProbe.mtProbe(cpus.toInt)}%.1f"
       val (_, ctlSec) = time {
         graft.sim.Ann.cosineKnn(
           spark.read.parquet(s"$sfDir/embeddings.parquet")

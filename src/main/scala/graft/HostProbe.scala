@@ -1,7 +1,7 @@
 package graft
 
-/** Standalone host-state probe: the same splitmix64+fp workload the
-  * bench embeds (BASELINE.md calibration), runnable in seconds between
+/** Host-state probe: the splitmix64+fp workload `Bench` stamps its
+  * figures with (BASELINE.md calibration), also runnable in seconds between
   * measurements so any figure can be stamped with the host state it ran
   * under. Prints one JSON line {"st_mops":…, "mt_mops":…, "threads":N}.
   * No Spark session — pure JVM, so it measures the machine, not the
@@ -23,8 +23,8 @@ object HostProbe {
     10000000.0 / ((System.nanoTime() - t0) / 1e3)
   }
 
-  /** Best-of-3 single-thread probe (JIT-warmed). Callable from other
-    * harnesses (ScalingBench) so measurements carry their own host state. */
+  /** Best-of-3 single-thread probe (JIT-warmed). Callable from harnesses
+    * (`Bench`) so measurements carry their own host state. */
   def stProbe(): Double = {
     kernel() // JIT warmup
     (1 to 3).map(_ => kernel()).max

@@ -83,16 +83,6 @@ object LayoutQueries {
     (url, kept.length, paras.length - kept.length)
   }
 
-  /** Text attributes (bold/italic/underline/strike/color/heading) per
-    * block — textualAttribute analogue. */
-  def textAttributes(url: String, html: Array[Byte]): Seq[(String, Int, String, Int, Int, Int, Int, Int, Int, String, Int)] = {
-    val dom = graft.html.Dom.parse(html)
-    graft.extract.TextAttributes.blockAttrs(dom).map { a =>
-      (url, a.idx, a.tag, a.chars, a.boldChars, a.italicChars,
-        a.underlineChars, a.strikeChars, a.coloredChars, a.fontColor, a.fontSize)
-    }
-  }
-
   /** Per-page style-context totals (the l7 query shape): summed in the
     * page transform — no shuffle, the per-url grouping is free. */
   def textAttrTotals(url: String, html: Array[Byte]): (String, Long, Long, Long, Long, Long, Long, Long, Long) = {

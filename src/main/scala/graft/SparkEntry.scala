@@ -889,8 +889,8 @@ object SparkEntry {
     * materialised parquet paths). */
   def oracleSql: Map[String, String] = oracleSqlFor("sf0.01")
 
-  /** SF-parametric oracle map: `Verify`/`VerifyOne` dump the map for the
-    * sf they actually ran, so a local sf0.001 replay compares against
+  /** SF-parametric oracle map: `Verify` dumps the map for the
+    * sf it actually ran, so a local sf0.001 replay compares against
     * sf0.001 pages instead of spuriously failing every pages-derived
     * query against the driver's sf0.01 tables. The l2/l3/l5 expectation
     * sidecars are committed per-sf (`tools/gen_layout_sidecars.py <sf>`);

@@ -1,12 +1,17 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: `Verify <sfDir> <outDir> [name...]` writes
+  * each SparkEntry.queries result to `outDir/<name>` parquet, plus
+  * oracle_sql.json, for the driver's DuckDB compare. With no names every
+  * query runs; naming some runs just those (the per-query loop when
+  * developing one op) with the same sink shape, so the compare replays
+  * unchanged on the subset. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [name...]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -14,8 +19,21 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    dump(spark, args(0), args(1), args.drop(2).toSeq)
+    spark.stop()
+  }
+
+  /** Body split from `main` so specs drive it with a test session. Empty
+    * `names` means every query; an unknown name fails before any runs. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           names: Seq[String]): Unit = {
+    val all = SparkEntry.queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+    val selected =
+      if (names.isEmpty) all.toSeq else names.distinct.map(n => n -> all(n))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -42,8 +60,8 @@ object Verify {
     // sf0.01 flow is unchanged; a local sf0.001 replay now compares
     // against its own pages tables instead of the driver scale's)
     val json = SparkEntry.oracleSqlFor(new java.io.File(sfDir).getName)
+      .filter { case (k, _) => names.isEmpty || names.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -80,27 +80,9 @@ object Extractor {
     case _                                        => "paragraph"
   }
 
-  /** Collapse all whitespace runs to single spaces and trim. */
-  def normalize(s: String): String = {
-    val n = s.length
-    val sb = new java.lang.StringBuilder(n)
-    var i = 0
-    var pendingSpace = false
-    while (i < n) {
-      val c = s.charAt(i)
-      if (Character.isWhitespace(c)) pendingSpace = sb.length() > 0
-      else {
-        if (pendingSpace) { sb.append(' '); pendingSpace = false }
-        sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
-  }
-
-  /** normalize() over a block buffer without the intermediate toString
-    * copy — a separate monomorphic body (a shared CharSequence loop makes
-    * charAt bimorphic on the hot path). */
+  /** Collapse all whitespace runs in a block buffer to single spaces and
+    * trim, without an intermediate toString copy — a monomorphic body (a
+    * shared CharSequence loop makes charAt bimorphic on the hot path). */
   private def normalizeSb(s: java.lang.StringBuilder): String = {
     val n = s.length
     val sb = new java.lang.StringBuilder(n)
@@ -118,7 +100,8 @@ object Extractor {
     sb.toString
   }
 
-  /** length of normalize(s), computed without building the string. */
+  /** length of the [[normalizeSb]] form of s, computed without building
+    * the string. */
   def normalizedLength(s: String): Int = {
     val n = s.length
     var len = 0

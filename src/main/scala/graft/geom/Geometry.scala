@@ -25,19 +25,6 @@ object Geometry {
     if (xr <= xl || yb <= yt) 0L else (xr - xl).toLong * (yb - yt).toLong
   }
 
-  /** Overlap area as a percentage of the SMALLER box's area, over
-    * (x1,y1,x2,y2) rectangles (reference: routils/pinp_utils.py:27-43). */
-  def overlapPctOfSmall(large: (Double, Double, Double, Double),
-                        small: (Double, Double, Double, Double)): Double = {
-    val ox1 = math.max(large._1, small._1)
-    val oy1 = math.max(large._2, small._2)
-    val ox2 = math.min(large._3, small._3)
-    val oy2 = math.min(large._4, small._4)
-    val overlap = math.max(0.0, ox2 - ox1) * math.max(0.0, oy2 - oy1)
-    val smallArea = (small._3 - small._1) * (small._4 - small._2)
-    overlap / smallArea * 100.0
-  }
-
   /** Strict containment OR ≥ threshold% overlap-of-smaller
     * (reference: pinp_utils.py:45-57). */
   def isBoxInside(large: (Double, Double, Double, Double),

@@ -3,88 +3,11 @@ package graft.layout
 import scala.collection.mutable.ArrayBuffer
 import graft.geom.BBox
 
-/** W1/W2 + the live final ordering path, ported from
-  * reference: server/modules/main/routils/{word_order_utils,
-  * new_read_order}.py. All per-page and inherently sequential — small n.
+/** W1 + the live final ordering path, ported from
+  * reference: server/modules/main/routils/new_read_order.py. All
+  * per-page and inherently sequential — small n.
   */
 object WordOrder {
-
-  /** Result of the W2 walk: per-box reading order (0-based, -1 =
-    * unreached) and line number. */
-  final case class Orders(order: Array[Int], line: Array[Int])
-
-  /** W2: global word order via the NN-chain walk
-    * (reference: word_order_utils.py:127-150 `word_order`).
-    *
-    * Seeds at the unvisited member with no Left_Box link minimising the
-    * euclidean distance of (leftMid.x, topMid.y) from the page origin
-    * (word_order_utils.py:48-79); follows the Right_Box chain
-    * (…:5-9); falls back to the nearest unvisited right candidate with
-    * Δy ≤ 15 (…:108-125); re-seeds (incrementing the line number) when the
-    * chain dies. Line numbers are global across components, starting at 0.
-    *
-    * A cycle in the Right_Box chain would hang the reference; here a
-    * bounded iteration count breaks out deterministically.
-    */
-  def wordOrder(components: Seq[Vector[Int]], boxes: IndexedSeq[BBox],
-                rightBox: Array[NLink], leftBox: Array[NLink]): Orders = {
-    val n = boxes.length
-    val visited = Array.fill(n)(false)
-    val order = Array.fill(n)(-1)
-    val lineNumber = Array.fill(n)(-1)
-    var ord = 0
-    var line = 0
-
-    def minimumDistance(members: Vector[Int]): Int = {
-      var minEuclid = Double.PositiveInfinity
-      var minY = Double.PositiveInfinity
-      var closest = -1
-      for (j <- members if !visited(j)) {
-        val x = boxes(j).leftMid.x
-        val y = boxes(j).topMid.y
-        val euclid = math.hypot(x, y)
-        if (euclid <= minEuclid && y < minY && leftBox(j).isNone) {
-          minY = y; minEuclid = euclid; closest = j
-        }
-      }
-      closest
-    }
-
-    def calculateNextRight(members: Vector[Int], minIdx: Int): Int = {
-      var minX = Double.PositiveInfinity
-      var closest = -1
-      for (j <- members if !visited(j)) {
-        val xd = math.abs(boxes(minIdx).rightMid.x - boxes(j).leftMid.x)
-        val yd = math.abs(boxes(minIdx).rightMid.y - boxes(j).leftMid.y)
-        if (xd < minX && yd <= 15) { minX = xd; closest = j }
-      }
-      closest
-    }
-
-    for (members <- components) {
-      var minIdx = minimumDistance(members)
-      val anyUnvisited = members.exists(j => !visited(j))
-      var guard = 0
-      val maxIter = 4 * n + 16
-      while (anyUnvisited && minIdx != -1 && guard < maxIter) {
-        if (!visited(minIdx)) {
-          visited(minIdx) = true
-          order(minIdx) = ord
-          lineNumber(minIdx) = line
-          ord += 1
-        }
-        val next = if (rightBox(minIdx).isNone) -1 else rightBox(minIdx).id
-        if (next != -1) minIdx = next
-        else {
-          val nr = calculateNextRight(members, minIdx)
-          if (nr != -1) minIdx = nr
-          else { minIdx = minimumDistance(members); line += 1 }
-        }
-        guard += 1
-      }
-    }
-    Orders(order, lineNumber)
-  }
 
   /** W1: line grouping + within-line x sort over (x1,y1,x2,y2) boxes
     * already sorted by y — a new line starts when y1 ≥ current + 0.75·mean

@@ -1,5 +1,6 @@
 package graft.mm
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,7 +36,8 @@ object MultiModal {
     * contexts, model weights) must NOT be serialized — acquire it in
     * [[open]] (called once per task before the first row, the
     * amortisation point) into `@transient` fields and release it in
-    * [[close]] (called after the partition is exhausted). */
+    * [[close]] (called once per task: after the partition is exhausted,
+    * or at task completion if it never is). */
   trait MediaCodec extends Serializable {
     def open(): Unit = ()
     def decode(id: String, bytes: Array[Byte]): MediaMeta
@@ -51,15 +53,18 @@ object MultiModal {
   }
 
   /** Per-partition codec lifecycle: open before the first row, decode
-    * each row through `f`, close exactly once when exhausted. */
+    * each row through `f`, close exactly once — when exhausted, or at task
+    * completion when the plan stops early (limit/take) or the task fails. */
   private def codecIterator[T](codec: MediaCodec, it: Iterator[(String, Array[Byte])],
                                f: (MediaCodec, String, Array[Byte]) => T): Iterator[T] = {
     codec.open()
     var closed = false
+    def closeOnce(): Unit = if (!closed) { closed = true; codec.close() }
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
     new Iterator[T] {
       def hasNext: Boolean = {
         val h = it.hasNext
-        if (!h && !closed) { closed = true; codec.close() }
+        if (!h) closeOnce()
         h
       }
       def next(): T = { val (id, bytes) = it.next(); f(codec, id, bytes) }

@@ -3,6 +3,7 @@ package graft.rel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampNTZType
 
 /** Event-stream relational operators: gap sessionization, as-of join, and
   * deterministic HyperLogLog registers.
@@ -88,10 +89,15 @@ object EventOps {
     * chunks minus boundary merges so far) joins back to phase 1 rows on
     * (user, chunk) — summary volume is |user×chunk| rows, never events.
     *
-    * The chunk id derives from a monotone epoch cast (`ts` →
-    * session-TZ timestamp → microseconds); a uniform timezone shift moves
-    * chunk EDGES but never the result — the spec asserts equality with
-    * [[sessionize]] on boundary-straddling data at several chunk widths.
+    * The chunk id is the event's epoch microseconds over `chunkUs`. For
+    * TIMESTAMP input that is the instant. For TIMESTAMP_NTZ input it is
+    * the wall-clock value read at a fixed UTC offset (exact interval
+    * arithmetic), never a session-TZ cast: across a DST fall-back that
+    * cast stretches a 15-min wall-clock gap to 75 min, which could put
+    * one session's events in non-adjacent chunks and split it. Under a
+    * UTC session the fixed-offset read equals that cast. The spec asserts
+    * equality with [[sessionize]] on boundary-straddling data at several
+    * chunk widths and across a New York fall-back.
     */
   def sessionizeChunked(events: DataFrame, gapMinutes: Int = 30,
                         chunkMinutes: Int = 1440): DataFrame = {
@@ -100,8 +106,12 @@ object EventOps {
         "(an empty chunk must guarantee a session break)")
     val gap = make_dt_interval(lit(0), lit(0), lit(gapMinutes), lit(0))
     val chunkUs = chunkMinutes * 60000000L
-    val ev = events.withColumn("chunk",
-      floor(unix_micros(col("ts").cast("timestamp")) / chunkUs))
+    val epochUs =
+      if (events.schema("ts").dataType == TimestampNTZType)
+        ((col("ts") - lit(java.time.LocalDateTime.of(1970, 1, 1, 0, 0)))
+          .cast("interval second").cast("decimal(18,6)") * 1000000).cast("long")
+      else unix_micros(col("ts").cast("timestamp"))
+    val ev = events.withColumn("chunk", floor(epochUs / chunkUs))
 
     val wLocal = Window.partitionBy("user_id", "chunk")
       .orderBy(col("ts").asc, col("event_id").asc)

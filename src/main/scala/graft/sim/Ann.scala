@@ -479,10 +479,6 @@ object Ann {
       .agg(array_sort(collect_list(struct(col("sub"), col("cluster")))).as("a"))
       .select(col("vec_id"), transform(col("a"), s => s.getField("cluster")).as("code"))
 
-  /** Inverse of [[pqPack]]: the array position IS the subspace id. */
-  def pqUnpack(packed: DataFrame): DataFrame =
-    packed.select(col("vec_id"), posexplode(col("code")).as(Seq("sub", "cluster")))
-
   /** PQ reconstruction: per-subspace centroids concatenated in subspace
     * order — the compressed stand-in ADC ranks against. */
   def pqReconstruct(codes: DataFrame, book: DataFrame): DataFrame =

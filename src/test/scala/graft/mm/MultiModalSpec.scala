@@ -42,19 +42,21 @@ class MultiModalSpec extends AnyFunSuite with BeforeAndAfterAll {
       got("c").format == "html")
   }
 
-  test("a custom codec injects through the same plumbing, open/close ran per task") {
-    val codec = new MultiModal.MediaCodec {
-      // executor-side counters: visible back in local[*] mode because
-      // tasks share the JVM — good enough to assert the lifecycle fired
-      def decode(id: String, bytes: Array[Byte]): MultiModal.MediaMeta = {
-        assert(CodecProbe.opened.get() > 0, "decode before open()")
-        MultiModal.MediaMeta(id, bytes.length.toLong, "custom", 1, 2, 3)
-      }
-      def features(id: String, bytes: Array[Byte]): MultiModal.MediaFeatures =
-        MultiModal.MediaFeatures(id, Array(42f))
-      override def open(): Unit = CodecProbe.opened.incrementAndGet()
-      override def close(): Unit = CodecProbe.closed.incrementAndGet()
+  private def countingCodec = new MultiModal.MediaCodec {
+    // executor-side counters: visible back in local[*] mode because
+    // tasks share the JVM — good enough to assert the lifecycle fired
+    def decode(id: String, bytes: Array[Byte]): MultiModal.MediaMeta = {
+      assert(CodecProbe.opened.get() > 0, "decode before open()")
+      MultiModal.MediaMeta(id, bytes.length.toLong, "custom", 1, 2, 3)
     }
+    def features(id: String, bytes: Array[Byte]): MultiModal.MediaFeatures =
+      MultiModal.MediaFeatures(id, Array(42f))
+    override def open(): Unit = CodecProbe.opened.incrementAndGet()
+    override def close(): Unit = CodecProbe.closed.incrementAndGet()
+  }
+
+  test("a custom codec injects through the same plumbing, open/close ran per task") {
+    val codec = countingCodec
     CodecProbe.opened.set(0); CodecProbe.closed.set(0)
     val metas = MultiModal.decode(spark, media, codec = codec).collect()
     assert(metas.length == 3 && metas.forall(_.format == "custom"))
@@ -67,6 +69,17 @@ class MultiModalSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(feats.length == 3 && feats.forall(_.features.sameElements(Array(42f))))
     assert(CodecProbe.closed.get() == CodecProbe.opened.get() &&
       CodecProbe.opened.get() > 0)
+  }
+
+  test("an early-terminating plan still closes every codec it opened") {
+    // take(1) over one three-row partition stops reading after the first
+    // row, so the partition iterator is never exhausted
+    CodecProbe.opened.set(0); CodecProbe.closed.set(0)
+    val feats = MultiModal.features(spark, media.coalesce(1), codec = countingCodec).take(1)
+    assert(feats.length == 1)
+    assert(CodecProbe.opened.get() == 1, "one task, one open()")
+    assert(CodecProbe.closed.get() == CodecProbe.opened.get(),
+      "an unexhausted partition must still close its codec exactly once")
   }
 
   test("frame sampling strides the decoded frame count") {

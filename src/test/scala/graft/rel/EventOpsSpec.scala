@@ -267,6 +267,30 @@ class EventOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("sessionizeChunked == sessionize on NTZ events across a DST fall-back") {
+    // 01:55 and 02:10 wall clock are 15 min apart, but New York reads
+    // 01:55 as EDT and 02:10 as EST: as instants they are 75 min apart,
+    // so an instant-derived 30-min chunk puts them in non-adjacent chunks
+    val s = spark
+    import s.implicits._
+    val tzKey = "spark.sql.session.timeZone"
+    val priorTz = spark.conf.get(tzKey)
+    spark.conf.set(tzKey, "America/New_York")
+    try {
+      val e = Seq(
+        (1L, java.time.LocalDateTime.parse("2024-11-03T01:55:00"), 7L),
+        (2L, java.time.LocalDateTime.parse("2024-11-03T02:10:00"), 7L))
+        .toDF("event_id", "ts", "user_id")
+      assert(e.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
+      val single = EventOps.sessionize(e, gapMinutes = 30).collect()
+        .map(r => (r.getLong(1), r.getLong(2))).toMap
+      val chunked = EventOps.sessionizeChunked(e, gapMinutes = 30, chunkMinutes = 30)
+        .collect().map(r => (r.getLong(1), r.getLong(2))).toMap
+      assert(single == Map(1L -> 1L, 2L -> 1L))
+      assert(chunked == single, s"chunked=$chunked single=$single")
+    } finally spark.conf.set(tzKey, priorTz)
+  }
+
   test("sessionizeChunked refuses chunk width below the gap") {
     val e = events((1L, "2024-01-01 10:00:00", 7L))
     intercept[IllegalArgumentException] {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.jobs.{ExtractionJob, JobConfig, TierJob}
 import graft.pages.PagesTable
@@ -30,6 +29,8 @@ import graft.pages.PagesTable
   *  - `t7_jaccard_capped` is the jaccard query with the document-frequency
   *    guard ON (maxDf=100) — the corpus-scale configuration; the unguarded
   *    t7 stays for oracle parity.
+  *  - the session runs under `ExtractMain`'s SQL conf
+  *    ([[Sessions.ExtractionSql]]), as the production job does.
   *
   * Scaling evidence (N vs 4N executors, BASELINE.md protocol): run twice —
   *   SPARK_GRAFT_CPUS=8 ... graft.Bench   (N)
@@ -39,8 +40,7 @@ import graft.pages.PagesTable
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = Sessions.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
 
     // Host-state probes: the VM throttles under sustained load and
@@ -49,18 +49,8 @@ object Bench {
     // thread for turbo state, one per vCPU for the multi-core cap that
     // `hostStamp` re-samples before each long phase.
     val probeMops = HostProbe.stProbe()
-    val probeMt = HostProbe.mtProbe(cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (4 * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val probeMt = HostProbe.mtProbe(cpus)
+    val spark = Sessions.get("graft-bench", Sessions.ExtractionSql)
 
     val sfName = new java.io.File(sfDir).getName
     val pagesPath = PagesTable.ensure(spark, sfName)
@@ -84,7 +74,7 @@ object Bench {
     // r4, now also bracketing the heavy extras (e12..g12) and the e1
     // baseline, whose r4 readings were capped by the run's own tail.
     def hostStamp(prefix: String): Unit = {
-      extras += s"${prefix}_probe_mt_mops" -> f"${HostProbe.mtProbe(cpus.toInt)}%.1f"
+      extras += s"${prefix}_probe_mt_mops" -> f"${HostProbe.mtProbe(cpus)}%.1f"
       val (_, ctlSec) = time {
         graft.sim.Ann.cosineKnn(
           spark.read.parquet(s"$sfDir/embeddings.parquet")

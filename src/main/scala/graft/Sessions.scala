@@ -1,0 +1,35 @@
+package graft
+
+import org.apache.spark.SparkConf
+import org.apache.spark.sql.SparkSession
+
+/** The one session builder of every main: it sets the app name and pins
+  * the UTC session time zone. Under spark-submit the launcher supplies the
+  * master; with no `spark.master` configured (`sbt runMain`) the job runs
+  * on this host: `local[cpus]`, `cpus` shuffle partitions, no UI, WARN
+  * logging. */
+object Sessions {
+
+  /** `ExtractMain`'s SQL conf, which `Bench` also runs under. Extraction is
+    * CPU-dense per byte, so reduce partitions are sized for several task
+    * waves per core (parallelism-first coalescing would give one wave). */
+  val ExtractionSql: Map[String, String] = Map(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (16 * 1024 * 1024).toString)
+
+  /** SPARK_GRAFT_CPUS, else every available processor. */
+  def cpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
+  def get(app: String, sql: Map[String, String] = Map.empty): SparkSession = {
+    val local = !new SparkConf().contains("spark.master")
+    val b = SparkSession.builder().appName(app).config("spark.sql.session.timeZone", "UTC")
+    if (local) b.master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.ui.enabled", false)
+    val spark = b.config(sql).getOrCreate()
+    if (local) spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

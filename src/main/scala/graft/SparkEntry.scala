@@ -18,12 +18,13 @@ import graft.text.{LangId, ScriptId, TextOps}
   *
   * The `pages` table (BASELINE.json input_hint shape) is synthesised
   * deterministically (PageGen, seed 42) and materialised under
-  * /root/repo/data/pages_<ver>/<sf>/ so the DuckDB oracle can read the very
-  * same parquet; `pages.text` carries the generator's golden extraction,
-  * so `x1_extract_text` is a true byte-identity check of the extractor
-  * through the driver's hash compare. Golden sidecar tables
-  * (`<sf>_spans`, `<sf>_meta`) carry the generator-derived span/attribute
-  * expectations for the layout family oracles.
+  * `data/pages_<ver>/<sf>/` of the checkout root ([[PagesTable.dirFor]])
+  * so the DuckDB oracle can read the very same parquet; `pages.text`
+  * carries the generator's golden extraction, so `x1_extract_text` is a
+  * true byte-identity check of the extractor through the driver's hash
+  * compare. Golden sidecar tables (`<sf>_spans`, `<sf>_meta`) carry the
+  * generator-derived span/attribute expectations for the layout family
+  * oracles.
   */
 object SparkEntry {
 
@@ -1030,20 +1031,10 @@ object SparkEntry {
     // span geometry (tools/gen_layout_sidecars.py; committed). The
     // committed files are sf0.01-scale because the driver's DuckDB
     // oracle pass runs at sf0.01 — as is this whole map (every pages
-    // path above is dirFor("sf0.01")). Resolution anchors on the repo
-    // root by walking UP from the cwd until the committed sidecar dir
-    // appears (the driver runs from the repo root; a caller invoked
-    // from a subdirectory or another checkout location still resolves
-    // its own committed sidecars), falling back to cwd-relative.
-    val sidecars = {
-      val rel = "src/test/resources/golden/sidecars"
-      def walkUp(d: java.io.File): Option[java.io.File] =
-        if (d == null) None
-        else if (new java.io.File(d, rel).isDirectory) Some(new java.io.File(d, rel))
-        else walkUp(d.getParentFile)
-      walkUp(new java.io.File(".").getCanonicalFile)
-        .getOrElse(new java.io.File(rel)).getAbsolutePath
-    }
+    // path above is dirFor("sf0.01")). They resolve under the same
+    // checkout root as the pages tables (PagesTable.repoRoot).
+    val sidecars =
+      new java.io.File(PagesTable.repoRoot, PagesTable.SidecarDir).getAbsolutePath
     val tok = "string_split_regex(trim(text), '\\s+')"
     val shingles =
       s"""(SELECT doc_id, unnest(

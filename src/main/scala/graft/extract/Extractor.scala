@@ -1,6 +1,7 @@
 package graft.extract
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 import graft.html.Dom
 import graft.geom.BBox
 import graft.layout.{ReadingOrderPipeline, Word}
@@ -216,8 +217,13 @@ object Extractor {
   /** Lines a block occupies when wrapped at LineChars. */
   def lineCount(chars: Int): Int = math.max(1, (chars + LineChars - 1) / LineChars)
 
-  /** Extract one page. */
-  def extract(url: String, html: Array[Byte]): Extracted = {
+  /** Extract one page. Total: a NonFatal error (null html, an extractor
+    * bug) yields a `failed` row, so every caller shares one failure policy. */
+  def extract(url: String, html: Array[Byte]): Extracted =
+    try extractPage(url, html)
+    catch { case NonFatal(_) => Extracted(url, "", Array.empty, Array.empty, failed = true) }
+
+  private def extractPage(url: String, html: Array[Byte]): Extracted = {
     val dom = Dom.parse(html)
     val all = blocksOf(dom)
     val content = all.filter(isContent)

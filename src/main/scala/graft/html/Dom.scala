@@ -88,9 +88,9 @@ object Dom {
     * which keeps every recursive consumer (block builder, attribute walk,
     * table scan) stack-safe on adversarial input — a crawl page of 100k
     * nested divs would otherwise throw StackOverflowError, an Error the
-    * job's NonFatal handler cannot eat, killing the task (and, after
-    * retries, the 10^12-row job). Also bounds the stray-end-tag scan,
-    * which is O(depth) per end token. */
+    * NonFatal handler in `Extractor.extract` cannot eat, killing the
+    * task (and, after retries, the 10^12-row job). Also bounds the
+    * stray-end-tag scan, which is O(depth) per end token. */
   val MaxDepth = 512
 
   /** Parse bytes → DOM in one streaming pass. Never throws on malformed

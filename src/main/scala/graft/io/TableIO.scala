@@ -52,6 +52,16 @@ trait TableIO {
   def recover(spark: SparkSession, table: String): Unit
 }
 
+object TableIO {
+
+  /** The implementation a main's `--io` value names. */
+  def named(name: String): TableIO = name match {
+    case "parquet" => ParquetTableIO
+    case "iceberg" => new IcebergTableIO()
+    case other     => sys.error(s"--io must be parquet|iceberg, got $other")
+  }
+}
+
 /** Plain-parquet implementation — what tests and the sandbox bench run.
   *
   * Non-transactional parquet needs explicit crash-safety machinery:

@@ -36,16 +36,8 @@ object AnnMain {
     val mode = opts.getOrElse("mode", sys.error("--mode required"))
     val vectors = opts.getOrElse("vectors", sys.error("--vectors required"))
     val index = opts.getOrElse("index", sys.error("--index required"))
-    val io: graft.io.TableIO = opts.getOrElse("io", "parquet") match {
-      case "parquet" => graft.io.ParquetTableIO
-      case "iceberg" => new graft.io.IcebergTableIO()
-      case other     => sys.error(s"--io must be parquet|iceberg, got $other")
-    }
-    val spark = SparkSession.builder()
-      .appName(s"graft-ann-$mode")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val io = graft.io.TableIO.named(opts.getOrElse("io", "parquet"))
+    val spark = graft.Sessions.get(s"graft-ann-$mode")
     run(spark, io, mode, vectors, index,
       queries = opts.get("queries"), out = opts.get("out"),
       k = opts.get("k").map(_.toInt).getOrElse(5),

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** spark-submit entry point for the extraction job (north rule: "launched
   * via spark-submit ... on a multi-executor cluster").
@@ -26,9 +26,11 @@ import org.apache.spark.sql.SparkSession
   * compaction and the metrics table are identical semantics on either
   * implementation (TableIOSpec pins that).
   *
-  * Master/deploy-mode come from spark-submit; the session here only sets
-  * job-level SQL conf. Re-running with the same --out resumes: committed
-  * urls are anti-joined away before any page is parsed.
+  * Master/deploy-mode come from spark-submit; the session here only adds
+  * [[Sessions.ExtractionSql]]. Without spark-submit (`sbt runMain`) the
+  * job runs on this host ([[Sessions.get]]). Re-running with the same
+  * --out resumes: committed urls are anti-joined away before any page is
+  * parsed.
   */
 object ExtractMain {
   def main(args: Array[String]): Unit = {
@@ -40,11 +42,7 @@ object ExtractMain {
     val salt = opts.get("salt").map(_.toInt).getOrElse(64)
     val runId = opts.getOrElse("run-id", s"run-${java.util.UUID.randomUUID()}")
     val retryFailed = opts.get("retry-failed").exists(_.toBoolean)
-    val io: graft.io.TableIO = opts.getOrElse("io", "parquet") match {
-      case "parquet" => graft.io.ParquetTableIO
-      case "iceberg" => new graft.io.IcebergTableIO()
-      case other     => sys.error(s"--io must be parquet|iceberg, got $other")
-    }
+    val io = graft.io.TableIO.named(opts.getOrElse("io", "parquet"))
     val scratch = opts.getOrElse("scratch", "")
     val collapse = opts.get("collapse-recrawls").exists(_.toBoolean)
     // a catalog-addressed io has no filesystem output root to default the
@@ -52,17 +50,7 @@ object ExtractMain {
     if (io.isInstanceOf[graft.io.IcebergTableIO] && scratch.isEmpty)
       sys.error("--scratch <shared fs dir> is required with --io iceberg")
 
-    val spark = SparkSession.builder()
-      .appName("graft-extract")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // extraction is CPU-dense per byte: size reduce partitions for
-      // several task waves per core, not for shuffle-block efficiency
-      // (parallelism-first coalescing would give exactly one wave)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (16 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Sessions.get("graft-extract", Sessions.ExtractionSql)
 
     val total = ExtractionJob.run(spark,
       JobConfig(pages, out, saltBuckets = salt, runId = runId,

@@ -33,7 +33,6 @@ final case class JobConfig(
     outPath: String,
     saltBuckets: Int = 64,
     runId: String = "run",
-    metricsEnabled: Boolean = true,
     retryFailed: Boolean = false,
     io: TableIO = ParquetTableIO,
     scratchPath: String = "",
@@ -189,15 +188,9 @@ object ExtractionJob {
   /** Run extraction; returns the extracted Dataset (not yet written). */
   def extractDataset(spark: SparkSession, work: DataFrame, cfg: JobConfig): Dataset[Extracted] = {
     import spark.implicits._
-    work.as[(String, Array[Byte])].mapPartitions { it =>
-      it.map { case (url, html) =>
-        try Extractor.extract(url, html)
-        catch {
-          case scala.util.control.NonFatal(_) =>
-            Extracted(url, "", Array.empty, Array.empty, failed = true)
-        }
-      }
-    }
+    work.as[(String, Array[Byte])].mapPartitions(_.map { case (url, html) =>
+      Extractor.extract(url, html)
+    })
   }
 
   /** One JSON line per counter row — the executor-side sidecar format. */
@@ -248,18 +241,8 @@ object ExtractionJob {
     }
     val confBc = spark.sparkContext.broadcast(confEntries)
 
-    val metricsOn = cfg.metricsEnabled
     val extracted: Dataset[Extracted] =
       work.as[(String, Array[Byte])].mapPartitions { it =>
-        if (!metricsOn) {
-          it.map { case (url, html) =>
-            try Extractor.extract(url, html)
-            catch {
-              case scala.util.control.NonFatal(_) =>
-                Extracted(url, "", Array.empty, Array.empty, failed = true)
-            }
-          }
-        } else {
         val t0 = System.nanoTime()
         var docs = 0L
         var bytes = 0L
@@ -268,13 +251,10 @@ object ExtractionJob {
         val pid = TaskContext.getPartitionId()
         val out = it.map { case (url, html) =>
           docs += 1
-          bytes += html.length
-          try Extractor.extract(url, html)
-          catch {
-            case scala.util.control.NonFatal(_) =>
-              failures += 1
-              Extracted(url, "", Array.empty, Array.empty, failed = true)
-          }
+          if (html != null) bytes += html.length
+          val e = Extractor.extract(url, html)
+          if (e.failed) failures += 1
+          e
         }
         // wrap so the counter sidecar flushes after the partition is consumed
         new Iterator[Extracted] {
@@ -308,7 +288,6 @@ object ExtractionJob {
               throw new java.io.IOException(
                 s"metrics sidecar rename $tmp -> $path failed")
           }
-        }
         }
       }
 

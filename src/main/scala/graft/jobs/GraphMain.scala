@@ -31,16 +31,8 @@ object GraphMain {
     val pages = opts.getOrElse("pages", sys.error("--pages required"))
     val out = opts.getOrElse("out", sys.error("--out required"))
     val iterations = opts.get("iterations").map(_.toInt).getOrElse(3)
-    val io: graft.io.TableIO = opts.getOrElse("io", "parquet") match {
-      case "parquet" => graft.io.ParquetTableIO
-      case "iceberg" => new graft.io.IcebergTableIO()
-      case other     => sys.error(s"--io must be parquet|iceberg, got $other")
-    }
-    val spark = SparkSession.builder()
-      .appName("graft-graph")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val io = graft.io.TableIO.named(opts.getOrElse("io", "parquet"))
+    val spark = graft.Sessions.get("graft-graph")
     run(spark, io, pages, out, iterations)
     spark.stop()
   }

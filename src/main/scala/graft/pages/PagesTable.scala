@@ -31,7 +31,19 @@ object PagesTable {
     case _         => 2000L
   }
 
-  def dirFor(sfName: String): String = s"/root/repo/data/pages_$Version/$sfName"
+  /** The committed layout expectation sidecars, under the checkout root. */
+  val SidecarDir = "src/test/resources/golden/sidecars"
+
+  /** The checkout root: the nearest ancestor of the working directory
+    * holding [[SidecarDir]], else the working directory. Pages tables live
+    * under its `data/`, where the DuckDB oracle reads them too. */
+  lazy val repoRoot: java.io.File = {
+    val cwd = new java.io.File(".").getCanonicalFile
+    Iterator.iterate(cwd)(_.getParentFile).takeWhile(_ != null)
+      .find(d => new java.io.File(d, SidecarDir).isDirectory).getOrElse(cwd)
+  }
+
+  def dirFor(sfName: String): String = s"$repoRoot/data/pages_$Version/$sfName"
   def spansDirFor(sfName: String): String = s"${dirFor(sfName)}_spans"
   def metaDirFor(sfName: String): String = s"${dirFor(sfName)}_meta"
 

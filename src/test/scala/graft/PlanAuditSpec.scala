@@ -1,29 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Physical-plan assertions for the scale-path queries: the properties
   * that make them survive a 100× scale-up are pinned here, not just
   * eyeballed in the PlanAudit dump — a regression that reintroduces a
   * cartesian product, drops a pushed filter, or unbounds the centroid
   * broadcast fails the suite. */
-class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
+class PlanAuditSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution

@@ -2,28 +2,15 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.pages.PagesTable
 
 /** The correctness dump on a named subset: exactly the named parquet
   * dirs and oracle keys, and an unknown name fails before any write. */
-class VerifySpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
+class VerifySpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
   private val names = Seq("q1_agg", "q2_join")
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("named queries write exactly their parquet dirs and oracle keys") {
     val out = Files.createTempDirectory("verify").toString
@@ -42,5 +29,11 @@ class VerifySpec extends AnyFunSuite with BeforeAndAfterAll {
       Verify.dump(spark, sfDir, out.toString, Seq("q1_agg", "no_such_query"))
     }
     assert(!out.exists())
+  }
+
+  test("pages tables live under the checkout root that holds the golden sidecars") {
+    val data = new java.io.File(PagesTable.dirFor("sf0.01")).getParentFile.getParentFile
+    assert(data.getName == "data")
+    assert(new java.io.File(data.getParentFile, "src/test/resources/golden/sidecars").isDirectory)
   }
 }

@@ -1,27 +1,13 @@
 package graft.graph
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Web-graph operator semantics against plain-Scala reference
   * implementations on hand-checkable graphs, plus the two properties
   * that make the ops production-grade: bit-identical results under any
   * partitioning (integer PageRank) and cache self-release. */
-class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class GraphOpsSpec extends AnyFunSuite with SparkSuite {
   private def edgeDf(edges: Seq[(String, String)]) = {
     val s = spark
     import s.implicits._

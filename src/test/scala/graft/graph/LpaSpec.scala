@@ -1,27 +1,13 @@
 package graft.graph
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Label-propagation community semantics (g12) against a plain-Scala
   * replay of the deterministic rule: synchronous rounds, each host
   * adopts the most frequent label among its distinct cross-host
   * neighbours, min-label ties, isolated hosts keep their own label. */
-class LpaSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class LpaSpec extends AnyFunSuite with SparkSuite {
   private def url(host: String, p: Int) = s"https://$host/p$p"
 
   /** Page-level directed edges; hosts are single letters + ".org". */

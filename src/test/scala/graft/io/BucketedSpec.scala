@@ -1,32 +1,23 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** The bucketed committed table is a pure PLAN optimization: the ingest
   * anti-join over it must return exactly the plain-parquet result, with
   * the committed side's exchange gone (moved to write time). */
-class BucketedSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
+class BucketedSpec extends AnyFunSuite with SparkSuite {
   private var tmp: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     tmp = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) {
-      spark.sql("DROP TABLE IF EXISTS graft_committed_bucketed")
-      spark.stop()
-    }
+    if (spark != null) spark.sql("DROP TABLE IF EXISTS graft_committed_bucketed")
+    super.afterAll()
     if (tmp != null)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }

@@ -3,9 +3,9 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.jobs.{ExtractionJob, JobConfig}
 import graft.pages.PagesTable
+import graft.SparkSuite
 
 /** A second, deliberately DIFFERENT TableIO implementation: every
   * partition value lives in its own sibling directory
@@ -99,21 +99,8 @@ object SplitDirTableIO extends TableIO {
   def recover(spark: SparkSession, table: String): Unit = ()
 }
 
-class TableIOSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
+class TableIOSpec extends AnyFunSuite with SparkSuite {
   private val tmp = java.nio.file.Files.createTempDirectory("graftio").toString
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** The full resume + retry lifecycle, parameterised by TableIO impl:
     * phase-1 partial run → resumed full run (anti-join extracts exactly

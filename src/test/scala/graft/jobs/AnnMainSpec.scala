@@ -1,27 +1,14 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** ANN index lifecycle through the spark-submit entry: build → append →
   * query over the storage seam equals the one-shot library calls, and
   * each mode validates its required arguments. */
-class AnnMainSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
+class AnnMainSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("build/append/query modes compose to the library result") {
     val tmp = java.nio.file.Files.createTempDirectory("annmain").toString

@@ -1,25 +1,12 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.pages.PagesTable
+import graft.SparkSuite
 
-class CompactJobSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
+class CompactJobSpec extends AnyFunSuite with SparkSuite {
   private val tmp = java.nio.file.Files.createTempDirectory("graftcompact").toString
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("compaction: fewer files, identical rows, url-clustered footer stats") {
     // simulate many small ingest commits: 20 single-partition appends

@@ -1,27 +1,13 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.pages.PagesTable
 import graft.text.TextOps
+import graft.SparkSuite
 
-class CorpusBuildJobSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
+class CorpusBuildJobSpec extends AnyFunSuite with SparkSuite {
   private val tmp = java.nio.file.Files.createTempDirectory("graftcorpus").toString
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("corpus build: pages -> (split, tier)-partitioned corpus, reproducible membership") {
     val pagesPath = s"$tmp/pages"

@@ -1,25 +1,40 @@
 package graft.jobs
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, lit, when}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.pages.PagesTable
+import graft.SparkSuite
 
-class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
+object ExtractionJobSpec {
+
+  /** Writes n generated pages to `path` with the first url's html null;
+    * returns that url. */
+  def writeNullHtmlPages(spark: SparkSession, path: String, n: Int): String = {
+    val pages = PagesTable.generate(spark, seed = 21L, n = n, partitions = 2).toDF()
+    val broken = pages.select("url").orderBy("url").head().getString(0)
+    pages.withColumn("html",
+        when(col("url") === broken, lit(null).cast("binary")).otherwise(col("html")))
+      .write.parquet(path)
+    broken
+  }
+}
+
+class ExtractionJobSpec extends AnyFunSuite with SparkSuite {
   private val tmp = java.nio.file.Files.createTempDirectory("graftjob").toString
 
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  test("a null-html page commits as one failed row and the job completes") {
+    val s = spark
+    import s.implicits._
+    val cfg = JobConfig(s"$tmp/nullhtml/pages", s"$tmp/nullhtml/out", runId = "n1")
+    val broken = ExtractionJobSpec.writeNullHtmlPages(spark, cfg.pagesPath, 20)
+    assert(ExtractionJob.run(spark, cfg) == 19, "successes exclude the failed page")
+    val out = spark.read.parquet(cfg.extractedTable)
+    assert(out.count() == 20 && out.select("url").distinct().count() == 20,
+      "every url committed exactly once")
+    assert(out.filter(col("failed").cast("boolean")).select("url").as[String].collect().toSeq == Seq(broken))
+    assert(ExtractionJob.readMetrics(spark, cfg).collect().map(_.extraction_failures).sum == 1)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("extraction job: full run, byte-identical text, resume anti-join, metrics reconcile") {
     val pagesPath = s"$tmp/pages"

@@ -1,26 +1,12 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** End-to-end web-graph build through the storage seam: the four output
   * tables exist, reconcile with each other, and the pagerank table
   * replays bit-identically from the written edges. */
-class GraphMainSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class GraphMainSpec extends AnyFunSuite with SparkSuite {
   test("GraphMain.run writes edges/indegree/hostgraph/pagerank that reconcile") {
     val pagesPath = graft.pages.PagesTable.ensure(spark, "sf0.001")
     val out = java.nio.file.Files.createTempDirectory("graphmain").toString

@@ -1,24 +1,11 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.pages.PagesTable
+import graft.SparkSuite
 
-class StreamingExtractionSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
+class StreamingExtractionSpec extends AnyFunSuite with SparkSuite {
   private val tmp = java.nio.file.Files.createTempDirectory("graftstream").toString
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("streaming surface: file-source -> extractor -> checkpointed sink") {
     val pagesDir = s"$tmp/pages"
@@ -39,6 +26,18 @@ class StreamingExtractionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val joined = out.withColumnRenamed("text", "got")
       .join(spark.read.parquet(pagesDir).select("url", "text"), "url")
     assert(joined.filter(col("got") =!= col("text")).count() == 0)
+  }
+
+  test("a null-html page streams out as one failed row, not a terminated query") {
+    val s = spark
+    import s.implicits._
+    val pagesDir = s"$tmp/pages_nullhtml"
+    val broken = ExtractionJobSpec.writeNullHtmlPages(spark, pagesDir, 20)
+    val q = StreamingExtraction.start(spark, pagesDir, s"$tmp/out_nullhtml", pagesDir)
+    q.awaitTermination(120000)
+    val out = spark.read.parquet(s"$tmp/out_nullhtml/extracted")
+    assert(out.count() == 20)
+    assert(out.filter($"failed").select("url").as[String].collect().toSeq == Seq(broken))
   }
 
   test("watermarked windowed metrics and mapGroupsWithState host progress") {

@@ -1,27 +1,13 @@
 package graft.mm
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** The codec seam: a real decoder is an INJECTION, not an edit — the
   * driver oracle (m1–m3) hash-checks the plumbing through the default
   * [[MultiModal.StubCodec]]; this spec proves the same plumbing carries a
   * custom codec with its per-partition open/close lifecycle. */
-class MultiModalSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class MultiModalSpec extends AnyFunSuite with SparkSuite {
   private def media = {
     val s = spark
     import s.implicits._

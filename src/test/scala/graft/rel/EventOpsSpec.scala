@@ -2,28 +2,14 @@ package graft.rel
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Known-answer coverage for the event-stream operators (sessionize /
   * as-of join / HLL registers); the driver's DuckDB oracle re-checks the
   * same ops at sf scale (q4/q5/q6). */
-class EventOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class EventOpsSpec extends AnyFunSuite with SparkSuite {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   private def events(rows: (Long, String, Long)*) = {

@@ -1,31 +1,24 @@
 package graft.sim
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.io.ParquetTableIO
+import graft.SparkSuite
 
 /** Persisted IVF index (build-once / query-many): equivalence with the
   * inline index, partition pruning at query time, rebuild semantics. */
-class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
+class AnnIndexSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
   private var root: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     root = java.nio.file.Files.createTempDirectory("annindex").toString
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 

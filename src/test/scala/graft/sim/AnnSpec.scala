@@ -1,26 +1,13 @@
 package graft.sim
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Similarity-search correctness: the relational cosine top-k against an
   * in-memory brute-force oracle, and the IVF approximation's recall
   * against the exact ranking (deterministic input → stable recall). */
-class AnnSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
+class AnnSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def loadVecs(): Map[Long, Array[Double]] =
     spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -1,23 +1,9 @@
 package graft.sim
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
-class ComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class ComponentsSpec extends AnyFunSuite with SparkSuite {
   private def unionFind(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }

@@ -1,33 +1,26 @@
 package graft.sim
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.io.ParquetTableIO
+import graft.SparkSuite
 
 /** Persisted PQ model (build-once / query-many compressed index):
   * equivalence with the inline IVF-PQ chain, frozen-model append,
   * partition pruning, and the compressed persisted layout. */
-class PqIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
+class PqIndexSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
   private var root: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     root = java.nio.file.Files.createTempDirectory("pqindex").toString
     PqIndex.build(spark, emb, ParquetTableIO, root)
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 

@@ -1,27 +1,13 @@
 package graft.sim
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** SemDeDup (within-k-means-cluster semantic prune): duplicate collapse,
   * keeper choice, output contract, partitioning determinism, and the
   * e15 threshold margin at the SF the e4 margin spec does not cover. */
-class SemDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class SemDedupSpec extends AnyFunSuite with SparkSuite {
   /** Deterministic mixture: `nCenters` well-separated unit centres, with
     * ids `dupPairs` planted as near-copies of the id one below them. */
   private def clustered(n: Int, nCenters: Int, dupOf: Map[Long, Long]) = {

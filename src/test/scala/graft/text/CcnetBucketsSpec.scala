@@ -1,27 +1,13 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Bucket-rule semantics of [[TextOps.ccnetBuckets]] on crafted score
   * tables: exact thirds split 3/3/3, tie groups never straddle a cut,
   * degenerate one-value languages land wholly in middle, and languages
   * bucket independently. */
-class CcnetBucketsSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class CcnetBucketsSpec extends AnyFunSuite with SparkSuite {
   private def run(rows: Seq[(String, Long, String)]): Map[String, String] = {
     val s = spark
     import s.implicits._

@@ -1,29 +1,15 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Hand-checkable semantics for the round-4 curation additions:
   * quality-aware keeper election (t37), shingle-containment pairs (t38)
   * and the corpus vocabulary card (d3). The driver's DuckDB oracle
   * re-derives the same ops at sf scale; these pin the rules with known
   * answers. */
-class CurationOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class CurationOpsSpec extends AnyFunSuite with SparkSuite {
   private def docs(rows: (Long, String)*) = {
     val s = spark
     import s.implicits._

@@ -1,28 +1,14 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Language-ID accuracy. The driver's `documents.lang` column is a label
   * uncorrelated with its (English-ish synthetic) text, so ground truth
   * comes from the generated pages table, whose content vocabulary IS
   * language-dependent (PageGen.vocabOf). */
-class LangIdSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class LangIdSpec extends AnyFunSuite with SparkSuite {
   test("stopword profiles recover the generator's language on extracted text") {
     val s = spark
     import s.implicits._

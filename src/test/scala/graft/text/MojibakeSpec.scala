@@ -1,27 +1,13 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Mojibake repair on crafted strings: every rule fires, clean text is
   * untouched, mixed sequences repair in one pass, and the chain is a
   * pure projection (no exchange in the plan). */
-class MojibakeSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class MojibakeSpec extends AnyFunSuite with SparkSuite {
   private def repair(ss: String*): Seq[String] = {
     val s = spark
     import s.implicits._

@@ -1,23 +1,11 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Unicode-range script identification on unambiguous snippets per
   * script, plus tie/empty behaviour. */
-class ScriptIdSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class ScriptIdSpec extends AnyFunSuite with SparkSuite {
   test("each script's snippet classifies to its script; empty text is unknown") {
     val s = spark
     import s.implicits._

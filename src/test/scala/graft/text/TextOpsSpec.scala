@@ -1,27 +1,13 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Local unit coverage for the dedup/minhash/simhash family on a
   * hand-checkable corpus (the driver's DuckDB oracle covers the same ops
   * at sf scale; these pin the semantics with known answers). */
-class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class TextOpsSpec extends AnyFunSuite with SparkSuite {
   private def docs(rows: (Long, String)*) = {
     val s = spark
     import s.implicits._

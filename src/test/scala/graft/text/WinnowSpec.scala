@@ -1,10 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Winnowing rewrite guard: the per-row higher-order-function projection
   * must (a) agree row-for-row with the definitional explode+window
@@ -12,20 +12,7 @@ import org.scalatest.BeforeAndAfterAll
   * winnowing guarantee (shared substring of length ≥ w+k-1 ⇒ shared
   * fingerprint), and (c) stay a ZERO-exchange plan with the md5 gram pass
   * evaluated once per document. */
-class WinnowSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class WinnowSpec extends AnyFunSuite with SparkSuite {
   /** The definitional formulation: one row per char position, frame-window
     * min over the per-doc position order, global distinct. Kept here as
     * the semantic reference the projection must match. */

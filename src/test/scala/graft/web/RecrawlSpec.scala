@@ -1,26 +1,12 @@
 package graft.web
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Recrawl collapse semantics on crafted snapshot histories: canon
   * collapsing across URL spellings, latest-timestamp wins, the
   * greatest-url tie-break, and single-snapshot pass-through. */
-class RecrawlSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class RecrawlSpec extends AnyFunSuite with SparkSuite {
   private def collapse(rows: (String, Long)*): Map[String, (Long, Long, String)] = {
     val s = spark
     import s.implicits._

@@ -1,26 +1,12 @@
 package graft.web
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Robots precedence on crafted rules: longest match wins, allow wins a
   * length tie, rule-less hosts pass, and the filter form drops exactly
   * the disallowed urls. */
-class RobotsSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class RobotsSpec extends AnyFunSuite with SparkSuite {
   private def run(urls: Seq[String], rules: Seq[(String, String, Boolean)])
       : Map[String, (Boolean, String)] = {
     val s = spark

@@ -1,27 +1,13 @@
 package graft.web
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Template fingerprint semantics on crafted pages: the hash keys on the
   * opening-tag SEQUENCE (content-blind, order-sensitive), clusters are
   * per host, and closing tags / doctype / comments never enter the key. */
-class TemplatesSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class TemplatesSpec extends AnyFunSuite with SparkSuite {
   private def clusters(pages: Seq[(String, String)]): Map[String, (String, Long)] = {
     val s = spark
     import s.implicits._

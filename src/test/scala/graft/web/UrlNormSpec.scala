@@ -1,25 +1,11 @@
 package graft.web
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Canonicalization rules on crafted urls — one case per rule plus the
   * pass-throughs the rules must NOT touch. */
-class UrlNormSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class UrlNormSpec extends AnyFunSuite with SparkSuite {
   private def canon(urls: String*): Seq[String] = {
     val s = spark
     import s.implicits._

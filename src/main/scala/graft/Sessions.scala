@@ -10,9 +10,12 @@ import org.apache.spark.sql.SparkSession
   * logging. */
 object Sessions {
 
-  /** `ExtractMain`'s SQL conf, which `Bench` also runs under. Extraction is
-    * CPU-dense per byte, so reduce partitions are sized for several task
-    * waves per core (parallelism-first coalescing would give one wave). */
+  /** `ExtractMain`'s SQL conf, which `Bench` also runs under: AQE with
+    * skew-join splitting and size-first coalescing to 16 MiB partitions.
+    * The extraction exchange does not coalesce: it has an explicit count
+    * ([[graft.util.Spread]]), and the advisory size sets only that count's
+    * byte term. Coalesced, a shuffle under 16 MiB (2,000 pages) would run
+    * as one task on one core. */
   val ExtractionSql: Map[String, String] = Map(
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",

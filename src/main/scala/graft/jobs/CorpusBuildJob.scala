@@ -19,7 +19,7 @@ import graft.text.TextOps
   * partition layout.
   *
   * Scale shape: extraction is the [[ExtractionJob]] (resume anti-join,
-  * no payload shuffle unless salted); tier rules are narrow equi-joins
+  * cost-sized url-hash payload shuffle); tier rules are narrow equi-joins
   * ([[TextOps.tierAssign]]); mix + split are stateless projections; the
   * single wide-payload move is the final join/write, hinted
   * `shuffle_hash` on the narrow side like [[TierJob]]. All table IO goes

@@ -10,7 +10,9 @@ import graft.Sessions
   *     layoutparserspark.jar \
   *     --pages  <path or catalog table of (url, warc_ts, html, text, lang)> \
   *     --out    <output root: writes <out>/extracted + <out>/metrics> \
-  *     --salt   64        # salt buckets; 0 = no payload shuffle \
+  *     --shuffle false    # no payload shuffle: extract in the scan's
+  *                        # byte-balanced splits (default true: hash
+  *                        # url into cost-sized partitions) \
   *     --run-id <id>      # lineage tag in the metrics table \
   *     --retry-failed true  # re-extract rows committed with failed=true \
   *     --collapse-recrawls true  # multi-crawl input: keep only the
@@ -39,7 +41,7 @@ object ExtractMain {
     }.toMap
     val pages = opts.getOrElse("pages", sys.error("--pages required"))
     val out = opts.getOrElse("out", sys.error("--out required"))
-    val salt = opts.get("salt").map(_.toInt).getOrElse(64)
+    val shuffle = opts.get("shuffle").forall(_.toBoolean)
     val runId = opts.getOrElse("run-id", s"run-${java.util.UUID.randomUUID()}")
     val retryFailed = opts.get("retry-failed").exists(_.toBoolean)
     val io = graft.io.TableIO.named(opts.getOrElse("io", "parquet"))
@@ -53,7 +55,7 @@ object ExtractMain {
     val spark = Sessions.get("graft-extract", Sessions.ExtractionSql)
 
     val total = ExtractionJob.run(spark,
-      JobConfig(pages, out, saltBuckets = salt, runId = runId,
+      JobConfig(pages, out, shuffle = shuffle, runId = runId,
         retryFailed = retryFailed, io = io, scratchPath = scratch,
         collapseRecrawls = collapse))
     println(s"""{"run_id":"$runId","committed_docs":$total}""")

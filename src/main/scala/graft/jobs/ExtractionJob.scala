@@ -31,7 +31,7 @@ final case class PartitionMetrics(
 final case class JobConfig(
     pagesPath: String,
     outPath: String,
-    saltBuckets: Int = 64,
+    shuffle: Boolean = true,
     runId: String = "run",
     retryFailed: Boolean = false,
     io: TableIO = ParquetTableIO,
@@ -46,16 +46,19 @@ final case class JobConfig(
   *
   *   scan pages [url, html]  (columns pruned at the parquet reader)
   *   → LEFT ANTI join committed urls          (resume from checkpoint)
-  *   → salted repartition on (html-size bucket, salt)   (skew spreading)
+  *   → repartition(n, url)    n = max(4 × cores, scanned bytes / advisory)
   *   → mapPartitions extractPage              (the per-page operator DAG)
   *   → append extracted + append metrics
   *
   * Scale notes: the anti-join's right side is url-only (Catalyst prunes),
   * so at 10^12 rows it is a shuffled SMJ unless the committed set is small
-  * enough for AQE to broadcast. The size bucket is log2(len(html)) —
-  * pages of similar cost co-hash, and the salt spreads each bucket over
-  * the full partition space so a handful of 100 MB pages cannot pile onto
-  * one task. AQE stays on for runtime coalescing.
+  * enough for AQE to broadcast. The payload exchange has an explicit count
+  * ([[graft.util.Spread]]), so AQE does not coalesce it: a small input gets
+  * about four task waves per core, a large one AQE's advisory partition
+  * size, and hashing the unique url fills every partition. The count comes
+  * from the pages scan's listed file bytes, not from the (resumed,
+  * smaller) remainder, so a resume keeps the full run's task size; the
+  * empty tasks a sparse remainder leaves write no metrics row.
   *
   * All table reads/writes go through `cfg.io` ([[graft.io.TableIO]]);
   * only the pages INPUT path and the metric-sidecar scratch dir are raw
@@ -151,13 +154,14 @@ object ExtractionJob {
           "(re-running migrateLayout finishes the rename)")
   }
 
-  /** The work set: pages minus committed (resume anti-join), salted.
+  /** The work set: pages minus committed (resume anti-join), spread over
+    * [[graft.util.Spread.partitions]] tasks by url hash.
     *
-    * With `saltBuckets <= 0` the explicit shuffle is skipped: the parquet
+    * With `shuffle = false` the explicit shuffle is skipped: the parquet
     * scan's byte-sized splits are already cost-balanced when per-page cost
     * is proportional to html bytes, and skipping the repartition avoids
     * shuffling the full html payload (at 100 TB that shuffle IS the job).
-    * Keep salting on when the input layout clusters expensive pages
+    * Keep the shuffle on when the input layout clusters expensive pages
     * (e.g. crawl-host-ordered files) or when resuming leaves a sparse,
     * skewed remainder after the anti-join. */
   def planWorkSet(spark: SparkSession, cfg: JobConfig): DataFrame = {
@@ -174,15 +178,7 @@ object ExtractionJob {
       case Some(committed) => pages.join(committed, Seq("url"), "left_anti")
       case None            => pages
     }
-    if (cfg.saltBuckets <= 0) remaining
-    else
-      // explicit skew spreading: bucket by log2 html size, salt by url hash
-      remaining
-        .withColumn("size_bucket",
-          ceil(log2(greatest(length(col("html")), lit(1)))).cast("int"))
-        .withColumn("salt", pmod(hash(col("url")), lit(cfg.saltBuckets)))
-        .repartition(col("size_bucket"), col("salt"))
-        .select("url", "html")
+    if (cfg.shuffle) graft.util.Spread.byKey(remaining, "url", raw) else remaining
   }
 
   /** Run extraction; returns the extracted Dataset (not yet written). */
@@ -202,11 +198,12 @@ object ExtractionJob {
 
   /** Full job: extract → append extracted + append metrics rows.
     *
-    * Lineage is gathered inside the same pass (one counter row per task,
-    * flushed after the partition is fully consumed) and written BY THE
-    * EXECUTOR to a per-task sidecar file under `metrics_raw/<runId>/` of
-    * the scratch dir, through the path's own Hadoop FileSystem (hdfs/s3/
-    * local all work; the Hadoop conf travels as a broadcast entry map).
+    * Lineage is gathered inside the same pass (one counter row per task
+    * that extracted a page, flushed after the partition is fully
+    * consumed) and written BY THE EXECUTOR to a per-task sidecar file
+    * under `metrics_raw/<runId>/` of the scratch dir, through the path's
+    * own Hadoop FileSystem (hdfs/s3/local all work; the Hadoop conf
+    * travels as a broadcast entry map).
     * The driver never accumulates per-task rows, so 10⁷–10⁸ tasks at the
     * 10^12-row scale cost the driver nothing; after the write action the
     * sidecars are compacted into the `metrics` table in one small job and
@@ -265,7 +262,9 @@ object ExtractionJob {
           }
           def next(): Extracted = out.next()
           private var flushed = false
-          private def flush(): Unit = if (!flushed) {
+          // an empty task (the cost-sized count hashes a small or resumed
+          // input into some empty partitions) leaves no metrics row
+          private def flush(): Unit = if (!flushed && docs > 0) {
             flushed = true
             val wallMs = (System.nanoTime() - t0) / 1000000
             val m = PartitionMetrics(runId, pid, docs, bytes, failures, wallMs)

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Spark-side contract is real and what matters at 100 TB: schema shape,
   * per-partition batched iteration (one decoder instance opened per task,
   * amortised over the partition — the mapInPandas batch pattern expressed
-  * as typed mapPartitions), size-bucketed repartition before decode, and
+  * as typed mapPartitions), cost-sized repartition before decode, and
   * column pruning so the binary column is only read where needed.
   */
 object MultiModal {
@@ -116,20 +116,15 @@ object MultiModal {
     MediaFeatures(id, bins.map(b => (b.toDouble / n).toFloat))
   }
 
-  /** Decode a media table (id + binary) with skew-aware partitioning: the
-    * binary column is the cost driver, so repartition on a log2 size
-    * bucket + salt before the per-partition decode loop. */
+  /** Decode a media table (id + binary) spread over cost-sized partitions:
+    * the binary column is the cost driver, so the rows hash on the id into
+    * [[graft.util.Spread.partitions]] tasks before the per-partition decode
+    * loop. */
   def decode(spark: SparkSession, media: DataFrame,
              idCol: String = "media_id", binCol: String = "media",
-             saltBuckets: Int = 64,
              codec: MediaCodec = StubCodec): Dataset[MediaMeta] = {
     import spark.implicits._
-    media.select(col(idCol), col(binCol))
-      .withColumn("size_bucket",
-        ceil(log2(greatest(length(col(binCol)), lit(1)))).cast("int"))
-      .withColumn("salt", pmod(hash(col(idCol)), lit(saltBuckets)))
-      .repartition(col("size_bucket"), col("salt"))
-      .select(col(idCol), col(binCol))
+    graft.util.Spread.byKey(media.select(col(idCol), col(binCol)), idCol, media)
       .as[(String, Array[Byte])]
       .mapPartitions(it => codecIterator(codec, it, (c, id, b) => c.decode(id, b)))
   }

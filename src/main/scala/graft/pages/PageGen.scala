@@ -60,7 +60,7 @@ final case class GenPage(row: PageRow, meta: PageMeta, spans: Vector[SpanGolden]
   * (styled px, else the heading-level default) over every emitted block.
   *
   * The html-length distribution is deliberately heavy-tailed (~2% of pages
-  * are 10-40× larger) so skew handling (salted repartition, AQE) is
+  * are 10-40× larger) so skew handling (cost-sized repartition, AQE) is
   * exercised at bench scale.
   */
 object PageGen {

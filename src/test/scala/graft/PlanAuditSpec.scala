@@ -325,7 +325,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSuite {
     import graft.jobs.{ExtractionJob, JobConfig}
     val pagesPath = graft.pages.PagesTable.ensure(spark, "sf0.001")
     val p = ExtractionJob.planWorkSet(
-        spark, JobConfig(pagesPath, "/tmp/pa_out", saltBuckets = 0))
+        spark, JobConfig(pagesPath, "/tmp/pa_out", shuffle = false))
       .queryExecution.executedPlan.toString
     assert(p.contains("ReadSchema: struct<url:string,html:binary>"))
     assert(!p.toLowerCase.contains("exchange"))

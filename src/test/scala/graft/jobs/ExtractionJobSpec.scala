@@ -206,13 +206,81 @@ class ExtractionJobSpec extends AnyFunSuite with SparkSuite {
     assert(plan.count() == 0, "recursive probe must find nested parquet and resume")
   }
 
-  test("work-set plan pushes column pruning to the scan and salts partitions") {
+  test("work-set plan prunes the scan and hashes url into sized partitions") {
     val pagesPath = s"$tmp/pages"
-    val plan = ExtractionJob.planWorkSet(spark, JobConfig(pagesPath, s"$tmp/out2"))
-      .queryExecution.executedPlan.toString
+    val work = ExtractionJob.planWorkSet(spark, JobConfig(pagesPath, s"$tmp/out2"))
+    val plan = work.queryExecution.executedPlan.toString
     assert(plan.contains("ReadSchema: struct<url:string,html:binary>"),
       s"scan must read only url+html:\n$plan")
-    assert(plan.toLowerCase.contains("exchange"), "salted repartition present")
+    val n = """hashpartitioning\(url#\d+, (\d+)\)""".r.findFirstMatchIn(plan)
+      .map(_.group(1).toInt)
+    assert(n.exists(_ >= 4 * spark.sparkContext.defaultParallelism),
+      s"payload exchange must hash url into >= 4 x cores partitions:\n$plan")
+    assert(!plan.contains("size_bucket") && work.columns.toSeq == Seq("url", "html"))
+  }
+
+  /** Runs `body` with `conf` set on the suite session, then restores it. */
+  private def withConf[T](conf: Map[String, String])(body: => T): T = {
+    val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  test("under ExtractMain's conf a small job extracts on every core") {
+    val base = s"$tmp/parallel"
+    PagesTable.generate(spark, seed = 5L, n = 300, partitions = 4).write.parquet(s"$base/pages")
+    val cfg = JobConfig(s"$base/pages", s"$base/out", runId = "par")
+    withConf(graft.Sessions.ExtractionSql) {
+      assert(ExtractionJob.run(spark, cfg) == 300)
+    }
+    val busy = ExtractionJob.readMetrics(spark, cfg).collect().count(_.docs_parsed > 0)
+    assert(busy >= spark.sparkContext.defaultParallelism,
+      s"$busy task(s) extracted pages; AQE must not coalesce the payload exchange")
+  }
+
+  test("past the advisory size the partition count follows the scanned bytes") {
+    val pagesPath = s"$tmp/bytes/pages"
+    PagesTable.generate(spark, seed = 4L, n = 100, partitions = 2).write.parquet(pagesPath)
+    val fileBytes = new java.io.File(pagesPath).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    val work = withConf(Map("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4096")) {
+      ExtractionJob.planWorkSet(spark, JobConfig(pagesPath, s"$tmp/bytes/out"))
+    }
+    assert(fileBytes > 4096 * 16 && work.rdd.getNumPartitions == (fileBytes + 4095) / 4096)
+  }
+
+  test("extracted rows are identical with and without the payload shuffle") {
+    val base = s"$tmp/invariance"
+    PagesTable.generate(spark, seed = 9L, n = 120, partitions = 3).write.parquet(s"$base/pages")
+    def rows(shuffle: Boolean) = {
+      val cfg = JobConfig(s"$base/pages", s"$base/out-$shuffle", shuffle = shuffle)
+      ExtractionJob.run(spark, cfg)
+      spark.read.parquet(cfg.extractedTable)
+        .select("url", "text", "spans", "blocks", "failed").orderBy("url")
+        .collect().toSeq
+    }
+    val shuffled = rows(shuffle = true)
+    assert(shuffled.length == 120)
+    assert(shuffled == rows(shuffle = false))
+  }
+
+  test("empty tasks write no metrics row") {
+    val base = s"$tmp/sparse"
+    PagesTable.generate(spark, seed = 3L, n = 10, partitions = 2).write.parquet(s"$base/pages")
+    val cfg = JobConfig(s"$base/pages", s"$base/out", runId = "s1")
+    assert(ExtractionJob.planWorkSet(spark, cfg).rdd.getNumPartitions >= 16,
+      "10 pages hash into at least 16 partitions, so some are empty")
+    assert(ExtractionJob.run(spark, cfg) == 10)
+    val m = ExtractionJob.readMetrics(spark, cfg).collect()
+    assert(m.nonEmpty && m.forall(_.docs_parsed > 0), m.mkString("\n"))
+    assert(m.map(_.docs_parsed).sum == 10 && m.map(_.extraction_failures).sum == 0)
+    val wantBytes = spark.read.parquet(cfg.pagesPath)
+      .selectExpr("sum(octet_length(html))").head.getLong(0)
+    assert(m.map(_.bytes_tokenized).sum == wantBytes)
   }
 
   test("collapseRecrawls: latest snapshot per canonical url wins; resume still empty") {
@@ -245,13 +313,13 @@ class ExtractionJobSpec extends AnyFunSuite with SparkSuite {
       "recrawl-collapsed resume must re-extract nothing")
   }
 
-  test("saltBuckets=0 plans a shuffle-free scan (byte-balanced splits)") {
+  test("shuffle=false plans a shuffle-free scan (byte-balanced splits)") {
     val pagesPath = s"$tmp/pages"
     val plan = ExtractionJob.planWorkSet(
-        spark, JobConfig(pagesPath, s"$tmp/out3", saltBuckets = 0))
+        spark, JobConfig(pagesPath, s"$tmp/out3", shuffle = false))
       .queryExecution.executedPlan.toString
     assert(plan.contains("ReadSchema: struct<url:string,html:binary>"))
     assert(!plan.toLowerCase.contains("exchange"),
-      s"no-salt plan must not shuffle the html payload:\n$plan")
+      s"a no-shuffle plan must not shuffle the html payload:\n$plan")
   }
 }

@@ -28,6 +28,14 @@ class MultiModalSpec extends AnyFunSuite with SparkSuite {
       got("c").format == "html")
   }
 
+  test("a media table that cannot size itself decodes over 4 tasks per core") {
+    // an RDD-built frame's plan stats carry no size; the byte term must
+    // not read that as unbounded input
+    val unsized = spark.createDataFrame(media.rdd, media.schema)
+    assert(graft.util.Spread.partitions(unsized) == 4 * spark.sparkContext.defaultParallelism)
+    assert(MultiModal.decode(spark, unsized).count() == 3)
+  }
+
   private def countingCodec = new MultiModal.MediaCodec {
     // executor-side counters: visible back in local[*] mode because
     // tasks share the JVM — good enough to assert the lifecycle fired

@@ -14,53 +14,75 @@ package graft.geom
   * The trailing `ceil` absorbs most float noise between scipy and this
   * re-derivation.
   *
-  * Degenerate inputs (n < 2 or zero variance) crash scipy in the reference;
-  * here they deterministically return ceil(max(data)).
+  * Degenerate inputs (n < 2, a NaN/infinite value or zero variance) crash
+  * scipy in the reference; here they deterministically return
+  * ceil(max(data)).
+  *
+  * Every extracted page makes five mode searches: the x/y word thresholds
+  * and one x_para in each of the three pinp post-passes. They read only
+  * the curve's first argmax, so [[modeIndex]] finds it by branch and bound
+  * instead of scoring all 1000 grid points; see there for why the index is
+  * the full scan's, bit for bit. [[kdePara]] needs the whole curve and
+  * still scores every point.
   */
 object Kde {
   private val GRID = 1000
-
-  private def variance(data: Array[Double]): Double = {
-    val n = data.length
-    var sum = 0.0
-    var i = 0
-    while (i < n) { sum += data(i); i += 1 }
-    val mean = sum / n
-    var acc = 0.0
-    i = 0
-    while (i < n) { val d = data(i) - mean; acc += d * d; i += 1 }
-    acc / (n - 1)
-  }
+  /** The mode search splits the grid into Blocks coarse blocks of Coarse
+    * points, and each coarse block into Blocks fine blocks of Fine points. */
+  private val Blocks = 10
+  private val Coarse = GRID / Blocks
+  private val Fine = Coarse / Blocks
 
   /** exp(-e) underflows to exactly +0.0 for e ≥ 746 (the IEEE-754 double
     * cutoff is ≈745.13; 746 is safely past it), and `acc += +0.0` leaves a
     * non-negative accumulator bit-identical — so skipping those terms
-    * changes NOTHING in the result while eliminating the exp() call.
-    * Pays off when the sample range spans many bandwidths (wide-spread
-    * detector boxes); measured neutral on the narrow-range synthetic
-    * pages (A/B: 825 vs 822 pages/s single-thread). densityCurve remains
-    * the hottest extraction frame (11.5% of bench CPU samples) — its
-    * O(grid × n) shape is the reference's exact semantics, so further
-    * reduction would change results. */
+    * changes NOTHING in the result while eliminating the exp() call. */
   private val UnderflowCut = 746.0
 
-  /** Density curve on the linspace grid. The grid itself is affine in the
-    * index (x_g = lo + g·step), so only the densities are materialised —
-    * this function and its callers are the extraction hot path (2-3 KDE
-    * estimates per page at 1000 grid points × n samples each) and must
-    * stay free of boxing. */
-  private def densityCurve(data: Array[Double], factor: Double): Array[Double] = {
+  /** The linspace of a non-degenerate sample: x_g = lo + g·step. */
+  private final class Linspace(val lo: Double, val step: Double, val variance: Double) {
+    def x(g: Int): Double = lo + g * step
+  }
+
+  /** One prelude per estimate: sum, min, max and the finite check in one
+    * pass, then the squared deviations from the mean — the two-pass
+    * variance, in data order, so bw² is bit-identical to the reference
+    * derivation's. Null when the sample is degenerate. */
+  private def linspace(data: Array[Double]): Linspace = {
     val n = data.length
-    val bw2 = factor * factor * variance(data)
-    val lo = data.min
-    val hi = data.max
-    val step = (hi - lo) / (GRID - 1)
+    if (n < 2) return null
+    var sum = 0.0
+    var lo = data(0)
+    var hi = data(0)
+    var i = 0
+    while (i < n) {
+      val d = data(i)
+      if (d.isNaN || d.isInfinite) return null
+      sum += d
+      lo = math.min(lo, d)
+      hi = math.max(hi, d)
+      i += 1
+    }
+    val mean = sum / n
+    var acc = 0.0
+    i = 0
+    while (i < n) { val d = data(i) - mean; acc += d * d; i += 1 }
+    val variance = acc / (n - 1)
+    if (variance <= 0.0) null else new Linspace(lo, (hi - lo) / (GRID - 1), variance)
+  }
+
+  /** Density curve on the linspace grid (only [[kdePara]] needs it). The
+    * grid itself is affine in the index, so only the densities are
+    * materialised. */
+  private def densityCurve(data: Array[Double], s: Linspace, factor: Double): Array[Double] = {
+    val n = data.length
+    val bw2 = factor * factor * s.variance
     val norm = 1.0 / (n * math.sqrt(2.0 * math.Pi * bw2))
     val inv2bw2 = 1.0 / (2.0 * bw2)
     val ys = new Array[Double](GRID)
     var g = 0
     while (g < GRID) {
-      val x = lo + g * step
+      val x = s.x(g)
       var acc = 0.0
       var i = 0
       while (i < n) {
@@ -75,42 +97,113 @@ object Kde {
     ys
   }
 
-  /** Streaming first-argmax of the density curve — same float ops in the
-    * same order as [[densityCurve]] + [[firstArgmax]], without the 8 KB
-    * grid array per call (the mode-only path never needs the curve). */
-  private def modeIndex(data: Array[Double], factor: Double): Int = {
+  /** First argmax of the density curve, by branch and bound: the same
+    * index as scoring all GRID points in order and keeping the first
+    * maximum, bit for bit, at a fraction of the kernel evaluations.
+    *
+    * Each block of grid points [g0, g1] gets the bound
+    * UB = norm · Σᵢ K(dᵢ), where K(d) is the point loop's term
+    * (e = d·d·inv2bw2; exp(-e) if e < UnderflowCut, else nothing) and
+    * dᵢ = x_g0 − xᵢ if xᵢ < x_g0, xᵢ − x_g1 if xᵢ > x_g1, else 0. The
+    * computed UB is ≥ the computed y of every point in the block:
+    *  - x_g = lo + g·step is non-decreasing in g, because IEEE
+    *    round-to-nearest is monotone for `*` and `+` (step ≥ 0). Only
+    *    x_0 can be NaN (0·∞, for a range past Double.MaxValue); a NaN
+    *    x_g0 fails `xᵢ < x_g0`, which only loosens the bound;
+    *  - so |fl(x_g − xᵢ)| ≥ dᵢ: subtraction is monotone too, and
+    *    fl(a − b) = −fl(b − a) exactly;
+    *  - K is non-increasing in d ≥ 0: `*` is monotone, Java never
+    *    contracts d·d·inv2bw2 into an FMA, the cut is a threshold on e,
+    *    and `Math.exp` is semi-monotonic by its specification. (A NaN e,
+    *    from 0·∞ or ∞·0, adds nothing on either side.)
+    *  - the n terms are summed from 0.0 in the same data order, and `+`
+    *    and the final `* norm` are monotone, so UB ≥ y termwise by
+    *    induction. A NaN UB proves nothing and is treated as +∞; a NaN y
+    *    is never taken, as in the full scan.
+    * No ε is needed. A block is pruned only when UB < bestY strictly, so a
+    * point that ties the best is never pruned, and the take rule
+    * (y > bestY, or y == bestY at a lower g) keeps the first argmax
+    * whatever order blocks are visited in.
+    *
+    * The search is two-level: the Blocks coarse blocks are visited in
+    * descending-bound order, and inside each its Blocks fine blocks,
+    * also in descending-bound order; each surviving fine block is scored
+    * with the unchanged point loop. */
+  private def modeIndex(data: Array[Double], s: Linspace, factor: Double): Int = {
     val n = data.length
-    val bw2 = factor * factor * variance(data)
-    val lo = data.min
-    val hi = data.max
-    val step = (hi - lo) / (GRID - 1)
+    val bw2 = factor * factor * s.variance
     val norm = 1.0 / (n * math.sqrt(2.0 * math.Pi * bw2))
     val inv2bw2 = 1.0 / (2.0 * bw2)
+    val coarseUb = new Array[Double](Blocks)
+    val coarseOrd = new Array[Int](Blocks)
+    val fineUb = new Array[Double](Blocks)
+    val fineOrd = new Array[Int](Blocks)
     var best = 0
     var bestY = Double.NegativeInfinity
-    var g = 0
-    while (g < GRID) {
-      val x = lo + g * step
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        val d = x - data(i)
-        val e = d * d * inv2bw2
-        if (e < UnderflowCut) acc += math.exp(-e)
-        i += 1
+    bounds(data, s, 0, Coarse, inv2bw2, norm, coarseUb, coarseOrd)
+    var c = 0
+    while (c < Blocks && coarseUb(coarseOrd(c)) >= bestY) {
+      val c0 = coarseOrd(c) * Coarse
+      bounds(data, s, c0, Fine, inv2bw2, norm, fineUb, fineOrd)
+      var f = 0
+      while (f < Blocks && fineUb(fineOrd(f)) >= bestY) {
+        var g = c0 + fineOrd(f) * Fine
+        val end = g + Fine
+        while (g < end) {
+          val x = s.x(g)
+          var acc = 0.0
+          var i = 0
+          while (i < n) {
+            val d = x - data(i)
+            val e = d * d * inv2bw2
+            if (e < UnderflowCut) acc += math.exp(-e)
+            i += 1
+          }
+          val y = acc * norm
+          if (y > bestY || (y == bestY && g < best)) { bestY = y; best = g }
+          g += 1
+        }
+        f += 1
       }
-      val y = acc * norm
-      if (y > bestY) { bestY = y; best = g }
-      g += 1
+      c += 1
     }
     best
   }
 
-  /** x-coordinate of grid index g for the same linspace. */
-  private def gridX(data: Array[Double], g: Int): Double = {
-    val lo = data.min
-    val step = (data.max - lo) / (GRID - 1)
-    lo + g * step
+  /** [[modeIndex]] of a sample, or -1 when it is degenerate. */
+  private[geom] def modeIndex(data: Array[Double], factor: Double): Int = {
+    val s = linspace(data)
+    if (s == null) -1 else modeIndex(data, s, factor)
+  }
+
+  /** Fills `ub` with the [[modeIndex]] bounds of the Blocks consecutive
+    * blocks of `size` grid points from g0, and `ord` with the block
+    * numbers in descending-bound order (an insertion sort, ties by block
+    * number). */
+  private def bounds(data: Array[Double], s: Linspace, g0: Int, size: Int,
+                     inv2bw2: Double, norm: Double,
+                     ub: Array[Double], ord: Array[Int]): Unit = {
+    val n = data.length
+    var b = 0
+    while (b < Blocks) {
+      val a = s.x(g0 + b * size)
+      val z = s.x(g0 + b * size + size - 1)
+      var acc = 0.0
+      var i = 0
+      while (i < n) {
+        val xi = data(i)
+        val d = if (xi < a) a - xi else if (xi > z) xi - z else 0.0
+        val e = d * d * inv2bw2
+        if (e < UnderflowCut) acc += math.exp(-e)
+        i += 1
+      }
+      val u = acc * norm
+      ub(b) = if (u.isNaN) Double.PositiveInfinity else u
+      var k = b
+      while (k > 0 && ub(ord(k - 1)) < ub(b)) { ord(k) = ord(k - 1); k -= 1 }
+      ord(k) = b
+      b += 1
+    }
   }
 
   private def firstArgmax(ys: Array[Double]): Int = {
@@ -119,9 +212,6 @@ object Kde {
     while (i < ys.length) { if (ys(i) > ys(best)) best = i; i += 1 }
     best
   }
-
-  private def degenerate(data: Array[Double]): Boolean =
-    data.length < 2 || variance(data) <= 0.0 || !data.forall(d => !d.isNaN && !d.isInfinity)
 
   /** Mode estimate with fixed bandwidth factor 0.1
     * (reference: kde_utils.py:8-30, the word/vertical threshold). */
@@ -137,8 +227,9 @@ object Kde {
 
   private def withFactor(data: Array[Double], factor: Double): Int = {
     if (data.isEmpty) return 0
-    if (degenerate(data)) return math.ceil(data.max).toInt
-    math.ceil(gridX(data, modeIndex(data, factor))).toInt
+    val s = linspace(data)
+    if (s == null) return math.ceil(data.max).toInt
+    math.ceil(s.x(modeIndex(data, s, factor))).toInt
   }
 
   /** Paragraph-threshold variant: Scott-like bandwidth, then the
@@ -151,9 +242,10 @@ object Kde {
     */
   def kdePara(data: Array[Double]): Int = {
     if (data.isEmpty) return 0
-    if (degenerate(data)) return math.ceil(data.max).toInt
+    val s = linspace(data)
+    if (s == null) return math.ceil(data.max).toInt
     val factor = math.pow(data.length.toDouble, -1.0 / 5.0)
-    val ys = densityCurve(data, factor)
+    val ys = densityCurve(data, s, factor)
     val peaks = findPeaks(ys)
     val idx =
       if (peaks.isEmpty) firstArgmax(ys)
@@ -164,7 +256,7 @@ object Kde {
         val byHeightDesc = peaks.sortBy(p => (-ys(p), -p))
         byHeightDesc(1)
       }
-    math.ceil(gridX(data, idx)).toInt
+    math.ceil(s.x(idx)).toInt
   }
 
   /** scipy.signal.find_peaks default local-maxima scan

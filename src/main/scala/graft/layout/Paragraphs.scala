@@ -34,27 +34,37 @@ object Paragraphs {
   /** A1: component envelopes → Para rows
     * (reference: paragraph.py:31-94 `recognise_paragraphs` head). Edge
     * midpoints are rounded half-even via Python's round() — replicated with
-    * RoundingMode.HALF_EVEN. */
+    * RoundingMode.HALF_EVEN.
+    *
+    * The reference walks the word table in id order per component; min and
+    * max do not depend on order, so each component visits only the words
+    * of its member ids, through an id → words index built once. */
   def envelopes(components: Seq[Vector[Int]], words: IndexedSeq[Word]): Vector[Para] = {
+    if (components.isEmpty) return Vector.empty
     val maxId = if (words.isEmpty) 0 else words.iterator.map(_.id).max + 1
-    val isMember = new java.util.BitSet(maxId)
-    components.zipWithIndex.map { case (members, count) =>
-      isMember.clear()
-      members.foreach(isMember.set)
+    // word indices by id: head(id) is the last word with that id, next(k)
+    // the word before k with the same id (-1 ends a chain)
+    val head = Array.fill(maxId)(-1)
+    val next = new Array[Int](words.length)
+    var k = 0
+    while (k < words.length) { next(k) = head(words(k).id); head(words(k).id) = k; k += 1 }
+    components.iterator.zipWithIndex.map { case (members, count) =>
       var l, t = Int.MaxValue
       var r, b = Int.MinValue
-      // reference iterates the word table in id order, collecting the
-      // rounded edge-midpoint coordinates of member boxes
-      for (w <- words if isMember.get(w.id)) {
-        val box = w.bbox
-        val li = pyRound(box.leftMid.x)
-        val ri = pyRound(box.rightMid.x)
-        val ti = pyRound(box.topMid.y)
-        val bi = pyRound(box.bottomMid.y)
-        if (li != -1 && li < l) l = li
-        if (ri != -1 && ri > r) r = ri
-        if (ti != -1 && ti < t) t = ti
-        if (bi != -1 && bi > b) b = bi
+      for (m <- members if m < maxId) {
+        var w = head(m)
+        while (w >= 0) {
+          val box = words(w).bbox
+          val li = pyRound(box.leftMid.x)
+          val ri = pyRound(box.rightMid.x)
+          val ti = pyRound(box.topMid.y)
+          val bi = pyRound(box.bottomMid.y)
+          if (li != -1 && li < l) l = li
+          if (ri != -1 && ri > r) r = ri
+          if (ti != -1 && ti < t) t = ti
+          if (bi != -1 && bi > b) b = bi
+          w = next(w)
+        }
       }
       Para(
         members = members,

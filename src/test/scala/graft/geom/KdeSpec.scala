@@ -2,11 +2,16 @@ package graft.geom
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestData
+import graft.extract.Extractor
+import graft.layout.{Neighbors, Para, Paragraphs, Word}
+import graft.pages.{PageGen, PagesTable}
 import scala.jdk.CollectionConverters._
 
 /** KDE mode estimates vs the independent numpy re-derivation
-  * (tools/gen_goldens.py kde section). */
+  * (tools/gen_goldens.py kde section), and the pruned mode search vs the
+  * full-grid scan it replaced. */
 class KdeSpec extends AnyFunSuite {
+  import KdeSpec.Replay
 
   /** Same 64-bit LCG as the golden generator. */
   private def lcg(seed: Long, n: Int, lo: Double, hi: Double): Array[Double] = {
@@ -40,4 +45,191 @@ class KdeSpec extends AnyFunSuite {
     val m = Kde.kdeEstimate(data)
     assert(m >= data.min.floor && m <= data.max.ceil)
   }
+
+  /** The full-grid scan the pruned search replaced: score all 1000 points
+    * in order and keep the first maximum; -1 when the sample is
+    * degenerate. */
+  private def fullScanIndex(data: Array[Double], factor: Double): Int = {
+    val n = data.length
+    if (n < 2 || !data.forall(d => !d.isNaN && !d.isInfinite)) return -1
+    var sum = 0.0
+    var i = 0
+    while (i < n) { sum += data(i); i += 1 }
+    val mean = sum / n
+    var sq = 0.0
+    i = 0
+    while (i < n) { val d = data(i) - mean; sq += d * d; i += 1 }
+    val variance = sq / (n - 1)
+    if (variance <= 0.0) return -1
+    val bw2 = factor * factor * variance
+    val lo = data.min
+    val hi = data.max
+    val step = (hi - lo) / 999
+    val norm = 1.0 / (n * math.sqrt(2.0 * math.Pi * bw2))
+    val inv2bw2 = 1.0 / (2.0 * bw2)
+    var best = 0
+    var bestY = Double.NegativeInfinity
+    var g = 0
+    while (g < 1000) {
+      val x = lo + g * step
+      var acc = 0.0
+      i = 0
+      while (i < n) {
+        val d = x - data(i)
+        val e = d * d * inv2bw2
+        if (e < 746.0) acc += math.exp(-e)
+        i += 1
+      }
+      val y = acc * norm
+      if (y > bestY) { bestY = y; best = g }
+      g += 1
+    }
+    best
+  }
+
+  private def assertSameMode(data: Array[Double], factor: Double, what: String): Unit =
+    assert(Kde.modeIndex(data, factor) == fullScanIndex(data, factor),
+      s"$what: n=${data.length} factor=$factor")
+
+  /** Envelopes the way the reference builds them: for each component,
+    * walk the whole word table in id order and keep the member boxes. */
+  private def envelopesByWordWalk(components: Seq[Vector[Int]], words: IndexedSeq[Word]): Vector[Para] =
+    components.zipWithIndex.map { case (members, count) =>
+      val isMember = members.toSet
+      var l, t = Int.MaxValue
+      var r, b = Int.MinValue
+      for (w <- words if isMember(w.id)) {
+        val box = w.bbox
+        val li = Paragraphs.pyRound(box.leftMid.x)
+        val ri = Paragraphs.pyRound(box.rightMid.x)
+        val ti = Paragraphs.pyRound(box.topMid.y)
+        val bi = Paragraphs.pyRound(box.bottomMid.y)
+        if (li != -1 && li < l) l = li
+        if (ri != -1 && ri > r) r = ri
+        if (ti != -1 && ti < t) t = ti
+        if (bi != -1 && bi > b) b = bi
+      }
+      Para(members, count, top = Pt((l + r) / 2.0, t.toDouble), bottom = Pt((l + r) / 2.0, b.toDouble),
+        right = Pt(r.toDouble, (t + b) / 2.0), left = Pt(l.toDouble, (t + b) / 2.0))
+    }.toVector
+
+  /** One extracted page's layout stages, replayed as perfbench's PageTrace
+    * does: the samples its mode searches score, with their bandwidth
+    * factors, and its components and words for the envelope check. */
+  private def replay(html: Array[Byte]): Replay = {
+    val ex = Extractor.extract("kde://page", html)
+    assert(!ex.failed)
+    if (ex.blocks.isEmpty) return Replay(Nil, Nil, Vector.empty)
+    val words = ex.blocks.indices.map { k =>
+      val b = ex.blocks(k)
+      Word(k, BBox(b.x, b.y, b.w, b.h))
+    }
+    val last = ex.blocks.last
+    val pageW = 960
+    val pageH = math.max(last.y + last.h + 50, 200)
+    val boxes = words.map(_.bbox)
+    val (horizontal, vertical) = Neighbors.findClosestNeighbors(boxes)
+    val x = Kde.kdeEstimateD(horizontal, horizontal = true)
+    val y = Kde.kdeEstimateD(vertical, horizontal = false)
+    val (right, left, top, bottom) = Neighbors.fourDirectionLinks(boxes, x, y)
+    val components = Neighbors.connectedComponents(boxes.length, Seq(right, left, top, bottom))
+    val kept = Paragraphs.ignoreMargins(Paragraphs.envelopes(components, words), pageW, pageH, 0.0, 0.0, 0.0)
+    // a pinp post-pass only resets bottom links, so findClosestParagraphs
+    // over a pass's output is the x_para sample that pass scored
+    val passes =
+      if (kept.length < 3) Nil
+      else {
+        val p1 = Paragraphs.pinp(kept, pageW, pageH, 0.0, 0.0, 0.0, theta = 7)
+        val p2 = Paragraphs.pinp2(p1, pageW, pageH, 0.0, 0.0, 0.0, theta = 10)
+        val p3 = Paragraphs.pinp(p2, pageW, pageH, 0.0, 0.0, 0.0, theta = 7)
+        Seq(p1, p2, p3).filter(_.nonEmpty).map(p => Paragraphs.findClosestParagraphs(p) -> 0.1)
+      }
+    val samples = Seq(horizontal -> math.pow(horizontal.length.toDouble, -1.0 / 5.0), vertical -> 0.1) ++ passes
+    Replay(samples, components, words)
+  }
+
+  /** sf0.01's pages (the board's natural mix) and 40 pages with at least
+    * 200 golden blocks (the benchmark's tail). */
+  private lazy val pages: Vector[Replay] = {
+    val natural = (0L until PagesTable.rowsFor("sf0.01")).map(i => PageGen.pageFull(PagesTable.Seed, i))
+    val tail = Iterator.from(0).map(i => PageGen.pageFull(11L, i.toLong))
+      .filter(_.meta.n_spans >= 200).take(40)
+    (natural.iterator ++ tail).map(g => replay(g.row.html)).toVector
+  }
+
+  test("the pruned mode search returns the full scan's index on every extraction sample") {
+    var checked = 0
+    for (p <- pages; (sample, factor) <- p.samples) {
+      assertSameMode(sample, factor, "extraction sample")
+      checked += 1
+    }
+    assert(checked >= 2 * pages.length, s"only $checked samples")
+    assert(pages.count(_.words.length >= 200) >= 40)
+  }
+
+  test("the pruned mode search returns the full scan's index on adversarial samples") {
+    val rng = new scala.util.Random(7)
+    def factors(n: Int) = Seq(0.1, math.pow(n.toDouble, -1.0 / 5.0), 1e-3, 1e3)
+    // heavy duplicates: a few distinct values, many copies each
+    for (k <- 0 until 200) {
+      val n = 2 + rng.nextInt(300)
+      val values = Array.fill(1 + rng.nextInt(5))(rng.nextInt(50).toDouble)
+      val data = Array.fill(n)(values(rng.nextInt(values.length)))
+      factors(n).foreach(assertSameMode(data, _, s"duplicates #$k"))
+    }
+    // equal-height modes: two mirrored samples on an exact integer grid
+    // (lo = 0, step = 1) tie at g and 999 - g, and a flat curve under a
+    // huge bandwidth ties across blocks; the first index must win
+    for (data <- Seq(Array(0.0, 999.0), Array(999.0, 0.0), Array(0.0, 999.0, 999.0, 0.0),
+                     Array(0.0, 499.5, 999.0), Array(0.0, 333.0, 666.0, 999.0))) {
+      Seq(0.1, 0.3, 1.0, 1e3, 1e8).foreach(assertSameMode(data, _, s"ties ${data.mkString(",")}"))
+    }
+    assert(Kde.modeIndex(Array(0.0, 999.0), 0.1) == 0)
+    // wide ranges: most terms past the underflow cut
+    for (k <- 0 until 50) {
+      val n = 20 + rng.nextInt(200)
+      val data = Array.tabulate(n)(i => if (i % 17 == 0) rng.nextDouble() * 1e7 else rng.nextDouble() * 10)
+      factors(n).foreach(assertSameMode(data, _, s"wide #$k"))
+    }
+    // a range past Double.MaxValue: an infinite grid step
+    for (data <- Seq(Array(-1e308, 1e308), Array(-1e308, 0.0, 5.0, 1e308, 1e308), Array(1.7e308, -1e308, 3.0)))
+      factors(data.length).foreach(assertSameMode(data, _, s"infinite step ${data.mkString(",")}"))
+    // a tiny bandwidth at a large offset
+    for (n <- Seq(2, 3, 10, 101, 1000)) {
+      val data = Array.tabulate(n)(k => 1e6 + 1e-3 * k)
+      factors(n).foreach(assertSameMode(data, _, "offset"))
+      val shuffled = rng.shuffle(data.toSeq).toArray
+      factors(n).foreach(assertSameMode(shuffled, _, "offset, shuffled"))
+    }
+    // n = 2 and random mixtures of clusters
+    for (k <- 0 until 300) {
+      val n = if (k < 100) 2 else 3 + rng.nextInt(500)
+      val centres = Array.fill(1 + rng.nextInt(4))(rng.nextDouble() * 1000)
+      val data = Array.fill(n)(centres(rng.nextInt(centres.length)) + rng.nextGaussian() * rng.nextInt(30))
+      factors(n).foreach(assertSameMode(data, _, s"mixture #$k"))
+    }
+    // degenerate samples are left to the caller
+    for (data <- Seq(Array.empty[Double], Array(1.0), Array(2.0, 2.0), Array(1.0, Double.NaN),
+                     Array(1.0, Double.PositiveInfinity)))
+      assert(Kde.modeIndex(data, 0.1) == -1)
+  }
+
+  test("envelopes match the per-component word walk on every page") {
+    var checked = 0
+    for (p <- pages) {
+      assert(Paragraphs.envelopes(p.components, p.words) == envelopesByWordWalk(p.components, p.words))
+      checked += p.components.length
+    }
+    assert(checked > pages.length)
+    // members in any order, repeated, or without a word; an id on two words
+    val words = Vector(Word(0, BBox(10, 10, 50, 20)), Word(2, BBox(2, 3, 4, 4)),
+                       Word(1, BBox(5, 70, 90, 20)), Word(2, BBox(300, 200, 40, 20)))
+    val components = Seq(Vector(2, 0), Vector(1, 1, 9), Vector(7))
+    assert(Paragraphs.envelopes(components, words) == envelopesByWordWalk(components, words))
+  }
+}
+
+object KdeSpec {
+  final case class Replay(samples: Seq[(Array[Double], Double)],
+                          components: Seq[Vector[Int]], words: IndexedSeq[Word])
 }

@@ -207,8 +207,9 @@ class ExtractionJobSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("work-set plan prunes the scan and hashes url into sized partitions") {
-    val pagesPath = s"$tmp/pages"
-    val work = ExtractionJob.planWorkSet(spark, JobConfig(pagesPath, s"$tmp/out2"))
+    val pagesPath = s"$tmp/plan/pages"
+    PagesTable.generate(spark, seed = 42L, n = 300, partitions = 4).write.parquet(pagesPath)
+    val work = ExtractionJob.planWorkSet(spark, JobConfig(pagesPath, s"$tmp/plan/out"))
     val plan = work.queryExecution.executedPlan.toString
     assert(plan.contains("ReadSchema: struct<url:string,html:binary>"),
       s"scan must read only url+html:\n$plan")
@@ -314,9 +315,10 @@ class ExtractionJobSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("shuffle=false plans a shuffle-free scan (byte-balanced splits)") {
-    val pagesPath = s"$tmp/pages"
+    val pagesPath = s"$tmp/noshuffle/pages"
+    PagesTable.generate(spark, seed = 42L, n = 300, partitions = 4).write.parquet(pagesPath)
     val plan = ExtractionJob.planWorkSet(
-        spark, JobConfig(pagesPath, s"$tmp/out3", shuffle = false))
+        spark, JobConfig(pagesPath, s"$tmp/noshuffle/out", shuffle = false))
       .queryExecution.executedPlan.toString
     assert(plan.contains("ReadSchema: struct<url:string,html:binary>"))
     assert(!plan.toLowerCase.contains("exchange"),

@@ -41,10 +41,13 @@ final case class Extracted(url: String, text: String,
   * platform. Extracted text = content blocks in document order, each
   * whitespace-normalised, joined by '\n'.
   *
-  * The per-page cost is O(blocks²) in the layout branch with blocks ≈
-  * 10-100 — deliberately block-level, not word-level, so the 100 TB job
-  * stays compute-bounded (the reference runs the same DAG at word level,
-  * O(n²) with n ≈ 500, per page; see BASELINE.md).
+  * The layout branch runs at block level, not word level, so the 100 TB
+  * job stays compute-bounded (the reference runs the same DAG at word
+  * level, O(n²) with n ≈ 500, per page; see BASELINE.md). A typical page
+  * has a few dozen content blocks and the heavy tail several hundred. The
+  * layout joins are band sweeps over y-sorted boxes, so a page costs about
+  * O(blocks · log blocks), which `PageBudgetSpec` checks on pages of 4k
+  * and 16k blocks.
   */
 object Extractor {
 

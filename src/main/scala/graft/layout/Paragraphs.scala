@@ -97,70 +97,59 @@ object Paragraphs {
   }
 
   /** J5-para: mean of the 3 smallest vertical envelope-to-envelope
-    * distances per paragraph (reference: para_utils.py:30-54). */
+    * distances per paragraph (reference: para_utils.py:30-54), as a band
+    * sweep over y-sorted tops and bottoms
+    * ([[Neighbors.closestVertical]]). */
   def findClosestParagraphs(paras: IndexedSeq[Para]): Array[Double] = {
     val n = paras.length
-    val out = new Array[Double](n)
-    // primitive midpoint arrays; 3-smallest kept via streaming selection
-    // (allocation-free O(n²), same value as the reference's sorted[:3]/3)
-    val txa = new Array[Double](n); val tya = new Array[Double](n)
-    val bxa = new Array[Double](n); val bya = new Array[Double](n)
-    var k = 0
-    while (k < n) {
-      txa(k) = paras(k).top.x; tya(k) = paras(k).top.y
-      bxa(k) = paras(k).bottom.x; bya(k) = paras(k).bottom.y
-      k += 1
+    val tx, ty, bx, by = new Array[Double](n)
+    for (k <- 0 until n) {
+      tx(k) = paras(k).top.x; ty(k) = paras(k).top.y
+      bx(k) = paras(k).bottom.x; by(k) = paras(k).bottom.y
     }
-    var i = 0
-    while (i < n) {
-      var m0, m1, m2 = Double.MaxValue
-      var cnt = 0
-      def offer(d: Double): Unit = {
-        cnt += 1
-        if (d < m2) { if (d < m1) { m2 = m1; if (d < m0) { m1 = m0; m0 = d } else m1 = d } else m2 = d }
-      }
-      var j = 0
-      while (j < n) {
-        if (i != j) {
-          var dx = bxa(i) - txa(j); var dy = bya(i) - tya(j)
-          offer(dx * dx + dy * dy)
-          dx = txa(i) - bxa(j); dy = tya(i) - bya(j)
-          offer(dx * dx + dy * dy)
-        }
-        j += 1
-      }
-      var s = 0.0
-      if (cnt > 0 && m0 != Double.MaxValue) s += math.sqrt(m0)
-      if (cnt > 1 && m1 != Double.MaxValue) s += math.sqrt(m1)
-      if (cnt > 2 && m2 != Double.MaxValue) s += math.sqrt(m2)
-      out(i) = s / 3.0
-      i += 1
-    }
-    out
+    Neighbors.closestVertical(tx, ty, bx, by)
   }
 
   /** J4-para: per paragraph, among candidates with dist(top_j, bottom_i)
     * < x, pick the one with the smallest |Δy| (first minimum)
-    * (reference: para_utils.py:5-27 `calculate_bottombox_para`). */
+    * (reference: para_utils.py:5-27 `calculate_bottombox_para`).
+    *
+    * The full scan keeps the lexicographic minimum of (|Δy|, j). The
+    * sweep visits the y-sorted tops in increasing |Δy| and compares
+    * (|Δy|, j). |Δy| is |dy| exactly (fl(a − b) = −fl(b − a)) and does not
+    * decrease along a side, so a side closes when |Δy| > the best (a tie
+    * may still have a lower j), or when sqrt(dy·dy) ≥ x: the distance is
+    * sqrt(fl(dx·dx + dy·dy)) ≥ sqrt(fl(dy·dy)), both correctly rounded, so
+    * no candidate further out passes `dist < x`. Every candidate visited
+    * gets the exact distance test. */
   def calculateBottomboxPara(paras: IndexedSeq[Para], x: Double): Vector[Para] = {
-    paras.zipWithIndex.map { case (pi, i) =>
+    val n = paras.length
+    val ty, tx = new Array[Double](n)
+    for (k <- 0 until n) { ty(k) = paras(k).top.y; tx(k) = paras(k).top.x }
+    val tops = new YSweep(ty)
+    paras.indices.map { i =>
+      val bottom = paras(i).bottom
       var bestYd = Double.MaxValue
       var bestDist = -1.0
       var bestId = -1
-      var j = 0
-      while (j < paras.length) {
-        if (i != j) {
-          val pj = paras(j)
-          val distance = pj.top.dist(pi.bottom)
-          if (distance >= 0 && distance < x) {
-            val yd = math.abs(pi.bottom.y - pj.top.y)
-            if (yd < bestYd) { bestYd = yd; bestDist = distance; bestId = j }
+      tops.start(bottom.y)
+      var j = tops.next()
+      while (j >= 0) {
+        // Pt.dist's operands: top_j − bottom_i
+        val dy = ty(j) - bottom.y
+        val yd = math.abs(bottom.y - ty(j))
+        if (yd > bestYd || !(math.sqrt(dy * dy) < x)) tops.close()
+        else if (j != i) {
+          val dx = tx(j) - bottom.x
+          val distance = math.sqrt(dx * dx + dy * dy)
+          if (distance >= 0 && distance < x && (yd < bestYd || yd == bestYd && j < bestId)) {
+            bestYd = yd; bestDist = distance; bestId = j
           }
         }
-        j += 1
+        j = tops.next()
       }
-      if (bestId >= 0) pi.copy(bottomBox = NLink(bestDist, bestId))
-      else pi.copy(bottomBox = NLink.none)
+      if (bestId >= 0) paras(i).copy(bottomBox = NLink(bestDist, bestId))
+      else paras(i).copy(bottomBox = NLink.none)
     }.toVector
   }
 
@@ -189,82 +178,168 @@ object Paragraphs {
     * Faithful quirks: merged flags are live during the scan; an absorber's
     * envelope is NOT extended; when no small component exists, the input is
     * returned unchanged (no margin/bottom-box recompute).
+    *
+    * Each big component tests only the small ones whose y-interval
+    * overlaps its own ([[YIntervals]]), in ascending index order, which is
+    * the full scan's order: the live flags and the absorption order stay
+    * the same.
     */
   def pinp(paras0: IndexedSeq[Para], pageW: Int, pageH: Int,
            widthP: Double, headerP: Double, footerP: Double, theta: Int): Vector[Para] = {
-    val paras = ArrayBuffer.from(paras0.map(_.copy(merged = false)))
-    val bigIdx = paras.indices.filter(i => paras(i).members.length > theta)
-    val smallIdx = paras.indices.filter(i => paras(i).members.length <= theta)
-    if (smallIdx.isEmpty) return paras.toVector
+    val n = paras0.length
+    val small = (0 until n).filter(paras0(_).members.length <= theta).toArray
+    if (small.isEmpty) return paras0.map(_.copy(merged = false)).toVector
 
-    // precomputed envelopes (pinp never mutates them) — no per-pair tuples
-    val x1 = paras.map(_.left.x).toArray
-    val y1 = paras.map(_.top.y).toArray
-    val x2 = paras.map(_.right.x).toArray
-    val y2 = paras.map(_.bottom.y).toArray
-    for (i1 <- bigIdx) {
-      val r1 = paras(i1)
+    val env = new Envelopes(paras0)
+    val index = new YIntervals(small, env.y1, env.y2)
+    val merged = new Array[Boolean](n)
+    val members = paras0.map(_.members).toArray
+    for (i1 <- 0 until n if paras0(i1).members.length > theta) {
       val absorbed = ArrayBuffer.empty[Vector[Int]]
-      for (i2 <- smallIdx) {
-        val r2 = paras(i2)
-        if (!r2.merged) {
-          if (Geometry.isBoxInside8(x1(i1), y1(i1), x2(i1), y2(i1),
-                x1(i2), y1(i2), x2(i2), y2(i2), 85.0)) {
-            absorbed += r2.members
-            paras(i2) = r2.copy(merged = true)
-          }
+      val count = index.overlapping(env.y1(i1), env.y2(i1))
+      for (c <- 0 until count) {
+        val i2 = index.found(c)
+        if (!merged(i2) && env.inside(i1, i2, 85.0)) {
+          absorbed += members(i2)
+          merged(i2) = true
         }
       }
-      paras(i1) = paras(i1).copy(members = r1.members ++ absorbed.flatten)
+      members(i1) = members(i1) ++ absorbed.flatten
     }
-    pinpPost(paras.toVector.filterNot(_.merged), pageW, pageH, widthP, headerP, footerP)
+    val kept = (0 until n).filterNot(merged).map(i => paras0(i).copy(members = members(i), merged = false))
+    pinpPost(kept, pageW, pageH, widthP, headerP, footerP)
   }
 
   /** J6 second pass: ANY two paragraphs at ≥10% overlap merge, the
     * absorber's envelope extended to the union — computed from the
     * absorber's ORIGINAL envelope and the LAST absorbed one (last write
     * wins, a reference quirk) (reference: pinp_utils.py:247-331 `pinp2`).
+    *
+    * As in [[pinp]], each paragraph tests only the ones whose original
+    * y-interval overlaps its own, in ascending index order, so the live
+    * merged flags and the last absorbed envelope are the full scan's.
     */
   def pinp2(paras0: IndexedSeq[Para], pageW: Int, pageH: Int,
             widthP: Double, headerP: Double, footerP: Double, theta: Int): Vector[Para] = {
-    val paras = ArrayBuffer.from(paras0.map(_.copy(merged = false)))
+    val n = paras0.length
+    val paras = paras0.map(_.copy(merged = false)).toArray
     // live merged flags are tracked here; envelope snapshots for the
     // overlap tests come from the ORIGINAL rows (pandas iterrows copies)
-    val original = paras0.map(_.copy(merged = false)).toVector
-    val mergedLive = Array.fill(paras.length)(false)
-
-    val x1 = original.map(_.left.x).toArray
-    val y1 = original.map(_.top.y).toArray
-    val x2 = original.map(_.right.x).toArray
-    val y2 = original.map(_.bottom.y).toArray
-    for (i1 <- paras.indices) {
-      val r1 = original(i1)
+    val mergedLive = new Array[Boolean](n)
+    val env = new Envelopes(paras0)
+    val index = new YIntervals(Array.range(0, n), env.y1, env.y2)
+    for (i1 <- 0 until n) {
+      val r1 = paras0(i1)
       val absorbed = ArrayBuffer.empty[Vector[Int]]
       if (!mergedLive(i1)) {
-        for (i2 <- paras.indices) {
-          val r2 = original(i2)
-          if (i1 != i2 && !mergedLive(i2)) {
-            if (Geometry.isBoxInside8(x1(i1), y1(i1), x2(i1), y2(i1),
-                  x1(i2), y1(i2), x2(i2), y2(i2), 10.0)) {
-              absorbed += r2.members
-              mergedLive(i2) = true
-              val t1 = r1.tlbr
-              val t2 = r2.tlbr
-              val m = (math.min(t1._1, t2._1), math.min(t1._2, t2._2),
-                       math.max(t1._3, t2._3), math.max(t1._4, t2._4))
-              paras(i1) = paras(i1).copy(
-                top = Pt(m._1 + (m._3 - m._1) / 2.0, m._2),
-                bottom = Pt(m._1 + (m._3 - m._1) / 2.0, m._4),
-                left = Pt(m._1, m._2 + (m._4 - m._2) / 2.0),
-                right = Pt(m._3, m._2 + (m._4 - m._2) / 2.0))
-            }
+        val count = index.overlapping(env.y1(i1), env.y2(i1))
+        for (c <- 0 until count) {
+          val i2 = index.found(c)
+          if (i1 != i2 && !mergedLive(i2) && env.inside(i1, i2, 10.0)) {
+            val r2 = paras0(i2)
+            absorbed += r2.members
+            mergedLive(i2) = true
+            val t1 = r1.tlbr
+            val t2 = r2.tlbr
+            val m = (math.min(t1._1, t2._1), math.min(t1._2, t2._2),
+                     math.max(t1._3, t2._3), math.max(t1._4, t2._4))
+            paras(i1) = paras(i1).copy(
+              top = Pt(m._1 + (m._3 - m._1) / 2.0, m._2),
+              bottom = Pt(m._1 + (m._3 - m._1) / 2.0, m._4),
+              left = Pt(m._1, m._2 + (m._4 - m._2) / 2.0),
+              right = Pt(m._3, m._2 + (m._4 - m._2) / 2.0))
           }
         }
       }
       paras(i1) = paras(i1).copy(members = r1.members ++ absorbed.flatten)
     }
-    val kept = paras.indices.filterNot(mergedLive).map(paras(_))
-    pinpPost(kept.toVector, pageW, pageH, widthP, headerP, footerP)
+    val kept = (0 until n).filterNot(mergedLive).map(paras(_))
+    pinpPost(kept, pageW, pageH, widthP, headerP, footerP)
+  }
+
+  /** The (x1, y1, x2, y2) envelope rectangles of a pinp pass's input,
+    * which the pass never changes. */
+  private final class Envelopes(paras: IndexedSeq[Para]) {
+    val x1, y1, x2, y2 = new Array[Double](paras.length)
+    for (k <- paras.indices) {
+      x1(k) = paras(k).left.x; y1(k) = paras(k).top.y
+      x2(k) = paras(k).right.x; y2(k) = paras(k).bottom.y
+    }
+    def inside(large: Int, small: Int, thresholdPct: Double): Boolean =
+      Geometry.isBoxInside8(x1(large), y1(large), x2(large), y2(large),
+        x1(small), y1(small), x2(small), y2(small), thresholdPct)
+  }
+
+  /** The candidate index of the pinp passes. `isBoxInside8(l, s, t)` with
+    * t > 0 (both passes use 85 or 10) can hold only when the y-intervals
+    * [min(y1, y2), max(y1, y2)] of l and s overlap strictly:
+    * min_s < max_l && max_s > min_l.
+    *
+    *  - Strict containment: l.y1 < s.y1 gives max_s ≥ s.y1 > l.y1 ≥ min_l,
+    *    and s.y2 < l.y2 gives min_s ≤ s.y2 < l.y2 ≤ max_l. This holds for
+    *    inverted and zero-height envelopes too.
+    *  - Overlap ratio: overlap / smallArea · 100 ≥ t > 0 needs overlap ≠ 0
+    *    (0 over any area is 0, −0 or NaN), so fl(oy2 − oy1) > 0, so
+    *    min(l.y2, s.y2) > max(l.y1, s.y1). Then both envelopes are upright
+    *    with s.y1 < l.y2 and s.y2 > l.y1, the same two inequalities.
+    *
+    * The test is symmetric, so one index answers for either role. Members
+    * are sorted by lower end, with each subtree's greatest upper end kept
+    * at its midpoint (an implicit interval tree); a query lists the
+    * overlapping members in ascending index order, the order the full
+    * scans visit them. NaN ends overlap nothing and are left out. */
+  private final class YIntervals(members: Array[Int], y1: Array[Double], y2: Array[Double]) {
+    private val low = new Array[Double](members.length)
+    for (k <- members.indices) low(k) = math.min(y1(members(k)), y2(members(k)))
+    private val byLow = Neighbors.sortedIndices(low)
+    private val id = new Array[Int](byLow.length)
+    private val lo, hi, subMax = new Array[Double](byLow.length)
+    for (k <- byLow.indices) {
+      id(k) = members(byLow(k))
+      lo(k) = low(byLow(k))
+      hi(k) = math.max(y1(id(k)), y2(id(k)))
+    }
+    build(0, id.length)
+    private var buf = new Array[Int](16)
+
+    /** The c-th member the last [[overlapping]] listed, ascending. */
+    def found(c: Int): Int = buf(c)
+
+    private def build(l: Int, r: Int): Double =
+      if (l >= r) Double.NegativeInfinity
+      else {
+        val m = (l + r) >>> 1
+        val s = math.max(hi(m), math.max(build(l, m), build(m + 1, r)))
+        subMax(m) = s
+        s
+      }
+
+    /** Lists the members overlapping the interval of (a, b) for
+      * [[found]] and returns their count. */
+    def overlapping(a: Double, b: Double): Int = {
+      val count = collect(0, id.length, math.min(a, b), math.max(a, b), 0)
+      java.util.Arrays.sort(buf, 0, count)
+      count
+    }
+
+    private def collect(l: Int, r: Int, a: Double, b: Double, count0: Int): Int = {
+      var count = count0
+      if (l < r) {
+        val m = (l + r) >>> 1
+        if (subMax(m) > a) {
+          count = collect(l, m, a, b, count)
+          if (lo(m) < b) {
+            if (hi(m) > a) {
+              if (count == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * count)
+              buf(count) = id(m)
+              count += 1
+            }
+            count = collect(m + 1, r, a, b, count)
+          }
+        }
+      }
+      count
+    }
   }
 
   /** W3: greedy paragraph order walk — seed at the paragraph whose Top
@@ -272,34 +347,44 @@ object Paragraphs {
     * re-seed when a chain dies; at most n iterations
     * (reference: paragraph.py:197-228 `paragraph_order`,
     * dist_utils.py:36-45 `minimum_euclidean`, para_utils.py:95-99
-    * `get_next`). */
+    * `get_next`).
+    *
+    * The reference re-seeds by scanning every unvisited paragraph for the
+    * first least hypot(top). Here the paragraphs are sorted once by
+    * (hypot, index), leaving out NaN and +∞, which the strict `<` against
+    * +∞ never picks; a re-seed moves a cursor forward past the visited
+    * ones. */
   def paragraphOrder(paras0: IndexedSeq[Para]): Vector[Para] = {
-    val paras = ArrayBuffer.from(paras0.map(_.copy(visited = false, order = -1)))
-    def minimumEuclidean: Int = {
-      var best = Double.PositiveInfinity
-      var minIdx = -1
-      for (i <- paras.indices if !paras(i).visited) {
-        val d = math.hypot(paras(i).top.x, paras(i).top.y)
-        if (d < best) { best = d; minIdx = i }
-      }
-      minIdx
+    val n = paras0.length
+    val visited = new Array[Boolean](n)
+    val orderOf = Array.fill(n)(-1)
+    val hyp = new Array[Double](n)
+    for (i <- 0 until n) {
+      val d = math.hypot(paras0(i).top.x, paras0(i).top.y)
+      hyp(i) = if (d < Double.PositiveInfinity) d else Double.NaN
     }
+    val seeds = Neighbors.sortedIndices(hyp)
+    var cursor = 0
+    def minimumEuclidean: Int = {
+      while (cursor < seeds.length && visited(seeds(cursor))) cursor += 1
+      if (cursor < seeds.length) seeds(cursor) else -1
+    }
+    var unvisited = n
     var order = 0
     var minIdx = minimumEuclidean
     var iter = 0
-    var done = false
-    while (iter < paras.length && !done) {
-      if (paras.exists(!_.visited) && minIdx != -1) {
-        if (!paras(minIdx).visited) {
-          paras(minIdx) = paras(minIdx).copy(visited = true, order = order)
-          order += 1
-        }
-        val next = paras(minIdx).bottomBox
-        minIdx = if (!next.isNone) next.id else minimumEuclidean
-      } else done = true
+    while (iter < n && unvisited > 0 && minIdx != -1) {
+      if (!visited(minIdx)) {
+        visited(minIdx) = true
+        orderOf(minIdx) = order
+        order += 1
+        unvisited -= 1
+      }
+      val next = paras0(minIdx).bottomBox
+      minIdx = if (!next.isNone) next.id else minimumEuclidean
       iter += 1
     }
-    paras.toVector
+    paras0.indices.map(i => paras0(i).copy(visited = visited(i), order = orderOf(i))).toVector
   }
 
   /** W4: top-down/left-right paragraph sort — stable x-sort, split into

@@ -2,17 +2,13 @@ package graft.geom
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestData
-import graft.extract.Extractor
-import graft.layout.{Neighbors, Para, Paragraphs, Word}
-import graft.pages.{PageGen, PagesTable}
+import graft.layout.{Para, Paragraphs, StageReplay, Word}
 import scala.jdk.CollectionConverters._
 
 /** KDE mode estimates vs the independent numpy re-derivation
   * (tools/gen_goldens.py kde section), and the pruned mode search vs the
   * full-grid scan it replaced. */
 class KdeSpec extends AnyFunSuite {
-  import KdeSpec.Replay
-
   /** Same 64-bit LCG as the golden generator. */
   private def lcg(seed: Long, n: Int, lo: Double, hi: Double): Array[Double] = {
     var s = seed
@@ -113,53 +109,19 @@ class KdeSpec extends AnyFunSuite {
         right = Pt(r.toDouble, (t + b) / 2.0), left = Pt(l.toDouble, (t + b) / 2.0))
     }.toVector
 
-  /** One extracted page's layout stages, replayed as perfbench's PageTrace
-    * does: the samples its mode searches score, with their bandwidth
-    * factors, and its components and words for the envelope check. */
-  private def replay(html: Array[Byte]): Replay = {
-    val ex = Extractor.extract("kde://page", html)
-    assert(!ex.failed)
-    if (ex.blocks.isEmpty) return Replay(Nil, Nil, Vector.empty)
-    val words = ex.blocks.indices.map { k =>
-      val b = ex.blocks(k)
-      Word(k, BBox(b.x, b.y, b.w, b.h))
-    }
-    val last = ex.blocks.last
-    val pageW = 960
-    val pageH = math.max(last.y + last.h + 50, 200)
-    val boxes = words.map(_.bbox)
-    val (horizontal, vertical) = Neighbors.findClosestNeighbors(boxes)
-    val x = Kde.kdeEstimateD(horizontal, horizontal = true)
-    val y = Kde.kdeEstimateD(vertical, horizontal = false)
-    val (right, left, top, bottom) = Neighbors.fourDirectionLinks(boxes, x, y)
-    val components = Neighbors.connectedComponents(boxes.length, Seq(right, left, top, bottom))
-    val kept = Paragraphs.ignoreMargins(Paragraphs.envelopes(components, words), pageW, pageH, 0.0, 0.0, 0.0)
-    // a pinp post-pass only resets bottom links, so findClosestParagraphs
-    // over a pass's output is the x_para sample that pass scored
-    val passes =
-      if (kept.length < 3) Nil
-      else {
-        val p1 = Paragraphs.pinp(kept, pageW, pageH, 0.0, 0.0, 0.0, theta = 7)
-        val p2 = Paragraphs.pinp2(p1, pageW, pageH, 0.0, 0.0, 0.0, theta = 10)
-        val p3 = Paragraphs.pinp(p2, pageW, pageH, 0.0, 0.0, 0.0, theta = 7)
-        Seq(p1, p2, p3).filter(_.nonEmpty).map(p => Paragraphs.findClosestParagraphs(p) -> 0.1)
-      }
-    val samples = Seq(horizontal -> math.pow(horizontal.length.toDouble, -1.0 / 5.0), vertical -> 0.1) ++ passes
-    Replay(samples, components, words)
-  }
+  /** The samples a page's mode searches score, with their bandwidth
+    * factors: the x/y thresholds, then each pinp pass's x_para sample (a
+    * post-pass only resets bottom links, so findClosestParagraphs over a
+    * pass's output is the sample that pass scored). */
+  private def samples(r: StageReplay): Seq[(Array[Double], Double)] =
+    Seq(r.horizontal -> math.pow(r.horizontal.length.toDouble, -1.0 / 5.0), r.vertical -> 0.1) ++
+      r.passes.filter(_.nonEmpty).map(p => Paragraphs.findClosestParagraphs(p) -> 0.1)
 
-  /** sf0.01's pages (the board's natural mix) and 40 pages with at least
-    * 200 golden blocks (the benchmark's tail). */
-  private lazy val pages: Vector[Replay] = {
-    val natural = (0L until PagesTable.rowsFor("sf0.01")).map(i => PageGen.pageFull(PagesTable.Seed, i))
-    val tail = Iterator.from(0).map(i => PageGen.pageFull(11L, i.toLong))
-      .filter(_.meta.n_spans >= 200).take(40)
-    (natural.iterator ++ tail).map(g => replay(g.row.html)).toVector
-  }
+  private def pages: Vector[StageReplay] = StageReplay.extractionPages
 
   test("the pruned mode search returns the full scan's index on every extraction sample") {
     var checked = 0
-    for (p <- pages; (sample, factor) <- p.samples) {
+    for (p <- pages; (sample, factor) <- samples(p)) {
       assertSameMode(sample, factor, "extraction sample")
       checked += 1
     }
@@ -227,9 +189,4 @@ class KdeSpec extends AnyFunSuite {
     val components = Seq(Vector(2, 0), Vector(1, 1, 9), Vector(7))
     assert(Paragraphs.envelopes(components, words) == envelopesByWordWalk(components, words))
   }
-}
-
-object KdeSpec {
-  final case class Replay(samples: Seq[(Array[Double], Double)],
-                          components: Seq[Vector[Int]], words: IndexedSeq[Word])
 }

@@ -249,8 +249,12 @@ object StreamingExtraction {
     * extends the session backwards (session_start updates — it is the
     * unique key, so it must reflect the true first event), and one
     * preceding the start by MORE than the gap closes immediately as its
-    * own single-event session (also spec-asserted); timestamps are
-    * compared at
+    * own single-event session (also spec-asserted). The backward
+    * extensions of a batch fold in before any far-late test, latest
+    * event first, so a far-late event that a later in-gap event of the
+    * same batch brings within the gap joins the session as in the batch
+    * op (spec-asserted: gap 50, start 100, batch [30, 60] is one
+    * session); timestamps are compared at
     * millisecond precision here vs the batch op's microseconds —
     * indistinguishable unless two events of one user are < 1 ms apart
     * AND straddle a gap boundary. `session_seq` numbers sessions within a
@@ -287,7 +291,16 @@ object StreamingExtraction {
           val sorted = rows.toVector.sortBy(e => (e.ts.getTime, e.event_id))
           val out = Vector.newBuilder[ClosedSession]
           var cur = state.getOption
-          for (e <- sorted) {
+          // fold the batch's events that precede the open session's start
+          // into it first, latest down, while each lies within the gap of
+          // the start it has moved to: only the events before the first
+          // wider gap reach the far-late branch below
+          val (late, onTime) = sorted.partition(e => cur.exists(e.ts.getTime < _.startMs))
+          val ts = late.map(_.ts.getTime) ++ cur.map(_.startMs)
+          val far = late.indices.lastIndexWhere(i => ts(i + 1) - ts(i) > gapMs) + 1
+          if (far < late.length)
+            cur = cur.map(s => s.copy(startMs = ts(far), n = s.n + late.length - far))
+          for (e <- late.take(far) ++ onTime) {
             val t = e.ts.getTime
             cur = cur match {
               // cross-batch LATE event preceding the open session by more

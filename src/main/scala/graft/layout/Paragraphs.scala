@@ -445,7 +445,10 @@ object Paragraphs {
 
   /** W5-alt: `column_order` — the W3 walk with order incremented only on
     * re-seed, so each chain shares one column id
-    * (reference: column_utils.py:8-26). */
+    * (reference: column_utils.py:8-26). A link to an already-visited
+    * paragraph re-seeds at once: every successor of a visited paragraph
+    * is visited, so the reference's walk on from there changes nothing
+    * until its chain ends and re-seeds — or, on a cycle, never returns. */
   def columnOrder(paras0: IndexedSeq[Para]): Vector[Para] = {
     val paras = ArrayBuffer.from(paras0.map(_.copy(visited = false, order = -1)))
     def minimumEuclidean: Int = {
@@ -459,11 +462,11 @@ object Paragraphs {
     }
     var order = 0
     var minIdx = minimumEuclidean
-    while (paras.exists(!_.visited) && minIdx != -1) {
-      if (!paras(minIdx).visited)
-        paras(minIdx) = paras(minIdx).copy(visited = true, order = order)
+    // minIdx is always unvisited here, and -1 once every paragraph is visited
+    while (minIdx != -1) {
+      paras(minIdx) = paras(minIdx).copy(visited = true, order = order)
       val next = paras(minIdx).bottomBox
-      if (!next.isNone) minIdx = next.id
+      if (!next.isNone && !paras(next.id).visited) minIdx = next.id
       else { minIdx = minimumEuclidean; order += 1 }
     }
     paras.toVector

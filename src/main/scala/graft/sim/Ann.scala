@@ -26,20 +26,76 @@ object Ann {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
+  /** Cosine similarity of two vector columns, norms computed inline. */
+  private def cosine(x: Column, y: Column): Column =
+    dot(x, y) / (sqrt(dot(x, x)) * sqrt(dot(y, y)))
+
+  /** Cosine of a scored pair whose sides carry precomputed norms:
+    * (ea, na) and (eb, nb). */
+  private val pairCosine: Column =
+    dot(col("ea"), col("eb")) / (col("na") * col("nb"))
+
+  /** (vec_id, e): the embedding column widened to doubles. */
+  private[sim] def vectors(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), asDouble(col("embedding")).as("e"))
+
+  /** The query side (a, ea, na) and the neighbour side (b, eb, nb) of the
+    * normalised vectors: the operands of [[pairCosine]]. */
+  private def cosineSides(emb: DataFrame): (DataFrame, DataFrame) = {
+    val v = vectors(emb).withColumn("norm", sqrt(dot(col("e"), col("e"))))
+    (v.select(col("vec_id").as("a"), col("e").as("ea"), col("norm").as("na")),
+      v.select(col("vec_id").as("b"), col("e").as("eb"), col("norm").as("nb")))
+  }
+
+  /** The family's one rank: per query `a`, number its candidates `b` by
+    * `score` desc, `b` asc on ties, into column `rank` and keep ranks
+    * ≤ k. The rank filter compiles to WindowGroupLimit, the partial top-k
+    * below the exchange. */
+  private def rankTop(pairs: DataFrame, score: String, k: Int,
+                      rank: String = "rank"): DataFrame = {
+    val w = Window.partitionBy(col("a")).orderBy(col(score).desc, col("b").asc)
+    pairs.withColumn(rank, row_number().over(w)).filter(col(rank) <= k)
+  }
+
+  /** [[rankTop]] projected to the family's output (vec_id, neighbor_id,
+    * rank), plus the score column when it is integer-exact. */
+  private def topK(pairs: DataFrame, score: String, k: Int,
+                   emitScore: Boolean = false): DataFrame = {
+    val out = Seq(col("a").as("vec_id"), col("b").as("neighbor_id"), col("rank"))
+    rankTop(pairs, score, k).select((if (emitScore) out :+ col(score) else out): _*)
+  }
+
+  /** The family's one probe × home join: probe rows (cell, a, …) meet the
+    * home rows (cellr, b, …) of their cell, self-pairs excluded. It is an
+    * equi-join on the cell id, never a cross join of vectors. */
+  private def cellJoin(probes: DataFrame, home: DataFrame): DataFrame =
+    probes.join(home, col("cell") === col("cellr") && col("a") =!= col("b"))
+
+  /** Cosine [[topK]] of `probes` against the `home` rows of their cells,
+    * both (vec_id, cell, e); a persisted home table's partition column
+    * reads back as int, hence the cast. */
+  private[sim] def cosineTopK(probes: DataFrame, home: DataFrame, k: Int): DataFrame = {
+    val l = probes.select(col("cell"), col("vec_id").as("a"), col("e").as("ea"),
+      sqrt(dot(col("e"), col("e"))).as("na"))
+    val r = home.select(col("cell").cast("long").as("cellr"), col("vec_id").as("b"),
+      col("e").as("eb"), sqrt(dot(col("e"), col("e"))).as("nb"))
+    topK(cellJoin(l, r).withColumn("sim", pairCosine), "sim", k)
+  }
+
+  /** [[topK]] of [[cellJoin]]ed probes (cell, a, qa) and home rows
+    * (cellr, b, rb) by their exact integer dot, emitted as `score`: the
+    * SQ dot or, against PQ reconstructions, the asymmetric (ADC) dot. */
+  private[sim] def intTopK(probes: DataFrame, home: DataFrame, score: String,
+                           k: Int): DataFrame =
+    topK(cellJoin(probes, home).withColumn(score, intDot(col("qa"), col("rb"))), score, k,
+      emitScore = true)
+
   /** Exact cosine top-k: (vec_id, neighbor_id, rank), rank 1..k by
     * similarity desc, neighbor id asc on ties. Similarity itself is not
     * emitted — ranks are FP-order-stable, raw floats are not. */
   def cosineKnn(emb: DataFrame, k: Int): DataFrame = {
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .withColumn("norm", sqrt(dot(col("e"), col("e"))))
-    val l = v.select(col("vec_id").as("a"), col("e").as("ea"), col("norm").as("na"))
-    val r = v.select(col("vec_id").as("b"), col("e").as("eb"), col("norm").as("nb"))
-    val sims = l.join(r, col("a") =!= col("b"))
-      .withColumn("sim", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
-    val w = Window.partitionBy(col("a")).orderBy(col("sim").desc, col("b").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("a").as("vec_id"), col("b").as("neighbor_id"), col("rank"))
+    val (l, r) = cosineSides(emb)
+    topK(l.join(r, col("a") =!= col("b")).withColumn("sim", pairCosine), "sim", k)
   }
 
   /** Deterministic spread centroid sample: vectors whose 60-bit md5 hash
@@ -68,31 +124,45 @@ object Ann {
   def autoCells(n: Long): Int =
     math.max(4, math.min(MaxAutoCells, math.ceil(math.sqrt(n.toDouble)).toInt))
 
-  /** ONE assignment pass: for every vector its `nprobe` nearest centroids
-    * by cosine distance (rank 1 = home cell). Computed once and reused for
-    * both the index side (rn=1) and the probe side (rn≤nprobe) — the
-    * round-1 shape recomputed the broadcast-NL assignment twice.
-    *
-    * The cell count / stride parameters are derived from a 1-row aggregate
-    * folded into the same plan via a broadcast cross join (mirroring the
-    * oracle's `par` CTE) — no separate `emb.count()` action, so a 10⁹-row
-    * table is scanned once, not twice per query. */
-  def ivfAssign(emb: DataFrame, cells: Int = 0, nprobe: Int = 1): DataFrame = {
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("e"))
+  /** The family's one centroid table: the md5-stride sample ([[centroids]])
+    * of `v` (vec_id, e) at ≈`cells` seeds, or [[autoCells]] of the row
+    * count when `cells` ≤ 0: (cell, c). The cell count / stride
+    * parameters are derived from a 1-row aggregate folded into the same
+    * plan via a broadcast cross join (mirroring the oracle's `par` CTE) —
+    * no separate `emb.count()` action, so a 10⁹-row table is scanned
+    * once, not twice per query. */
+  def cellCentroids(v: DataFrame, cells: Int): DataFrame = {
     val cellsCol =
       if (cells > 0) lit(cells.toLong)
       else greatest(lit(4L),
         least(lit(MaxAutoCells.toLong), ceil(sqrt(col("n"))).cast("long")))
     val par = v.agg(count(lit(1)).as("n"))
       .select(greatest(lit(1L), floor(col("n") / cellsCol).cast("long")).as("stride"))
-    val cent = centroids(v.crossJoin(broadcast(par)), col("stride"))
+    centroids(v.crossJoin(broadcast(par)), col("stride"))
+  }
+
+  /** The family's one coarse quantizer: each vector of `v` (vec_id, e)
+    * ranked against the broadcast centroid table `cent` (cell, c) by
+    * cosine distance, cell id asc on ties, keeping its `nprobe` nearest
+    * (rank 1 = home cell): (vec_id, cell, rn, e). The inline plans and
+    * the persisted indexes all assign through it, so an index homes a
+    * vector exactly where the inline plan does. */
+  def rankCells(v: DataFrame, cent: DataFrame, nprobe: Int): DataFrame = {
     val w = Window.partitionBy(col("vec_id")).orderBy(col("d").asc, col("cell").asc)
     v.crossJoin(broadcast(cent))
-      .withColumn("d", dot(col("e"), col("c")) /
-        (sqrt(dot(col("e"), col("e"))) * sqrt(dot(col("c"), col("c")))) * -1)
+      .withColumn("d", cosine(col("e"), col("c")) * -1)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= nprobe)
       .select(col("vec_id"), col("cell"), col("rn"), col("e"))
+  }
+
+  /** ONE assignment pass: for every vector its `nprobe` nearest centroids
+    * by cosine distance (rank 1 = home cell). Computed once and reused for
+    * both the index side (rn=1) and the probe side (rn≤nprobe) — the
+    * round-1 shape recomputed the broadcast-NL assignment twice. */
+  def ivfAssign(emb: DataFrame, cells: Int = 0, nprobe: Int = 1): DataFrame = {
+    val v = vectors(emb)
+    rankCells(v, cellCentroids(v, cells), nprobe)
   }
 
   /** Two-level (coarse → fine) IVF assignment — the scale path PAST the
@@ -113,7 +183,7 @@ object Ann {
   def ivfAssignHierarchical(emb: DataFrame, coarseCells: Int = 64,
                             finePerCoarse: Int = 64, nprobeCoarse: Int = 2,
                             nprobe: Int = 4): DataFrame = {
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("e"))
+    val v = vectors(emb)
     // strides from the folded 1-row aggregate (no separate count action):
     // coarse ≈ n/K1 rows, fine ≈ n/(K1·K2) rows ≈ K2 per coarse cell
     val par = v.agg(count(lit(1)).as("n")).select(
@@ -125,8 +195,7 @@ object Ann {
     val wC = Window.partitionBy(col("vec_id")).orderBy(col("d").asc, col("ccell").asc)
     val coarseAssign = vp
       .crossJoin(broadcast(coarse.select(col("cell").as("ccell"), col("c").as("cc"))))
-      .withColumn("d", dot(col("e"), col("cc")) /
-        (sqrt(dot(col("e"), col("e"))) * sqrt(dot(col("cc"), col("cc")))) * -1)
+      .withColumn("d", cosine(col("e"), col("cc")) * -1)
       .withColumn("rnc", row_number().over(wC))
       .filter(col("rnc") <= nprobeCoarse)
       .select(col("vec_id"), col("e"), col("ccell"), col("rnc"), col("fstride"))
@@ -152,8 +221,7 @@ object Ann {
     val wF = Window.partitionBy(col("vec_id")).orderBy(col("fd").asc, col("fcell").asc)
     coarseAssign
       .join(fine, col("ccell") === col("fccell"))
-      .withColumn("fd", dot(col("e"), col("fc")) /
-        (sqrt(dot(col("e"), col("e"))) * sqrt(dot(col("fc"), col("fc")))) * -1)
+      .withColumn("fd", cosine(col("e"), col("fc")) * -1)
       .withColumn("rn", row_number().over(wF))
       .filter(col("rn") <= nprobe)
       .select(col("vec_id"), col("fcell").as("cell"), col("rn"), col("e"))
@@ -170,17 +238,7 @@ object Ann {
                          nprobe: Int = 4): DataFrame = {
     val assign = graft.util.CacheOnce(ivfAssignHierarchical(emb, coarseCells,
       finePerCoarse, nprobeCoarse, nprobe))
-    val l = assign.select(col("cell"), col("vec_id").as("a"), col("e").as("ea"),
-      sqrt(dot(col("e"), col("e"))).as("na"))
-    val r = assign.filter(col("rn") === 1)
-      .select(col("cell").as("cellr"), col("vec_id").as("b"), col("e").as("eb"),
-        sqrt(dot(col("e"), col("e"))).as("nb"))
-    val sims = l.join(r, col("cell") === col("cellr") && col("a") =!= col("b"))
-      .withColumn("sim", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
-    val w = Window.partitionBy(col("a")).orderBy(col("sim").desc, col("b").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("a").as("vec_id"), col("b").as("neighbor_id"), col("rank"))
+    cosineTopK(assign, assign.filter(col("rn") === 1), k)
   }
 
   /** Approximate top-k, classic IVF shape: the INDEX side holds each
@@ -193,17 +251,7 @@ object Ann {
     * no longer inherit a session-lifetime cache to clear. */
   def ivfKnn(emb: DataFrame, k: Int, cells: Int = 0, nprobe: Int = 4): DataFrame = {
     val assign = graft.util.CacheOnce(ivfAssign(emb, cells, nprobe))
-    val l = assign.select(col("cell"), col("vec_id").as("a"), col("e").as("ea"),
-      sqrt(dot(col("e"), col("e"))).as("na"))
-    val r = assign.filter(col("rn") === 1)
-      .select(col("cell").as("cellr"), col("vec_id").as("b"), col("e").as("eb"),
-        sqrt(dot(col("e"), col("e"))).as("nb"))
-    val sims = l.join(r, col("cell") === col("cellr") && col("a") =!= col("b"))
-      .withColumn("sim", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
-    val w = Window.partitionBy(col("a")).orderBy(col("sim").desc, col("b").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("a").as("vec_id"), col("b").as("neighbor_id"), col("rank"))
+    cosineTopK(assign, assign.filter(col("rn") === 1), k)
   }
 
   /** Signed-random-projection (hyperplane) LSH signature: bit i of the
@@ -265,12 +313,9 @@ object Ann {
           col("l.vec_id") < col("r.vec_id"))
       .select(col("l.vec_id").as("a"), col("r.vec_id").as("b"))
       .distinct()
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .withColumn("norm", sqrt(dot(col("e"), col("e"))))
-    val va = v.select(col("vec_id").as("a"), col("e").as("ea"), col("norm").as("na"))
-    val vb = v.select(col("vec_id").as("b"), col("e").as("eb"), col("norm").as("nb"))
+    val (va, vb) = cosineSides(emb)
     cand.join(va, "a").join(vb, "b")
-      .withColumn("sim", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
+      .withColumn("sim", pairCosine)
       .filter(col("sim") >= threshold)
       .select(col("a"), col("b"))
   }
@@ -335,20 +380,22 @@ object Ann {
     *
     * Same self-releasing assignment cache as [[ivfKnn]]. */
   def sqKnn(emb: DataFrame, k: Int, cells: Int = 0, nprobe: Int = 4): DataFrame = {
+    val qv = sqQuantize(emb)
+    codeKnn(emb, cells, nprobe, qv, qv, "qv", "dot", k)
+  }
+
+  /** Integer-code top-k inside IVF cells ([[sqKnn]], [[pqKnn]]): every
+    * probe carries its SQ codes from `qv`, each home row (rn = 1) the
+    * `code` column of `home`, ranked by [[intTopK]] into `score`. */
+  private def codeKnn(emb: DataFrame, cells: Int, nprobe: Int, qv: DataFrame,
+                      home: DataFrame, code: String, score: String, k: Int): DataFrame = {
     val assign = graft.util.CacheOnce(ivfAssign(emb, cells, nprobe)
       .select(col("vec_id"), col("cell"), col("rn")))
-    val qv = sqQuantize(emb)
     val l = assign.join(qv, "vec_id")
       .select(col("cell"), col("vec_id").as("a"), col("qv").as("qa"))
-    val r = assign.filter(col("rn") === 1).join(qv, "vec_id")
-      .select(col("cell").as("cellr"), col("vec_id").as("b"), col("qv").as("qb"))
-    val w = Window.partitionBy(col("a")).orderBy(col("dot").desc, col("b").asc)
-    l.join(r, col("cell") === col("cellr") && col("a") =!= col("b"))
-      .withColumn("dot", intDot(col("qa"), col("qb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("a").as("vec_id"), col("b").as("neighbor_id"),
-        col("rank"), col("dot"))
+    val r = assign.filter(col("rn") === 1).join(home, "vec_id")
+      .select(col("cell").as("cellr"), col("vec_id").as("b"), col(code).as("rb"))
+    intTopK(l, r, score, k)
   }
 
   /** Deterministic INTEGER-exact k-means (Lloyd) over the SQ code space —
@@ -393,19 +440,8 @@ object Ann {
         .agg(min(struct(col("dist"), col("cluster"))).as("m"))
         .select(col("vec_id"), col("m.cluster").as("cluster"),
           col("m.dist").as("dist"))
-    def update(assigned: DataFrame, prev: DataFrame): DataFrame = {
-      val next = assigned.join(qv, "vec_id")
-        .select(col("cluster"), posexplode(col("qv")).as(Seq("j", "q")))
-        .groupBy("cluster", "j")
-        .agg(expr("sum(q) div count(1)").as("cq"))
-        .groupBy("cluster")
-        .agg(array_sort(collect_list(struct(col("j"), col("cq")))).as("a"))
-        .select(col("cluster"),
-          transform(col("a"), s => s.getField("cq")).as("cv"))
-      prev.select(col("cluster"), col("cv").as("pcv"))
-        .join(next, Seq("cluster"), "left")
-        .select(col("cluster"), coalesce(col("cv"), col("pcv")).as("cv"))
-    }
+    def update(assigned: DataFrame, prev: DataFrame): DataFrame =
+      lloydUpdate(assigned.join(qv, "vec_id"), Seq("cluster"), "qv", prev)
     var cent = init
     var assigned = assign(cent)
     for (_ <- 1 to iters) {
@@ -413,6 +449,24 @@ object Ann {
       assigned = assign(cent)
     }
     assigned
+  }
+
+  /** One integer Lloyd update, shared by [[kmeansAssign]] and
+    * [[pqModelFromCodes]]: each centroid keyed by `keys` becomes the
+    * elementwise floor mean of its members' `vec` codes, and a centroid
+    * that lost every member keeps its `prev` value: (keys…, cv). */
+  private def lloydUpdate(members: DataFrame, keys: Seq[String], vec: String,
+                          prev: DataFrame): DataFrame = {
+    val ks = keys.map(col)
+    val next = members.select(ks :+ posexplode(col(vec)).as(Seq("j", "q")): _*)
+      .groupBy(ks :+ col("j"): _*)
+      .agg(expr("sum(q) div count(1)").as("cq"))
+      .groupBy(ks: _*)
+      .agg(array_sort(collect_list(struct(col("j"), col("cq")))).as("a"))
+      .select(ks :+ transform(col("a"), s => s.getField("cq")).as("cv"): _*)
+    prev.select(ks :+ col("cv").as("pcv"): _*)
+      .join(next, keys, "left")
+      .select(ks :+ coalesce(col("cv"), col("pcv")).as("cv"): _*)
   }
 
   /** Product-quantization codebooks + codes over the SQ code space — the
@@ -440,9 +494,6 @@ object Ann {
               iters: Int = 1): (DataFrame, DataFrame) =
     pqModelFromCodes(graft.util.CacheOnce(sqQuantize(emb)), subspaces, ksub, iters)
 
-  /** [[pqModel]] over an already-quantized (and ideally cached) code
-    * table — lets [[pqKnn]] share ONE quantization pass between codebook
-    * training and the ADC query side. */
   /** Cut each code vector into `subspaces` contiguous subvectors:
     * (vec_id, sub, sv). The subspace id is DATA (explode), so all M
     * codebooks train/encode in one DAG. */
@@ -480,14 +531,18 @@ object Ann {
       .select(col("vec_id"), transform(col("a"), s => s.getField("cluster")).as("code"))
 
   /** PQ reconstruction: per-subspace centroids concatenated in subspace
-    * order — the compressed stand-in ADC ranks against. */
-  def pqReconstruct(codes: DataFrame, book: DataFrame): DataFrame =
+    * order — the compressed stand-in ADC ranks against. `codes` is
+    * (vec_id, sub, cluster, keys…); the output is (vec_id, keys…, rv). */
+  def pqReconstruct(codes: DataFrame, book: DataFrame, keys: String*): DataFrame =
     codes.join(broadcast(book), Seq("sub", "cluster"))
-      .groupBy("vec_id")
+      .groupBy("vec_id", keys: _*)
       .agg(array_sort(collect_list(struct(col("sub"), col("cv")))).as("a"))
-      .select(col("vec_id"),
-        flatten(transform(col("a"), s => s.getField("cv"))).as("rv"))
+      .select((col("vec_id") +: keys.map(col)) :+
+        flatten(transform(col("a"), s => s.getField("cv"))).as("rv"): _*)
 
+  /** [[pqModel]] over an already-quantized (and ideally cached) code
+    * table — lets [[pqKnn]] share ONE quantization pass between codebook
+    * training and the ADC query side. */
   def pqModelFromCodes(qv: DataFrame, subspaces: Int, ksub: Int,
                        iters: Int): (DataFrame, DataFrame) = {
     val sv = pqSubvectors(qv, subspaces)
@@ -498,19 +553,8 @@ object Ann {
         concat(lit("pq:"), col("vec_id").cast("string"))), col("stride")) === 0)
       .select(col("sub"), col("vec_id").as("cluster"), col("sv").as("cv"))
     def assign(cent: DataFrame): DataFrame = pqAssignSub(sv, cent)
-    def update(assigned: DataFrame, prev: DataFrame): DataFrame = {
-      val next = assigned.join(sv, Seq("vec_id", "sub"))
-        .select(col("sub"), col("cluster"), posexplode(col("sv")).as(Seq("j", "x")))
-        .groupBy("sub", "cluster", "j")
-        .agg(expr("sum(x) div count(1)").as("cq"))
-        .groupBy("sub", "cluster")
-        .agg(array_sort(collect_list(struct(col("j"), col("cq")))).as("a"))
-        .select(col("sub"), col("cluster"),
-          transform(col("a"), s => s.getField("cq")).as("cv"))
-      prev.select(col("sub"), col("cluster"), col("cv").as("pcv"))
-        .join(next, Seq("sub", "cluster"), "left")
-        .select(col("sub"), col("cluster"), coalesce(col("cv"), col("pcv")).as("cv"))
-    }
+    def update(assigned: DataFrame, prev: DataFrame): DataFrame =
+      lloydUpdate(assigned.join(sv, Seq("vec_id", "sub")), Seq("sub", "cluster"), "sv", prev)
     var cent = init
     for (_ <- 1 to iters) cent = update(assign(cent), cent)
     (assign(cent), cent)
@@ -539,20 +583,7 @@ object Ann {
             iters: Int = 1, cells: Int = 0, nprobe: Int = 4): DataFrame = {
     val qv = graft.util.CacheOnce(sqQuantize(emb))
     val (codes, book) = pqModelFromCodes(qv, subspaces, ksub, iters)
-    val recon = pqReconstruct(codes, book)
-    val assign = graft.util.CacheOnce(ivfAssign(emb, cells, nprobe)
-      .select(col("vec_id"), col("cell"), col("rn")))
-    val l = assign.join(qv, "vec_id")
-      .select(col("cell"), col("vec_id").as("a"), col("qv").as("qa"))
-    val r = assign.filter(col("rn") === 1).join(recon, "vec_id")
-      .select(col("cell").as("cellr"), col("vec_id").as("b"), col("rv").as("rb"))
-    val w = Window.partitionBy(col("a")).orderBy(col("adot").desc, col("b").asc)
-    l.join(r, col("cell") === col("cellr") && col("a") =!= col("b"))
-      .withColumn("adot", intDot(col("qa"), col("rb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("a").as("vec_id"), col("b").as("neighbor_id"),
-        col("rank"), col("adot"))
+    codeKnn(emb, cells, nprobe, qv, pqReconstruct(codes, book), "rv", "adot", k)
   }
 
   /** Two-stage retrieval (the production ANN deployment shape): a cheap
@@ -572,16 +603,8 @@ object Ann {
                   cells: Int = 0, nprobe: Int = 4): DataFrame = {
     val cand = pqKnn(emb, shortlist, subspaces, ksub, iters, cells, nprobe)
       .select(col("vec_id").as("a"), col("neighbor_id").as("b"))
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .withColumn("norm", sqrt(dot(col("e"), col("e"))))
-    val va = v.select(col("vec_id").as("a"), col("e").as("ea"), col("norm").as("na"))
-    val vb = v.select(col("vec_id").as("b"), col("e").as("eb"), col("norm").as("nb"))
-    val w = Window.partitionBy(col("a")).orderBy(col("sim").desc, col("b").asc)
-    cand.join(va, "a").join(vb, "b")
-      .withColumn("sim", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("a").as("vec_id"), col("b").as("neighbor_id"), col("rank"))
+    val (va, vb) = cosineSides(emb)
+    topK(cand.join(va, "a").join(vb, "b").withColumn("sim", pairCosine), "sim", k)
   }
 
   /** Matryoshka-style two-stage retrieval (Kusupati et al. 2022 MRL /
@@ -611,21 +634,10 @@ object Ann {
     val home = assign.filter(col("rn") === 1)
       .select(col("vec_id").as("b"), col("cell").as("cellr"), col("e").as("eb"))
     def prefix(c: Column): Column = slice(c, 1, dPrefix)
-    val wS = Window.partitionBy(col("a")).orderBy(col("psim").desc, col("b").asc)
-    val short = probes
-      .join(home, col("cell") === col("cellr") && col("a") =!= col("b"))
-      .withColumn("psim", dot(prefix(col("ea")), prefix(col("eb"))) /
-        (sqrt(dot(prefix(col("ea")), prefix(col("ea")))) *
-          sqrt(dot(prefix(col("eb")), prefix(col("eb"))))))
-      .withColumn("rs", row_number().over(wS))
-      .filter(col("rs") <= shortlist)
-    val wK = Window.partitionBy(col("a")).orderBy(col("sim").desc, col("b").asc)
-    short
-      .withColumn("sim", dot(col("ea"), col("eb")) /
-        (sqrt(dot(col("ea"), col("ea"))) * sqrt(dot(col("eb"), col("eb")))))
-      .withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= k)
-      .select(col("a").as("vec_id"), col("b").as("neighbor_id"), col("rank"))
+    val short = rankTop(cellJoin(probes, home)
+        .withColumn("psim", cosine(prefix(col("ea")), prefix(col("eb")))),
+      "psim", shortlist, rank = "rs")
+    topK(short.withColumn("sim", cosine(col("ea"), col("eb"))), "sim", k)
   }
 
   /** Cluster-balanced subsample — the diversity-sampling stage that turns
@@ -680,7 +692,7 @@ object Ann {
   def semDedup(emb: DataFrame, tau: Double = 0.42, k: Int = 8,
                iters: Int = 2): DataFrame = {
     val assigned = graft.util.CacheOnce(kmeansAssign(emb, k, iters))
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("e"))
+    val v = vectors(emb)
     val w = Window.partitionBy("cluster")
       .orderBy(col("dist").desc, col("vec_id").asc)
     val rk = assigned.join(v, "vec_id")
@@ -692,7 +704,7 @@ object Ann {
       col("e").as("eb"), col("norm").as("nb"))
     val removed = l
       .join(r, col("cluster") === col("clr") && col("rnr") < col("rn"))
-      .withColumn("sim", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
+      .withColumn("sim", pairCosine)
       .filter(col("sim") > tau)
       .select(col("vec_id")).distinct()
       .withColumn("rm", lit(1))
@@ -709,7 +721,7 @@ object Ann {
     val l = assigned.select(col("cell"), col("vec_id").as("a"), col("e").as("ea"), col("norm").as("na"))
     val rr = assigned.select(col("cell").as("cellr"), col("vec_id").as("b"), col("e").as("eb"), col("norm").as("nb"))
     l.join(rr, col("cell") === col("cellr") && col("a") < col("b"))
-      .withColumn("sim", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
+      .withColumn("sim", pairCosine)
       .filter(col("sim") >= threshold)
       .select(col("a"), col("b"))
   }

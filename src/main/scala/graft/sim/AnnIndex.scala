@@ -1,7 +1,6 @@
 package graft.sim
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.io.TableIO
@@ -24,8 +23,9 @@ import graft.io.TableIO
   * all of it.
   *
   * Determinism: centroids, assignment ranking and tie-breaks are the
-  * exact expressions of [[Ann.ivfAssign]] (md5-60 "c:" stride seeds,
-  * cosine desc, cell-id asc), and doubles round-trip parquet exactly —
+  * shared [[Ann.cellCentroids]] (md5-60 "c:" stride seeds) and
+  * [[Ann.rankCells]] (cosine desc, cell-id asc), and the neighbour rank
+  * is the shared [[Ann.cosineTopK]]; doubles round-trip parquet exactly —
   * so a self-query of the indexed corpus is bit-identical to the inline
   * [[Ann.ivfKnn]], which is how the driver oracle checks it (the e14
   * query replays e2's SQL).
@@ -47,18 +47,11 @@ object AnnIndex {
     val home = Ann.ivfAssign(emb, cells, nprobe = 1)
       .select(col("vec_id"), col("e"), col("cell"))
     io.overwrite(home, io.resolve(root, "vectors"), partitionCols = Seq("cell"))
-    // centroid re-derivation from the persisted narrow table: identical
-    // stride arithmetic to Ann.ivfAssign over the identical id set
+    // centroid re-derivation from the persisted narrow table: the same
+    // Ann.cellCentroids over the identical id set
     val v = io.read(spark, io.resolve(root, "vectors"))
       .select(col("vec_id"), col("e"))
-    val cellsCol =
-      if (cells > 0) lit(cells.toLong)
-      else greatest(lit(4L),
-        least(lit(Ann.MaxAutoCells.toLong), ceil(sqrt(col("n"))).cast("long")))
-    val par = v.agg(count(lit(1)).as("n"))
-      .select(greatest(lit(1L), floor(col("n") / cellsCol).cast("long")).as("stride"))
-    val cent = Ann.centroids(v.crossJoin(broadcast(par)), col("stride"))
-    io.overwrite(cent.select(col("cell"), col("c")), io.resolve(root, "centroids"))
+    io.overwrite(Ann.cellCentroids(v, cells), io.resolve(root, "centroids"))
   }
 
   /** Incremental ingest: assign `newVecs` (vec_id, embedding) to the
@@ -71,25 +64,20 @@ object AnnIndex {
     * the data distribution as appends accumulate — the standard serving
     * trade — and the next [[build]] re-trains; recall for appended
     * vectors is the same nprobe/cells contract as for resident ones
-    * because home assignment uses the identical expression
-    * ([[Ann.ivfAssign]]'s cosine-desc, cell-asc tie-break) against the
+    * because home assignment is the same [[Ann.rankCells]] against the
     * same frozen centroid table. Batch-split invariant: appending one
     * batch or the same rows in any split yields byte-identical tables
-    * (per-row assignment against a constant centroid set). */
+    * (per-row assignment against a constant centroid set). Idempotent
+    * ([[appendNew]]): a retried batch appends nothing. Re-appending an
+    * indexed id with a CHANGED embedding is out of scope — the resident
+    * row wins if the new one homes to the same cell, and both stay if it
+    * homes elsewhere; rebuild to replace vectors. */
   def append(spark: SparkSession, io: TableIO, root: String,
              newVecs: DataFrame): Unit = {
-    val cent = broadcast(io.read(spark, io.resolve(root, "centroids"))
-      .select(col("cell").cast("long").as("cell"), col("c")))
-    val v = newVecs.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("e"))
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("d").asc, col("cell").asc)
-    val home = v.crossJoin(cent)
-      .withColumn("d", Ann.dot(col("e"), col("c")) /
-        (sqrt(Ann.dot(col("e"), col("e"))) * sqrt(Ann.dot(col("c"), col("c")))) * -1)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val home = Ann.rankCells(Ann.vectors(newVecs), readCentroids(spark, io, root),
+        nprobe = 1)
       .select(col("vec_id"), col("e"), col("cell"))
-    io.append(home, io.resolve(root, "vectors"), partitionCols = Seq("cell"))
+    appendNew(spark, io, io.resolve(root, "vectors"), home)
   }
 
   /** Top-k cosine neighbours of `queries` (vec_id, embedding) from the
@@ -101,27 +89,38 @@ object AnnIndex {
     * matches itself. */
   def query(spark: SparkSession, io: TableIO, root: String,
             queries: DataFrame, k: Int, nprobe: Int = 4): DataFrame = {
-    val cent = broadcast(io.read(spark, io.resolve(root, "centroids"))
-      .select(col("cell").cast("long").as("cell"), col("c")))
-    val q = queries.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("e"))
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("d").asc, col("cell").asc)
-    val probes = q.crossJoin(cent)
-      .withColumn("d", Ann.dot(col("e"), col("c")) /
-        (sqrt(Ann.dot(col("e"), col("e"))) * sqrt(Ann.dot(col("c"), col("c")))) * -1)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("a"), col("cell"), col("e").as("ea"),
-        sqrt(Ann.dot(col("e"), col("e"))).as("na"))
-    val vecs = io.read(spark, io.resolve(root, "vectors"))
-      .select(col("cell").cast("long").as("cellr"), col("vec_id").as("b"),
-        col("e").as("eb"), sqrt(Ann.dot(col("e"), col("e"))).as("nb"))
-    val sims = probes
-      .join(vecs, col("cell") === col("cellr") && col("a") =!= col("b"))
-      .withColumn("sim", Ann.dot(col("ea"), col("eb")) / (col("na") * col("nb")))
-    val rk = Window.partitionBy(col("a")).orderBy(col("sim").desc, col("b").asc)
-    sims.withColumn("rank", row_number().over(rk))
-      .filter(col("rank") <= k)
-      .select(col("a").as("vec_id"), col("b").as("neighbor_id"), col("rank"))
+    val probes = Ann.rankCells(Ann.vectors(queries), readCentroids(spark, io, root),
+      nprobe)
+    Ann.cosineTopK(probes, io.read(spark, io.resolve(root, "vectors")), k)
+  }
+
+  /** The frozen centroid table (cell, c) of the index at `root`. */
+  private[sim] def readCentroids(spark: SparkSession, io: TableIO,
+                                 root: String): DataFrame =
+    io.read(spark, io.resolve(root, "centroids"))
+      .select(col("cell").cast("long").as("cell"), col("c"))
+
+  /** (vec_id, cellr, extra…) of the cell-partitioned `table`, restricted
+    * to the cells listed in `cells` (cellr). The semi-join sits directly
+    * over the scan on its partition column, so dynamic partition pruning
+    * reads only those cells. */
+  private[sim] def readCells(spark: SparkSession, io: TableIO, table: String,
+                             cells: DataFrame, extra: String*): DataFrame =
+    io.read(spark, table)
+      .select((col("vec_id") +: col("cell").cast("long").as("cellr") +:
+        extra.map(col)): _*)
+      .join(cells, Seq("cellr"), "left_semi")
+
+  /** Append the homed batch `rows` (vec_id, …, cell) to the
+    * cell-partitioned `table`, minus the ids already resident in the
+    * cells the batch homes to ([[readCells]], the pruned read
+    * [[PqIndex.query]] does). A retried batch homes to the same frozen
+    * cells, so it appends nothing. */
+  private[sim] def appendNew(spark: SparkSession, io: TableIO, table: String,
+                             rows: DataFrame): Unit = {
+    val resident = readCells(spark, io, table,
+      rows.select(col("cell").as("cellr")).distinct())
+    io.append(rows.join(resident.select(col("vec_id")), Seq("vec_id"), "left_anti"),
+      table, partitionCols = Seq("cell"))
   }
 }

@@ -1,7 +1,6 @@
 package graft.sim
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.io.TableIO
@@ -24,10 +23,13 @@ import graft.io.TableIO
   * partition pruning, the e14 contract) — query cost scales with
   * `nprobe/cells` of the COMPRESSED corpus, with zero training flops.
   *
-  * Determinism: every expression (range derivation, "pq:"-salted Lloyd
-  * seeding, integer-L2 cluster-asc encoding, cosine-desc cell-asc
-  * centroid ranking, ADC desc/id-asc ranking) is the exact expression of
-  * the inline [[Ann.pqKnn]] chain, and doubles/longs round-trip parquet
+  * Determinism: every stage is the def the inline [[Ann.pqKnn]] chain
+  * calls — range derivation ([[Ann.sqRange]]), "pq:"-salted Lloyd
+  * seeding and integer-L2 cluster-asc encoding ([[Ann.pqModelFromCodes]],
+  * [[Ann.pqAssignSub]]), the centroid sample ([[Ann.cellCentroids]]),
+  * cosine-desc cell-asc centroid ranking ([[Ann.rankCells]]), the
+  * reconstruction ([[Ann.pqReconstruct]]) and the ADC desc/id-asc rank
+  * ([[Ann.intTopK]]) — and doubles/longs round-trip parquet
   * exactly — so a self-query of the indexed build corpus is
   * bit-identical to inline [[Ann.pqKnn]], which is how the driver oracle
   * checks the persisted model (e18 replays e12's SQL).
@@ -38,26 +40,6 @@ import graft.io.TableIO
   * code array<long>, partition col cell).
   */
 object PqIndex {
-
-  private def floatVecs(df: DataFrame): DataFrame =
-    df.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-
-  /** Rank each vector's `nprobe` nearest centroids — the one centroid-
-    * ranking expression of the whole Ann family ([[Ann.ivfAssign]]'s
-    * cosine desc, cell-id asc): (vec_id, cell, rn, e). */
-  private def assignCells(v: DataFrame, cent: DataFrame, nprobe: Int): DataFrame = {
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("d").asc, col("cell").asc)
-    v.crossJoin(broadcast(cent))
-      .withColumn("d", Ann.dot(col("e"), col("c")) /
-        (sqrt(Ann.dot(col("e"), col("e"))) * sqrt(Ann.dot(col("c"), col("c")))) * -1)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id"), col("cell"), col("rn"), col("e"))
-  }
-
-  private def readCentroids(spark: SparkSession, io: TableIO, root: String) =
-    io.read(spark, io.resolve(root, "centroids"))
-      .select(col("cell").cast("long").as("cell"), col("c"))
 
   /** Train and persist the full model + compressed corpus. Overwrites any
     * previous index at `root`. The quantized table is persisted for the
@@ -75,30 +57,16 @@ object PqIndex {
       io.overwrite(book, io.resolve(root, "codebook"))
       val bookP = broadcast(io.read(spark, io.resolve(root, "codebook")))
 
-      // IVF centroids: identical stride derivation to Ann.ivfAssign over
-      // the identical id set, persisted so append/query rank against the
+      // IVF centroids: the inline plan's Ann.cellCentroids over the
+      // identical id set, persisted so append/query rank against the
       // frozen table
-      val v = floatVecs(emb)
-      val cellsCol =
-        if (cells > 0) lit(cells.toLong)
-        else greatest(lit(4L),
-          least(lit(Ann.MaxAutoCells.toLong), ceil(sqrt(col("n"))).cast("long")))
-      val par = v.agg(count(lit(1)).as("n"))
-        .select(greatest(lit(1L), floor(col("n") / cellsCol).cast("long")).as("stride"))
-      io.overwrite(
-        Ann.centroids(v.crossJoin(broadcast(par)), col("stride"))
-          .select(col("cell"), col("c")),
-        io.resolve(root, "centroids"))
-      val cent = broadcast(readCentroids(spark, io, root))
+      val v = Ann.vectors(emb)
+      io.overwrite(Ann.cellCentroids(v, cells), io.resolve(root, "centroids"))
 
       // packed codes (encoded against the READ-BACK frozen book — the
       // same discipline append uses) partitioned by home cell
-      val home = assignCells(v, cent, nprobe = 1)
-        .select(col("vec_id"), col("cell"))
-      val packed = Ann.pqPack(Ann.pqEncode(qv, bookP, subspaces))
-        .join(home, "vec_id")
-        .select(col("vec_id"), col("code"), col("cell"))
-      io.overwrite(packed, io.resolve(root, "codes"), partitionCols = Seq("cell"))
+      io.overwrite(packedHome(qv, bookP, v, AnnIndex.readCentroids(spark, io, root),
+        subspaces), io.resolve(root, "codes"), partitionCols = Seq("cell"))
     } finally qv.unpersist()
   }
 
@@ -108,21 +76,18 @@ object PqIndex {
     * to the cell-partitioned codes table — cost scales with the batch,
     * never the corpus. Batch-split invariant like [[AnnIndex.append]]:
     * per-row arithmetic against constant tables, so any split of the same
-    * rows yields an identical codes table. Ranges/codebook/centroids
-    * drift from the growing corpus until the next [[build]] retrains —
-    * the standard serving trade. */
+    * rows yields an identical codes table. Idempotent through the same
+    * [[AnnIndex.appendNew]]: a retried batch appends nothing. Re-appending
+    * an indexed id with a CHANGED embedding is out of scope (rebuild to
+    * replace vectors). Ranges/codebook/centroids drift from the growing
+    * corpus until the next [[build]] retrains — the standard serving
+    * trade. */
   def append(spark: SparkSession, io: TableIO, root: String,
              newVecs: DataFrame, subspaces: Int = 8): Unit = {
-    val rng = broadcast(io.read(spark, io.resolve(root, "sq_range")))
-    val book = broadcast(io.read(spark, io.resolve(root, "codebook")))
-    val cent = broadcast(readCentroids(spark, io, root))
-    val qv = Ann.sqQuantizeWith(newVecs, rng)
-    val home = assignCells(floatVecs(newVecs), cent, nprobe = 1)
-      .select(col("vec_id"), col("cell"))
-    val packed = Ann.pqPack(Ann.pqEncode(qv, book, subspaces))
-      .join(home, "vec_id")
-      .select(col("vec_id"), col("code"), col("cell"))
-    io.append(packed, io.resolve(root, "codes"), partitionCols = Seq("cell"))
+    val (rng, book, cent) = frozen(spark, io, root)
+    AnnIndex.appendNew(spark, io, io.resolve(root, "codes"),
+      packedHome(Ann.sqQuantizeWith(newVecs, rng), book, Ann.vectors(newVecs), cent,
+        subspaces))
   }
 
   /** ADC top-k of `queries` (vec_id, embedding) against the persisted
@@ -135,11 +100,9 @@ object PqIndex {
     * ties, self-matches excluded. */
   def query(spark: SparkSession, io: TableIO, root: String,
             queries: DataFrame, k: Int, nprobe: Int = 4): DataFrame = {
-    val rng = broadcast(io.read(spark, io.resolve(root, "sq_range")))
-    val cent = broadcast(readCentroids(spark, io, root))
-    val book = broadcast(io.read(spark, io.resolve(root, "codebook")))
+    val (rng, book, cent) = frozen(spark, io, root)
     val qv = Ann.sqQuantizeWith(queries, rng)
-    val probes = assignCells(floatVecs(queries), cent, nprobe)
+    val probes = Ann.rankCells(Ann.vectors(queries), cent, nprobe)
       .select(col("vec_id"), col("cell"))
       .join(qv, "vec_id")
       .select(col("cell"), col("vec_id").as("a"), col("qv").as("qa"))
@@ -148,22 +111,26 @@ object PqIndex {
     // restricts the read to the probed cells; each surviving vector then
     // reconstructs ONCE (not once per matching query)
     val probedCells = probes.select(col("cell").as("cellr")).distinct()
-    val cand0 = io.read(spark, io.resolve(root, "codes"))
-      .select(col("vec_id"), col("cell").cast("long").as("cellr"), col("code"))
-      .join(probedCells, Seq("cellr"), "left_semi")
-    val recon = cand0
+    val codes = AnnIndex.readCells(spark, io, io.resolve(root, "codes"), probedCells, "code")
       .select(col("vec_id"), col("cellr"), posexplode(col("code")).as(Seq("sub", "cluster")))
-      .join(broadcast(book), Seq("sub", "cluster"))
-      .groupBy("vec_id", "cellr")
-      .agg(array_sort(collect_list(struct(col("sub"), col("cv")))).as("a0"))
-      .select(col("cellr"), col("vec_id").as("b"),
-        flatten(transform(col("a0"), s => s.getField("cv"))).as("rb"))
-    val w = Window.partitionBy(col("a")).orderBy(col("adot").desc, col("b").asc)
-    probes.join(recon, col("cell") === col("cellr") && col("a") =!= col("b"))
-      .withColumn("adot", Ann.intDot(col("qa"), col("rb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("a").as("vec_id"), col("b").as("neighbor_id"),
-        col("rank"), col("adot"))
+    val recon = Ann.pqReconstruct(codes, book, "cellr")
+      .select(col("cellr"), col("vec_id").as("b"), col("rv").as("rb"))
+    Ann.intTopK(probes, recon, "adot", k)
   }
+
+  /** The frozen model at `root`: ranges and codebook (broadcast), centroids. */
+  private def frozen(spark: SparkSession, io: TableIO, root: String) =
+    (broadcast(io.read(spark, io.resolve(root, "sq_range"))),
+      broadcast(io.read(spark, io.resolve(root, "codebook"))),
+      AnnIndex.readCentroids(spark, io, root))
+
+  /** The codes-table rows of `qv`'s vectors: PQ codes packed against the
+    * frozen `book`, each homed by [[Ann.rankCells]] against `cent` —
+    * (vec_id, code, cell). Build and append both write through it. */
+  private def packedHome(qv: DataFrame, book: DataFrame, v: DataFrame,
+                         cent: DataFrame, subspaces: Int): DataFrame =
+    Ann.pqPack(Ann.pqEncode(qv, book, subspaces))
+      .join(Ann.rankCells(v, cent, nprobe = 1).select(col("vec_id"), col("cell")),
+        "vec_id")
+      .select(col("vec_id"), col("code"), col("cell"))
 }

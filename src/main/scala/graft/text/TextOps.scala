@@ -402,30 +402,17 @@ object TextOps {
     * and the gram-keyed join of [[crossDupCoverage]] — all partial-
     * aggregated equi-joins, nothing quadratic. */
   def tierAssign(docs: DataFrame): DataFrame = {
-    val w = tokens(col("text"))
-    val wl = tokens(lower(col("text")))
+    val (nTok, nDist, stops) = tierSignals(col("text"))
     val base = docs.select(col("doc_id"), md5(col("text")).as("h"),
-      size(w).as("n_tokens"),
-      size(array_distinct(w)).as("n_distinct"),
-      // membership via isin → an InSet over the literal list: O(1) per
-      // token, and nothing for the lambda to rebuild per element (an
-      // array(...) literal constructed inside the lambda is re-created at
-      // EVERY token — the same higher-order-function non-hoisting trap as
-      // the gram explosion, compounded by tierAssign's multi-branch DAG)
-      size(filter(wl, t => t.isin(stopwords: _*)))
-        .as("stop_tokens"))
+      nTok.as("n_tokens"), nDist.as("n_distinct"), stops.as("stop_tokens"))
     val keep = base.groupBy("h").agg(min(col("doc_id")).as("keep_id"))
     val cov = crossDupCoverage(docs)
     val joined = base.join(keep, "h").join(cov, "doc_id")
-    val short = col("n_tokens") < 20
+    val (short, lowDistinct, noStops, high) =
+      docRules(col("n_tokens"), col("n_distinct"), col("stop_tokens"))
     val loser = col("doc_id") =!= col("keep_id")
     val cov50 = col("dup_positions") * 2 >= col("n_positions")
-    val lowDistinct = col("n_distinct") * 10 < col("n_tokens") * 4
-    val noStops = col("stop_tokens") === 0
     val cov20 = col("dup_positions") * 5 >= col("n_positions")
-    val high = col("stop_tokens") * 20 >= col("n_tokens") &&
-      col("n_distinct") * 2 >= col("n_tokens") && col("n_tokens") >= 40
-    def bit(c: Column, b: Int) = when(c, lit(1L << b)).otherwise(lit(0L))
     joined.select(col("doc_id"),
       when(short || loser || cov50, 0)
         .when(lowDistinct || noStops || cov20, 1)
@@ -434,6 +421,28 @@ object TextOps {
       (bit(short, 0) + bit(loser, 1) + bit(cov50, 2) + bit(lowDistinct, 3) +
         bit(noStops, 4) + bit(cov20, 5) + bit(high, 6)).as("reasons"))
   }
+
+  /** The per-doc tier signals of `text`: token count, distinct-token
+    * count and stopword-token count. */
+  private def tierSignals(text: Column): (Column, Column, Column) = {
+    val w = tokens(text)
+    val wl = tokens(lower(text))
+    // membership via isin → an InSet over the literal list: O(1) per
+    // token, and nothing for the lambda to rebuild per element (an
+    // array(...) literal constructed inside the lambda is re-created at
+    // EVERY token — the same higher-order-function non-hoisting trap as
+    // the gram explosion, compounded by tierAssign's multi-branch DAG)
+    (size(w), size(array_distinct(w)), size(filter(wl, t => t.isin(stopwords: _*))))
+  }
+
+  /** The four per-doc tier rules over the [[tierSignals]]: short,
+    * low-distinct, no-stopwords and the high conjunction. */
+  private def docRules(nTok: Column, nDist: Column,
+                       stops: Column): (Column, Column, Column, Column) =
+    (nTok < 20, nDist * 10 < nTok * 4, stops === 0,
+      stops * 20 >= nTok && nDist * 2 >= nTok && nTok >= 40)
+
+  private def bit(c: Column, b: Int): Column = when(c, lit(1L << b)).otherwise(lit(0L))
 
   /** The corpus-state-free subset of the tier rules ([[tierAssign]] bits
     * 0 short, 3 low-distinct, 4 no-stopwords, 6 high-conjunction) as a
@@ -446,16 +455,8 @@ object TextOps {
     * ingest-side early-reject stage needs to be safe
     * (`TextOpsSpec` asserts the bound corpus-wide). */
   def preTierCols(text: Column): Seq[Column] = {
-    val w = tokens(text)
-    val wl = tokens(lower(text))
-    val nTok = size(w)
-    val nDist = size(array_distinct(w))
-    val stops = size(filter(wl, t => t.isin(stopwords: _*)))
-    val short = nTok < 20
-    val lowDistinct = nDist * 10 < nTok * 4
-    val noStops = stops === 0
-    val high = stops * 20 >= nTok && nDist * 2 >= nTok && nTok >= 40
-    def bit(c: Column, b: Int) = when(c, lit(1L << b)).otherwise(lit(0L))
+    val (nTok, nDist, stops) = tierSignals(text)
+    val (short, lowDistinct, noStops, high) = docRules(nTok, nDist, stops)
     Seq(
       when(short, 0).when(lowDistinct || noStops, 1)
         .when(high, 3).otherwise(2).as("pre_tier"),

@@ -61,8 +61,16 @@ class PlanAuditSpec extends AnyFunSuite with SparkSuite {
     // the cells/stride parameters fold into the SAME plan (a 1-row
     // aggregate under a broadcast nested loop), so building the DataFrame
     // triggers no count() job on the driver
-    assert(p.contains("WindowGroupLimit") || p.contains("Window"),
-      "top-k must rank within cells, not collect")
+    assert(p.contains("WindowGroupLimit"),
+      s"top-k must push the partial rank below the exchange:\n$p")
+  }
+
+  test("e1 exact and e13 PQ re-rank: top-k compiles to WindowGroupLimit") {
+    for (q <- Seq("e1_knn_exact", "e13_pq_rerank")) {
+      val p = plan(q)
+      assert(p.contains("WindowGroupLimit"),
+        s"$q top-k must push the partial rank below the exchange:\n$p")
+    }
   }
 
   test("IVF centroid broadcast stays bounded by the cell cap") {
@@ -247,8 +255,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkSuite {
       s"the KB-scale codebook and centroid tables must broadcast:\n$p")
     assert(p.contains("SortMergeJoin") || p.contains("BroadcastHashJoin"),
       s"candidates must meet via the IVF cell equi-join:\n$p")
-    assert(p.contains("WindowGroupLimit") || p.contains("Window"),
-      "ADC top-k must rank within cells")
+    assert(p.contains("WindowGroupLimit"),
+      s"ADC top-k must push the partial rank below the exchange:\n$p")
     // codebook training must be the map-side-combinable min(struct(dist,
     // cluster)) shape, never a window over n·ksub rows
     assert(p.contains("min(m") || p.contains("partial_min") || p.contains("min(struct"),
@@ -262,8 +270,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkSuite {
       s"the dim-row range table and centroids must broadcast:\n$p")
     assert(p.contains("SortMergeJoin") || p.contains("BroadcastHashJoin"),
       s"quantized candidates must meet via the cell equi-join:\n$p")
-    assert(p.contains("WindowGroupLimit") || p.contains("Window"),
-      "top-k must rank within cells")
+    assert(p.contains("WindowGroupLimit"),
+      s"top-k must push the partial rank below the exchange:\n$p")
   }
 
   test("x9 page tiers: extraction feeds tier rules via equi-joins, no cartesian") {

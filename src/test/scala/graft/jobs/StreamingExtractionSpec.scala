@@ -366,6 +366,52 @@ class StreamingExtractionSpec extends AnyFunSuite with SparkSuite {
     assert(batchSessions == expected, s"stream/batch disagreement: batch=$batchSessions")
   }
 
+  test("streaming sessionization: a batch's in-gap late events extend the start before the far-late test") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+
+    def at(minute: Int) = java.sql.Timestamp.valueOf(
+      java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusMinutes(minute.toLong))
+    val source = MemoryStream[SessionEvent]
+    val q = StreamingExtraction.sessionizedEvents(spark, source.toDF(),
+        gapMinutes = 50, lateMinutes = 100)
+      .writeStream.format("memory").queryName("sess_fold_out")
+      .outputMode("append").start()
+
+    // u1 opens at minute 100; the next batch brings minutes 30 and 60:
+    // 60 is within the gap of 100 and moves the start to 60, which puts
+    // 30 within the gap too — one session, as the batch op has it
+    source.addData(SessionEvent(1, at(100), 1))
+    q.processAllAvailable()
+    source.addData(SessionEvent(1, at(30), 2), SessionEvent(1, at(60), 3))
+    q.processAllAvailable()
+    // u2 pushes the watermark past u1's end + gap so its session closes
+    source.addData(SessionEvent(2, at(360), 4))
+    q.processAllAvailable()
+    source.addData(SessionEvent(2, at(720), 5))
+    q.processAllAvailable()
+    q.stop()
+
+    val got = spark.sql(
+        "SELECT user_id, session_start, session_end, n_events FROM sess_fold_out WHERE user_id = 1")
+      .as[(Long, java.sql.Timestamp, java.sql.Timestamp, Long)]
+      .collect().map(r => (r._1, r._2.toString, r._3.toString, r._4)).toSet
+    val all = Seq((1L, at(100), 1L), (1L, at(30), 2L), (1L, at(60), 3L))
+      .map { case (u, t, e) => (e, t, u) }
+      .toDF("event_id", "ts", "user_id")
+    import org.apache.spark.sql.functions._
+    val batchSessions = graft.rel.EventOps.sessionize(all, gapMinutes = 50)
+      .join(all, Seq("user_id", "event_id"))
+      .groupBy("user_id", "session_seq")
+      .agg(min("ts").as("a"), max("ts").as("b"), count(lit(1)).as("n"))
+      .as[(Long, Long, java.sql.Timestamp, java.sql.Timestamp, Long)]
+      .collect().map(r => (r._1, r._3.toString, r._4.toString, r._5)).toSet
+    assert(batchSessions.size == 1, s"batch sessions: $batchSessions")
+    assert(got == batchSessions, s"stream/batch disagreement: stream=$got batch=$batchSessions")
+  }
+
   test("streaming HLL registers: update-mode aggregation converges to the batch sketch") {
     val s = spark
     import s.implicits._

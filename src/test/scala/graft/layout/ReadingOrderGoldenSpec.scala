@@ -149,4 +149,20 @@ class ReadingOrderGoldenSpec extends AnyFunSuite {
     val stitched = ReadingOrderPipeline.run(words, pageW, pageH)
     assert(stitched.regions == regions, "ReadingOrderPipeline.run == stage chain")
   }
+
+  test("W5 column order returns on a bottom-link cycle while a paragraph is unvisited") {
+    // 0 -> 1 -> 0 and 2 unlinked: the walk must re-seed at the visited
+    // target instead of circling the cycle with paragraph 2 still open
+    def para(id: Int, x: Double, y: Double, link: Option[Int]) =
+      Para(Vector(id), id, top = graft.geom.Pt(x, y), bottom = graft.geom.Pt(x, y + 10),
+        right = graft.geom.Pt(x + 5, y + 5), left = graft.geom.Pt(x - 5, y + 5),
+        bottomBox = link.fold(NLink.none)(NLink(10.0, _)))
+    val paras = Vector(para(0, 10, 10, Some(1)), para(1, 10, 30, Some(0)),
+      para(2, 500, 500, None))
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val w5 = Await.result(Future(Paragraphs.columnOrder(paras)),
+      scala.concurrent.duration.Duration(5, "s"))
+    assert(w5.map(_.order) == Vector(0, 0, 1))
+  }
 }

@@ -99,4 +99,27 @@ class AnnIndexSpec extends AnyFunSuite with SparkSuite {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(r3))
     }
   }
+
+  test("append is idempotent: the same batch appended twice leaves one append's table and results") {
+    val r1 = java.nio.file.Files.createTempDirectory("annonce").toString
+    val r2 = java.nio.file.Files.createTempDirectory("anntwice").toString
+    try {
+      val base = emb.filter(col("vec_id") % 4 =!= 0)
+      val rest = emb.filter(col("vec_id") % 4 === 0)
+      for (r <- Seq(r1, r2)) {
+        AnnIndex.build(spark, base, ParquetTableIO, r)
+        AnnIndex.append(spark, ParquetTableIO, r, rest)
+      }
+      AnnIndex.append(spark, ParquetTableIO, r2, rest) // a retried batch
+      def count(r: String) = spark.read.parquet(s"$r/vectors").count()
+      assert(count(r2) == count(r1), "a re-appended batch must add no rows")
+      def q(r: String) = AnnIndex.query(spark, ParquetTableIO, r, emb, k = 5)
+        .collect().map(row => (row.getLong(0), row.getLong(1), row.getInt(2)))
+        .sortBy(t => (t._1, t._3)).toSeq
+      assert(q(r2) == q(r1), "query after a re-append must equal one append's")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(r1))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(r2))
+    }
+  }
 }

@@ -105,6 +105,27 @@ class PqIndexSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("append is idempotent: the same batch appended twice leaves one append's table and results") {
+    val r1 = java.nio.file.Files.createTempDirectory("pqonce").toString
+    val r2 = java.nio.file.Files.createTempDirectory("pqtwice").toString
+    try {
+      val base = emb.filter(col("vec_id") % 4 =!= 0)
+      val rest = emb.filter(col("vec_id") % 4 === 0)
+      for (r <- Seq(r1, r2)) {
+        PqIndex.build(spark, base, ParquetTableIO, r)
+        PqIndex.append(spark, ParquetTableIO, r, rest)
+      }
+      PqIndex.append(spark, ParquetTableIO, r2, rest) // a retried batch
+      def count(r: String) = spark.read.parquet(s"$r/codes").count()
+      assert(count(r2) == count(r1), "a re-appended batch must add no rows")
+      def q(r: String) = rows(PqIndex.query(spark, ParquetTableIO, r, emb, k = 5))
+      assert(q(r2) == q(r1), "query after a re-append must equal one append's")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(r1))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(r2))
+    }
+  }
+
   test("query of an UNINDEXED id quantizes against the frozen ranges: exact-copy probe replays vec 0's ranking") {
     // probe = vec 0's embedding under a NEW id: quantized against the
     // frozen ranges it gets vec 0's exact SQ codes, so its ADC scores

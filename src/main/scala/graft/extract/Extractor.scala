@@ -1,25 +1,25 @@
 package graft.extract
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.immutable.ArraySeq
 import scala.util.control.NonFatal
 import graft.html.Dom
 import graft.geom.BBox
 import graft.layout.{ReadingOrderPipeline, Word}
 
-/** A candidate text block lifted from the DOM. */
+/** A candidate text block lifted from the DOM: `text` is whitespace-
+  * normalised, `words` its space-separated word count. `chrome`: the block
+  * or a block ancestor is a nav/aside/header/footer element.
+  * `boilerplate`: the class or id of the block or of a block ancestor
+  * holds a boilerplate token (see [[Extractor.isContent]]). */
 final case class Block(
     tag: String,
     label: String,
     text: String,
     linkChars: Int,
-    classTokens: Set[String],
-    ancestorTags: Set[String]) {
+    words: Int,
+    chrome: Boolean,
+    boilerplate: Boolean) {
   def chars: Int = text.length
-  def words: Int = if (text.isEmpty) 0 else {
-    var c = 1; var i = 0
-    while (i < text.length) { if (text.charAt(i) == ' ') c += 1; i += 1 }
-    c
-  }
 }
 
 /** Typed span into the extracted text. */
@@ -84,126 +84,112 @@ object Extractor {
     case _                                        => "paragraph"
   }
 
-  /** Collapse all whitespace runs in a block buffer to single spaces and
-    * trim, without an intermediate toString copy — a monomorphic body (a
-    * shared CharSequence loop makes charAt bimorphic on the hot path). */
-  private def normalizeSb(s: java.lang.StringBuilder): String = {
+  /** Whitespace as `Character.isWhitespace`, with the ASCII range tested
+    * by mask (bits 9–13, 28–32). */
+  private val AsciiWs = 0x1f0003e00L
+  @inline private def isWhitespace(c: Char): Boolean =
+    if (c < 64) ((AsciiWs >>> c) & 1L) != 0
+    else c >= 128 && Character.isWhitespace(c)
+
+  /** Does a class or id value hold a boilerplate token, a run of
+    * [a-z0-9] in the value lowercased under `Locale.ROOT`? */
+  private def hasBoilerplateToken(value: String): Boolean = {
+    val s = value.toLowerCase(java.util.Locale.ROOT)
+    @inline def alnum(c: Char) = (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
     val n = s.length
-    val sb = new java.lang.StringBuilder(n)
     var i = 0
-    var pendingSpace = false
     while (i < n) {
-      val c = s.charAt(i)
-      if (Character.isWhitespace(c)) pendingSpace = sb.length() > 0
-      else {
-        if (pendingSpace) { sb.append(' '); pendingSpace = false }
-        sb.append(c)
-      }
-      i += 1
+      while (i < n && !alnum(s.charAt(i))) i += 1
+      val st = i
+      while (i < n && alnum(s.charAt(i))) i += 1
+      if (i > st && boilerplateTokens.contains(s.substring(st, i))) return true
     }
-    sb.toString
+    false
   }
 
-  /** length of the [[normalizeSb]] form of s, computed without building
-    * the string. */
-  def normalizedLength(s: String): Int = {
-    val n = s.length
+  /** DOM → candidate blocks, document order.
+    *
+    * One block is open at a time. A block element first flushes the block
+    * it interrupts (its nearest block ancestor's text so far), then its
+    * children — each nested block flushing in turn — and then itself; the
+    * ancestor resumes with an empty buffer. `TextAttributes.blockAttrs`
+    * cuts blocks at the same points. So a single shared builder holds
+    * the open block's normalised text: whitespace runs collapse to one
+    * space and the ends are trimmed as the text streams in, and words and
+    * link chars are counted in the same pass. Text nodes are appended
+    * verbatim — source whitespace decides word separation
+    * (browser-faithful: `word<b>x</b>` concatenates, and the markup
+    * between words carries the spaces). <br> contributes a space. A link's
+    * chars are counted per text node, normalised on their own. */
+  def blocksOf(dom: Dom): Vector[Block] = {
+    val out = Vector.newBuilder[Block]
+    val src = dom.chars
+    var buf = new Array[Char](256)
     var len = 0
     var pendingSpace = false
-    var i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (Character.isWhitespace(c)) pendingSpace = len > 0
+    var words = 0
+    var linkChars = 0
+
+    def flush(tag: String, chrome: Boolean, boilerplate: Boolean): Unit = {
+      if (len > 0)
+        out += Block(tag, labelOf(tag), new String(buf, 0, len), math.min(linkChars, len),
+          words, chrome, boilerplate)
+      len = 0; pendingSpace = false; words = 0; linkChars = 0
+    }
+
+    def append(from: Int, until: Int, inLink: Boolean): Unit = {
+      if (len + (until - from) + 1 > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, len + (until - from) + 1))
+      // this node's own normalised length, for linkChars
+      var nodeLen = 0
+      var nodePending = false
+      var k = from
+      while (k < until) {
+        val c = src(k)
+        if (isWhitespace(c)) { pendingSpace = len > 0; nodePending = nodeLen > 0 }
+        else {
+          if (pendingSpace) { buf(len) = ' '; len += 1; words += 1; pendingSpace = false }
+          else if (len == 0) words = 1
+          buf(len) = c; len += 1
+          if (nodePending) { nodeLen += 1; nodePending = false }
+          nodeLen += 1
+        }
+        k += 1
+      }
+      if (inLink) linkChars += nodeLen
+    }
+
+    def walk(node: Int, blockTag: String, chrome: Boolean, boilerplate: Boolean, inLink: Boolean): Unit = {
+      if (dom.isText(node)) append(dom.textFrom(node), dom.textUntil(node), inLink)
       else {
-        if (pendingSpace) { len += 1; pendingSpace = false }
-        len += 1
-      }
-      i += 1
-    }
-    len
-  }
-
-  private def classTokensOf(dom: Dom, node: Int): Set[String] = {
-    val cls = dom.attr(node, "class")
-    val id = dom.attr(node, "id")
-    if (cls.isEmpty && id.isEmpty) Set.empty
-    else {
-      // split on non-[a-z0-9] runs without the regex machinery — this runs
-      // for every element node and was a measurable allocation source
-      val raw = (cls.getOrElse("") + " " + id.getOrElse("")).toLowerCase
-      var out = Set.empty[String]
-      var i = 0
-      val n = raw.length
-      @inline def alnum(c: Char) = (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
-      while (i < n) {
-        while (i < n && !alnum(raw.charAt(i))) i += 1
-        val st = i
-        while (i < n && alnum(raw.charAt(i))) i += 1
-        if (i > st) out += raw.substring(st, i)
-      }
-      out
-    }
-  }
-
-  /** DOM → candidate blocks, document order. */
-  def blocksOf(dom: Dom): Vector[Block] = {
-    val out = ArrayBuffer.empty[Block]
-
-    final class Ctx(val tag: String, val classTokens: Set[String],
-                    val ancestorTags: Set[String]) {
-      val sb = new java.lang.StringBuilder()
-      var linkChars = 0
-    }
-
-    def flush(ctx: Ctx): Unit = {
-      if (ctx.sb.length() > 0) {
-        val text = normalizeSb(ctx.sb)
-        if (text.nonEmpty)
-          out += Block(ctx.tag, labelOf(ctx.tag), text, math.min(ctx.linkChars, text.length),
-            ctx.classTokens, ctx.ancestorTags)
-        ctx.sb.setLength(0)
-      }
-      ctx.linkChars = 0
-    }
-
-    // Text nodes are appended verbatim — source whitespace decides word
-    // separation (browser-faithful: `word<b>x</b>` concatenates, and the
-    // markup between words carries the spaces). <br> contributes a space.
-    def walk(node: Int, ctx: Ctx, inLink: Boolean): Unit = {
-      if (dom.isText(node)) {
-        val t = dom.text(node)
-        ctx.sb.append(t)
-        if (inLink) ctx.linkChars += normalizedLength(t)
-      } else {
         val tag = dom.tag(node)
         if (!skipTags.contains(tag)) {
           if (blockTags.contains(tag) && node != dom.root) {
-            flush(ctx)
-            val sub = new Ctx(tag,
-              ctx.classTokens ++ classTokensOf(dom, node),
-              ctx.ancestorTags + ctx.tag)
-            dom.foreachChild(node)(walk(_, sub, inLink))
-            flush(sub)
+            flush(blockTag, chrome, boilerplate)
+            val ch = chrome || chromeTags.contains(tag)
+            val bp = boilerplate || dom.attr(node, "class").exists(hasBoilerplateToken) ||
+              dom.attr(node, "id").exists(hasBoilerplateToken)
+            var c = dom.firstChild(node)
+            while (c >= 0) { walk(c, tag, ch, bp, inLink); c = dom.nextSibling(c) }
+            flush(tag, ch, bp)
           } else {
-            if (tag == "br") ctx.sb.append(' ')
+            if (tag == "br") pendingSpace = len > 0
             val link = inLink || tag == "a"
-            dom.foreachChild(node)(walk(_, ctx, link))
+            var c = dom.firstChild(node)
+            while (c >= 0) { walk(c, blockTag, chrome, boilerplate, link); c = dom.nextSibling(c) }
           }
         }
       }
     }
 
-    val rootCtx = new Ctx("#root", Set.empty, Set.empty)
-    walk(dom.root, rootCtx, inLink = false)
-    flush(rootCtx)
-    out.toVector
+    walk(dom.root, "#root", chrome = false, boilerplate = false, inLink = false)
+    flush("#root", chrome = false, boilerplate = false)
+    out.result()
   }
 
   /** The content decision — Boilerpipe-style, integer-exact. */
   def isContent(b: Block): Boolean = {
-    if (b.text.isEmpty) return false
-    if (b.ancestorTags.exists(chromeTags.contains) || chromeTags.contains(b.tag)) return false
-    if (b.classTokens.exists(boilerplateTokens.contains)) return false
+    if (b.text.isEmpty || b.chrome || b.boilerplate) return false
     if (3 * b.linkChars > b.chars) return false
     if (b.label == "heading") b.chars >= 3
     else b.words >= 5 || b.chars >= 30
@@ -231,23 +217,25 @@ object Extractor {
     val all = blocksOf(dom)
     val content = all.filter(isContent)
 
-    // text assembly: document order, '\n'-joined
-    val sb = new java.lang.StringBuilder()
-    val offsets = new Array[(Long, Long)](content.length)
+    // text assembly: document order, '\n'-joined. StringJoiner sizes the
+    // result from its parts and builds it in one allocation.
+    val joiner = new java.util.StringJoiner("\n")
+    val starts = new Array[Int](content.length)
+    var pos = 0
     var i = 0
     while (i < content.length) {
-      if (i > 0) sb.append('\n')
-      val start = sb.length().toLong
-      sb.append(content(i).text)
-      offsets(i) = (start, sb.length().toLong)
+      starts(i) = pos
+      joiner.add(content(i).text)
+      pos += content(i).chars + 1
       i += 1
     }
-    val text = sb.toString
+    val text = joiner.toString
 
     // layout branch: block boxes stacked on the virtual page, ordered by
     // the reading-order pipeline (paragraph walk at block granularity)
     var cursor = MarginX
     val words = new Array[Word](content.length)
+    val ys = new Array[Int](content.length)
     val lineStart = new Array[Int](content.length)
     var lineCursor = 1
     i = 0
@@ -255,13 +243,14 @@ object Extractor {
       val lines = lineCount(content(i).chars)
       val w = math.min(content(i).chars * CharW, PageW - 2 * MarginX)
       words(i) = Word(i, BBox(MarginX, cursor, math.max(w, CharW), lines * LineH))
+      ys(i) = cursor
       lineStart(i) = lineCursor
       lineCursor += lines
       cursor += lines * LineH + BlockGap
       i += 1
     }
     val pageH = math.max(cursor + MarginX, 200)
-    val layout = ReadingOrderPipeline.run(words.toIndexedSeq, PageW, pageH)
+    val layout = ReadingOrderPipeline.run(ArraySeq.unsafeWrapArray(words), PageW, pageH)
     // block order: 1-based reading order from the pipeline. The reference's
     // pinp2 drops chain-absorbed members (pinp_utils.py:268 reads the
     // absorbed row's ORIGINAL component list, so grand-members vanish);
@@ -270,12 +259,11 @@ object Extractor {
     // after the ordered ones, in document order.
     val orderOf = new Array[Int](content.length)
     java.util.Arrays.fill(orderOf, -1)
-    // block boxes have unique y coordinates — O(1) map-back
-    val byY = new java.util.HashMap[Int, Int](content.length * 2)
-    for (k <- words.indices) byY.put(words(k).bbox.y, k)
+    // block boxes have strictly increasing y coordinates — map back by
+    // binary search
     var maxOrd = -1
     for (r <- layout.regions) {
-      val idx = byY.getOrDefault(r.bbox.y, -1)
+      val idx = java.util.Arrays.binarySearch(ys, r.bbox.y)
       if (idx >= 0 && words(idx).bbox == r.bbox) {
         orderOf(idx) = r.order - 1
         if (r.order - 1 > maxOrd) maxOrd = r.order - 1
@@ -289,7 +277,7 @@ object Extractor {
 
     val spans = Array.tabulate(content.length) { k =>
       Span(kind = content(k).label, label = content(k).tag,
-        start = offsets(k)._1, end = offsets(k)._2,
+        start = starts(k).toLong, end = (starts(k) + content(k).chars).toLong,
         order = orderOf(k) + 1, line = lineStart(k))
     }
     val blocks = Array.tabulate(content.length) { k =>

@@ -1,5 +1,6 @@
 package graft.extract
 
+import java.util.Locale
 import graft.html.Dom
 
 /** Font/text attribute extraction — the engine analogue of the reference's
@@ -82,10 +83,10 @@ object TextAttributes {
       val decl = style.substring(from, end)
       val colon = decl.indexOf(':')
       if (colon > 0) {
-        val k = decl.substring(0, colon).trim.toLowerCase
+        val k = decl.substring(0, colon).trim.toLowerCase(Locale.ROOT)
         val v = decl.substring(colon + 1).trim
         if (k == "font-size" && v.length > 2 &&
-            v.toLowerCase.endsWith("px")) {
+            v.toLowerCase(Locale.ROOT).endsWith("px")) {
           val num = v.substring(0, v.length - 2).trim
           // toIntOption, not toInt: a hostile digit run past Int.MaxValue
           // ("font-size:99999999999px") must not throw out of the parser
@@ -99,7 +100,10 @@ object TextAttributes {
   }
 
   /** One row per block containing non-whitespace text, document order
-    * (aligned with [[Extractor.blocksOf]] block boundaries). */
+    * (aligned with [[Extractor.blocksOf]] block boundaries). Only one block
+    * is open at a time — a block element flushes the open block before its
+    * children and itself after them — so one set of counters serves the
+    * whole walk. Text is counted straight from the DOM's char arena. */
   def blockAttrs(dom: Dom): Vector[BlockAttrs] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[BlockAttrs]
     var chars = 0
@@ -138,10 +142,10 @@ object TextAttributes {
     def walk(node: Int, inB: Boolean, inI: Boolean, inU: Boolean,
              inS: Boolean, color: String, sizePx: Int): Unit = {
       if (dom.isText(node)) {
-        val t = dom.text(node)
+        val t = dom.chars
         var n = 0
-        var k = 0
-        while (k < t.length) { if (!Character.isWhitespace(t.charAt(k))) n += 1; k += 1 }
+        var k = dom.textFrom(node)
+        while (k < dom.textUntil(node)) { if (!Character.isWhitespace(t(k))) n += 1; k += 1 }
         chars += n
         if (inB) bold += n
         if (inI) italic += n

@@ -1,39 +1,58 @@
 package graft.html
 
-import scala.collection.mutable.ArrayBuffer
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Arena DOM: nodes live in flat arrays, children linked by index. One
   * arena per page, built in the same pass as tokenization — bounded by the
   * page size, no global state (the per-page transform's memory contract,
   * SURVEY.md §4).
+  *
+  * The node arrays may be longer than [[size]]; slots past it are unused.
+  * Decoded text lives in one page-wide char arena, [[chars]]: text node
+  * `i` is `chars[textFrom(i), textUntil(i))` (an empty range for element
+  * nodes). The arena is sized to the page's byte count and never grows,
+  * because decoded text never outgrows its bytes: UTF-8 decodes each 1–3
+  * byte sequence to one char, each 4-byte sequence to a surrogate pair and
+  * each malformed subsequence (≥ 1 byte) to one U+FFFD, and entity
+  * decoding only shrinks text ([[Entities.decodeInPlace]]).
   */
 final class Dom private (
+    val size: Int,
     val tag: Array[String],          // "" for text nodes
-    val text: Array[String],         // decoded text for text nodes, else ""
     val attrs: Array[List[(String, String)]],
     val parent: Array[Int],
     val firstChild: Array[Int],
-    val nextSibling: Array[Int]) {
+    val nextSibling: Array[Int],
+    val textFrom: Array[Int],
+    val textUntil: Array[Int],
+    val chars: Array[Char]) {
 
-  def size: Int = tag.length
   def isText(i: Int): Boolean = tag(i).isEmpty
   def root: Int = 0
 
-  def children(i: Int): Iterator[Int] = new Iterator[Int] {
-    private var cur = firstChild(i)
-    def hasNext: Boolean = cur >= 0
-    def next(): Int = { val c = cur; cur = nextSibling(c); c }
-  }
+  /** Decoded text of a text node, "" for an element. Builds a String;
+    * hot paths read [[chars]] over the node's range instead. */
+  def text(i: Int): String = new String(chars, textFrom(i), textUntil(i) - textFrom(i))
 
-  /** Allocation-free child traversal (Function1[Int, Unit] is specialized;
-    * the Iterator version boxes each id) — use in per-page hot paths. */
+  /** Appends node `i`'s text to `sb` without an intermediate String. */
+  def appendText(i: Int, sb: java.lang.StringBuilder): Unit =
+    sb.append(chars, textFrom(i), textUntil(i) - textFrom(i))
+
+  /** Allocation-free child traversal (Function1[Int, Unit] is
+    * specialized) — use in per-page hot paths. */
   def foreachChild(i: Int)(f: Int => Unit): Unit = {
     var c = firstChild(i)
     while (c >= 0) { f(c); c = nextSibling(c) }
   }
 
-  def attr(i: Int, name: String): Option[String] =
-    attrs(i).collectFirst { case (n, v) if n == name => v }
+  def attr(i: Int, name: String): Option[String] = {
+    var as = attrs(i)
+    while (as.nonEmpty) {
+      if (as.head._1 == name) return Some(as.head._2)
+      as = as.tail
+    }
+    None
+  }
 
   /** Depth-first pre-order walk below `i` (inclusive). */
   def walk(i: Int)(f: Int => Unit): Unit = {
@@ -45,19 +64,19 @@ final class Dom private (
 
 object Dom {
   /** Growable primitive int array — ArrayBuffer[Int] boxes every element
-    * past the Integer cache, and the DOM builder appends four ints per
-    * node; this keeps the arena build allocation-flat. */
+    * past the Integer cache. */
   private final class IntBuf(hint: Int) {
-    private var a = new Array[Int](math.max(hint, 16))
+    private var a = new Array[Int](hint)
     private var n = 0
     def length: Int = n
     def apply(i: Int): Int = a(i)
-    def update(i: Int, v: Int): Unit = a(i) = v
+    def last: Int = a(n - 1)
+    def setLast(v: Int): Unit = a(n - 1) = v
     def add(v: Int): Unit = {
       if (n == a.length) a = java.util.Arrays.copyOf(a, a.length * 2)
       a(n) = v; n += 1
     }
-    def toArray: Array[Int] = java.util.Arrays.copyOf(a, n)
+    def truncate(len: Int): Unit = n = len
   }
 
   /** Void elements never get children (HTML5 spec list). */
@@ -97,67 +116,106 @@ object Dom {
     * input: stray end tags are ignored unless a matching ancestor is open,
     * in which case everything above it is popped. */
   def parse(bytes: Array[Byte]): Dom = {
-    // presize the arena: ~1 node per 40 bytes of html is a safe upper
-    // estimate, so the buffers grow at most once instead of log2(n) times
-    val hint = math.max(16, bytes.length / 40)
-    val tag = new ArrayBuffer[String](hint); tag += "#root"
-    val text = new ArrayBuffer[String](hint); text += ""
-    val attrs = new ArrayBuffer[List[(String, String)]](hint); attrs += Nil
-    val parent = new IntBuf(hint); parent.add(-1)
-    val firstChild = new IntBuf(hint); firstChild.add(-1)
-    val nextSibling = new IntBuf(hint); nextSibling.add(-1)
-    val lastChild = new IntBuf(hint); lastChild.add(-1)
+    val b = new Builder(bytes)
+    Tokenizer.tokenizeTo(bytes, b)
+    b.result()
+  }
 
-    // open-element stack of node indices (depth tracked for the cap)
-    var stack = List(0)
-    var depth = 1
+  /** The tokenizer sink that builds one page's arena. Each text run is
+    * decoded once, straight into the arena: an ASCII run byte → char, any
+    * other run through `new String(…, UTF_8)`; runs holding a '&' are then
+    * entity-decoded in place, except script/style/noscript bodies, which
+    * stay verbatim. */
+  private final class Builder(bytes: Array[Byte]) extends TokenSink {
+    // every node takes at least one tag or text run of the page; the
+    // generated pages average ~15 bytes per node, so the arrays rarely grow
+    private var cap = math.max(16, bytes.length / 12)
+    private var tag = new Array[String](cap)
+    private var attrs = new Array[List[(String, String)]](cap)
+    private var parent = new Array[Int](cap)
+    private var firstChild = new Array[Int](cap)
+    private var nextSibling = new Array[Int](cap)
+    private var textFrom = new Array[Int](cap)
+    private var textUntil = new Array[Int](cap)
+    private var size = 1 // the root, set up below
+    private val chars = new Array[Char](bytes.length)
+    private var used = 0
+    // open-element stack of node indices (its length is the depth), and
+    // each open element's last child so far: only an open element gains
+    // children, so the links need no per-node lastChild array
+    private val stack = new IntBuf(64)
+    private val stackLast = new IntBuf(64)
 
-    def addNode(t: String, txt: String, as: List[(String, String)]): Int = {
-      val id = tag.length
-      val par = stack.head
-      tag += t; text += txt; attrs += as
-      parent.add(par); firstChild.add(-1); nextSibling.add(-1); lastChild.add(-1)
-      if (firstChild(par) < 0) firstChild(par) = id
-      else nextSibling(lastChild(par)) = id
-      lastChild(par) = id
+    tag(0) = "#root"; attrs(0) = Nil
+    parent(0) = -1; firstChild(0) = -1; nextSibling(0) = -1
+    stack.add(0); stackLast.add(-1)
+
+    private def grow(): Unit = {
+      cap *= 2
+      tag = java.util.Arrays.copyOf(tag, cap)
+      attrs = java.util.Arrays.copyOf(attrs, cap)
+      parent = java.util.Arrays.copyOf(parent, cap)
+      firstChild = java.util.Arrays.copyOf(firstChild, cap)
+      nextSibling = java.util.Arrays.copyOf(nextSibling, cap)
+      textFrom = java.util.Arrays.copyOf(textFrom, cap)
+      textUntil = java.util.Arrays.copyOf(textUntil, cap)
+    }
+
+    /** Appends a node as the last child of the innermost open element. */
+    private def addNode(t: String, as: List[(String, String)], from: Int, until: Int): Int = {
+      if (size == cap) grow()
+      val id = size
+      size += 1
+      val par = stack.last
+      tag(id) = t; attrs(id) = as
+      parent(id) = par; firstChild(id) = -1; nextSibling(id) = -1
+      textFrom(id) = from; textUntil(id) = until
+      if (stackLast.last < 0) firstChild(par) = id else nextSibling(stackLast.last) = id
+      stackLast.setLast(id)
       id
     }
 
-    Tokenizer.tokenizeTo(bytes, {
-      case HtmlToken.Start(name, as, selfClosing, _) =>
-        implicitClose.get(name).foreach { closes =>
-          if (stack.nonEmpty && closes.contains(tag(stack.head))) {
-            stack = stack.tail
-            depth -= 1
-          }
-        }
-        val id = addNode(name, "", as)
-        if (!selfClosing && !voidTags.contains(name) && depth < MaxDepth) {
-          stack ::= id
-          depth += 1
-        }
+    private def pop(depth: Int): Unit = { stack.truncate(depth); stackLast.truncate(depth) }
 
-      case HtmlToken.End(name, _) =>
-        if (stack.exists(ix => tag(ix) == name)) {
-          while (tag(stack.head) != name) { stack = stack.tail; depth -= 1 }
-          stack = stack.tail
-          depth -= 1
-          if (stack.isEmpty) { stack = List(0); depth = 1 }
-        }
+    def start(name: String, as: List[(String, String)], selfClosing: Boolean, offset: Int): Unit = {
+      val closes = implicitClose.getOrElse(name, null)
+      if (closes != null && closes.contains(tag(stack.last))) pop(stack.length - 1)
+      val id = addNode(name, as, 0, 0)
+      if (!selfClosing && !voidTags.contains(name) && stack.length < MaxDepth) {
+        stack.add(id); stackLast.add(-1)
+      }
+    }
 
-      case HtmlToken.Text(raw, _) =>
-        // rawtext bodies (script/style) are kept verbatim; normal text is
-        // entity-decoded here, once
-        val parentTag = tag(stack.head)
-        val decoded =
-          if (parentTag == "script" || parentTag == "style" || parentTag == "noscript") raw
-          else Entities.decode(raw)
-        if (decoded.nonEmpty) addNode("", decoded, Nil)
+    def end(name: String, offset: Int): Unit = {
+      var k = stack.length - 1
+      while (k >= 0 && tag(stack(k)) != name) k -= 1
+      // the root stays open (no end tag names it)
+      if (k >= 0) pop(math.max(k, 1))
+    }
 
-      case _ => // comments / doctype carry no content
-    })
+    def text(from: Int, until: Int): Unit = {
+      val at = used
+      var len = until - from
+      var k = 0
+      while (k < len && bytes(from + k) >= 0) { chars(at + k) = bytes(from + k).toChar; k += 1 }
+      if (k < len) {
+        val s = new String(bytes, from, len, UTF_8)
+        len = s.length
+        s.getChars(0, len, chars, at)
+      }
+      val parentTag = tag(stack.last)
+      if (parentTag != "script" && parentTag != "style" && parentTag != "noscript") {
+        var amp = at
+        while (amp < at + len && chars(amp) != '&') amp += 1
+        if (amp < at + len) len = Entities.decodeInPlace(chars, amp, at + len) - at
+      }
+      if (len > 0) {
+        used += len
+        addNode("", Nil, at, at + len)
+      }
+    }
 
-    new Dom(tag.toArray, text.toArray, attrs.toArray, parent.toArray,
-      firstChild.toArray, nextSibling.toArray)
+    def result(): Dom =
+      new Dom(size, tag, attrs, parent, firstChild, nextSibling, textFrom, textUntil, chars)
   }
 }

@@ -32,7 +32,7 @@ object Outlinks {
         val href = dom.attr(i, "href")
         if (href.isDefined) {
           val sb = new java.lang.StringBuilder
-          dom.walk(i)(j => if (dom.isText(j)) sb.append(dom.text(j)))
+          dom.walk(i)(j => if (dom.isText(j)) dom.appendText(j, sb))
           out += Outlink(pos, href.get, sb.toString)
           pos += 1
         }

@@ -70,4 +70,24 @@ class ExtractSpec extends AnyFunSuite {
       assert(sorted(i).start == sorted(i - 1).end + 1)
     assert(a.spans.map(_.order).sorted.toSeq == (1 to a.spans.length))
   }
+
+  test("tag, class and style names lower the same under a Turkish default locale") {
+    val html =
+      """<HTML><BODY><SCRIPT>var hidden = "script body words leak";</SCRIPT>
+        |<DIV CLASS="SIDEBAR"><P>Sidebar text that is long enough to be a content block.</P></DIV>
+        |<P>Main content with more than five words in it.</P>
+        |<P STYLE="FONT-SIZE:18PX">Styled words here, six words long.</P></BODY></HTML>""".stripMargin.getBytes(UTF_8)
+    def run() = (Extractor.extract("u", html).text, TextAttributes.blockAttrs(Dom.parse(html)))
+    val saved = java.util.Locale.getDefault
+    val (enText, enAttrs) =
+      try { java.util.Locale.setDefault(java.util.Locale.US); run() }
+      finally java.util.Locale.setDefault(saved)
+    assert(enText == "Main content with more than five words in it.\nStyled words here, six words long.")
+    assert(enAttrs.last.fontSize == 18)
+    val (trText, trAttrs) =
+      try { java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR")); run() }
+      finally java.util.Locale.setDefault(saved)
+    assert(trText == enText)
+    assert(trAttrs == enAttrs)
+  }
 }

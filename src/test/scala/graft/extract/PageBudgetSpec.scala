@@ -45,4 +45,36 @@ class PageBudgetSpec extends AnyFunSuite {
     assert(t16k / t4k < 8.0, f"16k/4k time ratio ${t16k / t4k}%.2f")
     assert(t16k < 3.0, f"16k-block page took $t16k%.3f s")
   }
+
+  /** Wall time of one extraction after a warm-up, in seconds; the page
+    * must extract without a failed row. */
+  private def timeOne(html: Array[Byte]): Double = {
+    Extractor.extract("budget://warm", page(200, 1))
+    val t0 = System.nanoTime()
+    val ex = Extractor.extract("budget://hostile", html)
+    val s = (System.nanoTime() - t0) / 1e9
+    assert(!ex.failed)
+    s
+  }
+
+  test("a paragraph of 800k '&' extracts in under a second") {
+    val html = ("<html><body><p>" + "&" * 800000 + "</p></body></html>").getBytes(UTF_8)
+    val s = timeOne(html)
+    info(f"800k '&': $s%.3f s")
+    assert(s < 1.0, f"800k '&' took $s%.3f s")
+  }
+
+  test("hostile front-end input extracts in under two seconds") {
+    val fourMb = 4 << 20
+    val pages = Seq(
+      "100k stray end tags under 512 open elements" -> ("<div>" * 512 + "</span>" * 100000 + "words"),
+      "4 MB unterminated comment" -> ("<p>before</p><!--" + "x" * fourMb),
+      "4 MB unterminated attribute quote" -> ("<p>before</p><p class=\"" + "x" * fourMb),
+      "4 MB script with no close tag" -> ("<p>before</p><script>" + "x" * fourMb))
+    for ((name, html) <- pages) {
+      val s = timeOne(html.getBytes(UTF_8))
+      info(f"$name: $s%.3f s")
+      assert(s < 2.0, f"$name took $s%.3f s")
+    }
+  }
 }

@@ -44,21 +44,15 @@ object LayoutQueries {
   }
 
   /** W4 + W5: top-down/left-right paragraph sort, then column grouping —
-    * runs the paragraph stage of the pipeline and the two column
-    * operators over it; emits per-page column stats. */
+    * runs the pipeline's envelope prefix and the two column operators
+    * over it; emits per-page column stats. */
   def columns(url: String, html: Array[Byte]): (String, Int, Int, Long) = {
     val ex = Extractor.extract(url, html)
     val words = ex.blocks.iterator.zipWithIndex.map { case (b, i) =>
       Word(i, BBox(b.x, b.y, b.w, b.h))
     }.toVector
     if (words.isEmpty) return (url, 0, 0, 0L)
-    val (h, v) = Neighbors.findClosestNeighbors(words.map(_.bbox))
-    val x = graft.geom.Kde.kdeEstimateD(h, horizontal = true)
-    val y = graft.geom.Kde.kdeEstimateD(v, horizontal = false)
-    val (r, l, t, bm) = Neighbors.fourDirectionLinks(words.map(_.bbox), x, y)
-    val comps = Neighbors.connectedComponents(words.length, Seq(r, l, t, bm))
-    val envs = Paragraphs.envelopes(comps, words)
-    val ordered = Paragraphs.getParagraphOrder(envs)
+    val ordered = Paragraphs.getParagraphOrder(ReadingOrderPipeline.envelopes(words))
     val withCols = Paragraphs.getCol(ordered)
     val nCols = withCols.iterator.map(_.col).distinct.length
     (url, withCols.length, nCols, withCols.iterator.map(_.order.toLong).sum)
@@ -133,7 +127,7 @@ object LayoutQueries {
     val ex = Extractor.extract(url, html)
     val boxes = ex.blocks.map(b => BBox(b.x, b.y, b.w, b.h)).toIndexedSeq
     if (boxes.isEmpty) return Seq.empty
-    val pageW = 960
+    val pageW = Extractor.PageW
     val pageH = math.max(boxes.iterator.map(_.y2).max + 40, 200)
     val grid = new Projection.BoxInkGrid(pageW, pageH, boxes)
     boxes.zipWithIndex.map { case (b, i) =>
@@ -152,7 +146,7 @@ object LayoutQueries {
     val height = boxes.iterator.map(_.bbox.y2).foldLeft(200)(math.max) + 20
     val hpp = new Array[Long](height)
     for (r <- boxes; y <- r.bbox.y until r.bbox.y2) hpp(y) += r.bbox.w.toLong
-    val lines = Projection.segmentLines(hpp.toIndexedSeq, width = 960)
+    val lines = Projection.segmentLines(hpp.toIndexedSeq, width = Extractor.PageW)
       .map(r => Hisam.Line(Vector(r.bbox)))
     val paras = Hisam.lineGroups(lines, layoutThresh = 0.5)
     (url, lines.length, paras.length)
@@ -184,7 +178,7 @@ object LayoutQueries {
     val height = boxes.iterator.map(_.bbox.y2).foldLeft(200)(math.max) + 20
     val hpp = new Array[Long](height)
     for (r <- boxes; y <- r.bbox.y until r.bbox.y2) hpp(y) += r.bbox.w.toLong
-    val lines = Projection.segmentLines(hpp.toIndexedSeq, width = 960)
+    val lines = Projection.segmentLines(hpp.toIndexedSeq, width = Extractor.PageW)
     (url, lines.length, lines.iterator.map(_.bbox.h.toLong).sum)
   }
 }

@@ -52,11 +52,11 @@ final case class Extracted(url: String, text: String,
 object Extractor {
 
   /** Elements whose subtree is never content. */
-  private val skipTags = Set("script", "style", "noscript", "head", "title",
+  private[extract] val skipTags = Set("script", "style", "noscript", "head", "title",
     "svg", "iframe", "template", "select", "option", "button", "object")
 
   /** Elements that open a new text block. */
-  private val blockTags = Set(
+  private[extract] val blockTags = Set(
     "p", "div", "h1", "h2", "h3", "h4", "h5", "h6", "li", "dt", "dd",
     "td", "th", "pre", "blockquote", "figcaption", "caption", "article",
     "section", "main", "header", "footer", "nav", "aside", "ul", "ol",
@@ -195,13 +195,14 @@ object Extractor {
     else b.words >= 5 || b.chars >= 30
   }
 
-  // pseudo-geometry constants (block layout on a virtual 960px page)
-  private val PageW = 960
-  private val MarginX = 40
-  private val CharW = 8
-  private val LineH = 20
-  private val BlockGap = 10
-  private val LineChars = (PageW - 2 * MarginX) / CharW // 110
+  // pseudo-geometry constants (block layout on a virtual 960px page),
+  // shared with `Tables` and the layout queries
+  final val PageW = 960
+  final val MarginX = 40
+  final val CharW = 8
+  final val LineH = 20
+  final val BlockGap = 10
+  final val LineChars = (PageW - 2 * MarginX) / CharW // 110
 
   /** Lines a block occupies when wrapped at LineChars. */
   def lineCount(chars: Int): Int = math.max(1, (chars + LineChars - 1) / LineChars)

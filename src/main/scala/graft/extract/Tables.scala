@@ -22,37 +22,35 @@ final case class TableStruct(
   * cells are `<td>`/`<th>` under a row, likewise not crossing a nested
   * table (nested tables are emitted as their own TableStruct). Cell boxes
   * are laid out on the extractor's pseudo-geometry grid: rows are
-  * `LineHeight`-tall bands stacked from the table top, columns split the
-  * page width evenly by that row's cell count — the same deterministic
+  * `Extractor.LineH`-tall bands stacked from the table top, columns split
+  * the page width evenly by that row's cell count — the same deterministic
   * geometry model the reading-order branch uses, so table cells and
   * paragraph blocks share one coordinate space.
   */
 object Tables {
 
-  val LineHeight = 20
-  val PageWidth = 960
-  val Margin = 40
+  import Extractor.{LineH, MarginX, PageW}
 
   def tablesOf(dom: Dom): Vector[TableStruct] = {
     val tables = ArrayBuffer.empty[Int]
     dom.walk(dom.root) { i => if (dom.tag(i) == "table") tables += i }
 
-    var yCursor = Margin
+    var yCursor = MarginX
     tables.zipWithIndex.map { case (tableNode, tableIdx) =>
       val rows = ArrayBuffer.empty[Int]
       collectRows(dom, tableNode, rows)
-      val width = PageWidth - 2 * Margin
+      val width = PageW - 2 * MarginX
       val cellrows = rows.zipWithIndex.map { case (tr, r) =>
         val cells = ArrayBuffer.empty[Int]
         collectCells(dom, tr, cells)
         val n = math.max(cells.length, 1)
         val cw = width / n
         val boxes = cells.indices.map { c =>
-          BBox(Margin + c * cw, yCursor + r * LineHeight, cw, LineHeight)
+          BBox(MarginX + c * cw, yCursor + r * LineH, cw, LineH)
         }.toVector
         r -> boxes
       }.toMap
-      yCursor += rows.length * LineHeight + LineHeight
+      yCursor += rows.length * LineH + LineH
       TableStruct(tableIdx, rows.length, cellrows.valuesIterator.map(_.length).sum, cellrows)
     }.toVector
   }

@@ -50,13 +50,6 @@ object TextAttributes {
   private val italicTags = Set("i", "em")
   private val underlineTags = Set("u", "ins")
   private val strikeTags = Set("s", "strike", "del")
-  private val skip = Set("script", "style", "noscript", "head", "title", "svg")
-  private val blockTags = Set(
-    "p", "div", "h1", "h2", "h3", "h4", "h5", "h6", "li", "dt", "dd",
-    "td", "th", "pre", "blockquote", "figcaption", "caption", "article",
-    "section", "main", "header", "footer", "nav", "aside", "ul", "ol",
-    "table", "thead", "tbody", "tfoot", "tr", "figure", "form", "fieldset",
-    "body", "html", "#root", "address", "details", "summary")
 
   /** Heading level → pixel font size (default body text = 0 = unstyled). */
   def fontSizeOf(tag: String): Int = tag match {
@@ -99,11 +92,12 @@ object TextAttributes {
     (size, color)
   }
 
-  /** One row per block containing non-whitespace text, document order
-    * (aligned with [[Extractor.blocksOf]] block boundaries). Only one block
-    * is open at a time — a block element flushes the open block before its
-    * children and itself after them — so one set of counters serves the
-    * whole walk. Text is counted straight from the DOM's char arena. */
+  /** One row per block containing non-whitespace text, document order,
+    * aligned with [[Extractor.blocksOf]]'s blocks: the same block and skip
+    * tags cut and prune both walks. Only one block is open at a time — a
+    * block element flushes the open block before its children and itself
+    * after them — so one set of counters serves the whole walk. Text is
+    * counted straight from the DOM's char arena. */
   def blockAttrs(dom: Dom): Vector[BlockAttrs] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[BlockAttrs]
     var chars = 0
@@ -159,7 +153,7 @@ object TextAttributes {
           sizeCounts.updateWith(sizePx) { c => Some(c.getOrElse(0) + n) }
       } else {
         val tag = dom.tag(node)
-        if (!skip.contains(tag)) {
+        if (!Extractor.skipTags.contains(tag)) {
           // inline CSS overrides the inherited context (style color beats
           // an enclosing <font color>; style font-size beats an ancestor's)
           val (stSize, stColor) = dom.attr(node, "style") match {
@@ -171,7 +165,7 @@ object TextAttributes {
             else if (tag == "font") dom.attr(node, "color").getOrElse(color)
             else color
           val sz0 = if (stSize > 0) stSize else sizePx
-          if (blockTags.contains(tag) && node != dom.root) {
+          if (Extractor.blockTags.contains(tag) && node != dom.root) {
             flush()
             val saved = curTag
             curTag = tag

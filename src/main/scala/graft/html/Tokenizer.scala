@@ -2,20 +2,6 @@ package graft.html
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Locale
-import scala.collection.mutable.ArrayBuffer
-
-/** HTML token stream. Text payloads are raw (entities NOT yet decoded);
-  * offsets are byte offsets into the input. */
-sealed trait HtmlToken
-object HtmlToken {
-  /** `attrs` preserves source order; names lowercased. */
-  final case class Start(name: String, attrs: List[(String, String)],
-                         selfClosing: Boolean, offset: Int) extends HtmlToken
-  final case class End(name: String, offset: Int) extends HtmlToken
-  final case class Text(raw: String, offset: Int) extends HtmlToken
-  final case class Comment(offset: Int) extends HtmlToken
-  final case class Doctype(offset: Int) extends HtmlToken
-}
 
 /** Receiver of [[Tokenizer.tokenizeTo]]'s events, in document order. Tag
   * and attribute names arrive lowercased (under `Locale.ROOT`, never the
@@ -118,21 +104,6 @@ object Tokenizer {
       }
     }
     new String(bytes, from, until - from, UTF_8).toLowerCase(Locale.ROOT)
-  }
-
-  /** The token vector, for callers that want tokens as values. */
-  def tokenize(bytes: Array[Byte]): Vector[HtmlToken] = {
-    val out = ArrayBuffer.empty[HtmlToken]
-    tokenizeTo(bytes, new TokenSink {
-      def start(name: String, attrs: List[(String, String)], selfClosing: Boolean, offset: Int): Unit =
-        out += HtmlToken.Start(name, attrs, selfClosing, offset)
-      def end(name: String, offset: Int): Unit = out += HtmlToken.End(name, offset)
-      def text(from: Int, until: Int): Unit =
-        out += HtmlToken.Text(new String(bytes, from, until - from, UTF_8), from)
-      override def comment(offset: Int): Unit = out += HtmlToken.Comment(offset)
-      override def doctype(offset: Int): Unit = out += HtmlToken.Doctype(offset)
-    })
-    out.toVector
   }
 
   /** Event-style tokenization: no token objects, text as byte ranges —

@@ -2,7 +2,7 @@ package graft.jobs
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.TaskContext
 import graft.extract.{Extracted, Extractor}
@@ -67,6 +67,10 @@ final case class JobConfig(
   */
 object ExtractionJob {
 
+  /** The `failed` flag read as a boolean, null (a pre-`failed` row after a
+    * schema merge) as false. */
+  private def isFailed: Column = coalesce(col("failed").cast("boolean"), lit(false))
+
   /** Urls already committed to the extracted table, or None on first run.
     * With `retryFailed` the rows whose extraction failed (committed with
     * `failed = true` so a crash loop cannot re-attempt them forever) are
@@ -79,7 +83,7 @@ object ExtractionJob {
       val extracted = cfg.io.read(spark, cfg.extractedTable)
       val committed =
         if (cfg.retryFailed && extracted.columns.contains("failed"))
-          extracted.filter(!coalesce(col("failed").cast("boolean"), lit(false)))
+          extracted.filter(!isFailed)
         else extracted
       Some(committed.select("url"))
     }
@@ -98,7 +102,7 @@ object ExtractionJob {
                     io: TableIO = ParquetTableIO): DataFrame = {
     val df = io.read(spark, extractedRoot)
     if (df.columns.contains("failed"))
-      df.filter(!coalesce(col("failed").cast("boolean"), lit(false))).drop("failed")
+      df.filter(!isFailed).drop("failed")
     else df
   }
 
@@ -139,8 +143,7 @@ object ExtractionJob {
     }
     val withFailed =
       if (df.columns.contains("failed"))
-        df.withColumn("failed",
-          coalesce(col("failed").cast("boolean"), lit(false)))
+        df.withColumn("failed", isFailed)
       else df.withColumn("failed", lit(false))
     withFailed.write.mode(SaveMode.Overwrite).partitionBy("failed")
       .parquet(tmp.toString)
@@ -309,9 +312,9 @@ object ExtractionJob {
     if (cfg.retryFailed) {
       val all = cfg.io.read(spark, cfg.extractedTable)
       if (all.columns.contains("failed")) {
-        val stillFailing = all.filter(coalesce(col("failed").cast("boolean"), lit(false)))
+        val stillFailing = all.filter(isFailed)
           .drop("failed")
-          .join(all.filter(!coalesce(col("failed").cast("boolean"), lit(false)))
+          .join(all.filter(!isFailed)
             .select("url"), Seq("url"), "left_anti")
           .dropDuplicates("url")
         cfg.io.replacePartition(spark, cfg.extractedTable, "failed", "true",

@@ -10,8 +10,8 @@ import graft.geom.Kde
   * boxes → edge-midpoint kNN sample → KDE thresholds (x horizontal,
   * y vertical) → 4-direction NN join → connected components → envelopes →
   * margin filter → pinp(7)/pinp2(10)/pinp(7) containment merges →
-  * optional layout-class filter → paragraph order walk → per-paragraph
-  * line sort → final 1-based word order.
+  * paragraph order walk → per-paragraph line sort → final 1-based word
+  * order. The margins are zero: the engine never trims a page edge.
   *
   * Pure per-page Scala: in the Spark job this runs inside the typed
   * mapPartitions over the page rows; nothing here touches more than one
@@ -19,21 +19,11 @@ import graft.geom.Kde
   */
 object ReadingOrderPipeline {
 
-  final case class Config(
-      widthP: Double = 0.0,
-      headerP: Double = 0.0,
-      footerP: Double = 0.0,
-      zones: Map[String, Seq[(Double, Double, Double, Double)]] = Map.empty)
+  final case class Result(regions: Vector[Region])
 
-  final case class Result(
-      paragraphs: Vector[Para],
-      regions: Vector[Region],
-      xThreshold: Int,
-      yThreshold: Int)
-
-  def run(words: IndexedSeq[Word], pageW: Int, pageH: Int,
-          cfg: Config = Config()): Result = {
-    if (words.isEmpty) return Result(Vector.empty, Vector.empty, 0, 0)
+  /** The pipeline's first five stages: neighbour sample → two KDE
+    * thresholds → 4-direction links → components → paragraph envelopes. */
+  def envelopes(words: IndexedSeq[Word]): Vector[Para] = {
     val boxes = words.map(_.bbox)
 
     // J5 + A5: adaptive distance thresholds
@@ -46,31 +36,29 @@ object ReadingOrderPipeline {
     val components =
       Neighbors.connectedComponents(boxes.length, Seq(right, left, top, bottom))
 
-    // A1 + F5
-    val envs = Paragraphs.envelopes(components, words)
-    val afterMargins =
-      Paragraphs.ignoreMargins(envs, pageW, pageH, cfg.widthP, cfg.headerP, cfg.footerP)
+    // A1
+    Paragraphs.envelopes(components, words)
+  }
+
+  def run(words: IndexedSeq[Word], pageW: Int, pageH: Int): Result = {
+    if (words.isEmpty) return Result(Vector.empty)
+
+    // F5
+    val afterMargins = Paragraphs.ignoreMargins(envelopes(words), pageW, pageH, 0.0, 0.0, 0.0)
 
     // J6: pinp(7) → pinp2(10) → pinp(7) (reference: paragraph.py:109-116)
     val afterPinp =
       if (afterMargins.length >= 3) {
-        val p1 = Paragraphs.pinp(afterMargins, pageW, pageH, cfg.widthP, cfg.headerP, cfg.footerP, theta = 7)
-        val p2 = Paragraphs.pinp2(p1, pageW, pageH, cfg.widthP, cfg.headerP, cfg.footerP, theta = 10)
-        Paragraphs.pinp(p2, pageW, pageH, cfg.widthP, cfg.headerP, cfg.footerP, theta = 7)
+        val p1 = Paragraphs.pinp(afterMargins, pageW, pageH, 0.0, 0.0, 0.0, theta = 7)
+        val p2 = Paragraphs.pinp2(p1, pageW, pageH, 0.0, 0.0, 0.0, theta = 10)
+        Paragraphs.pinp(p2, pageW, pageH, 0.0, 0.0, 0.0, theta = 7)
       } else afterMargins
 
-    // F6 (optional)
-    val afterLayout =
-      if (cfg.zones.nonEmpty) Paragraphs.filterLayouts(afterPinp, cfg.zones)
-      else afterPinp
-
     // W3
-    val ordered = Paragraphs.paragraphOrder(afterLayout)
+    val ordered = Paragraphs.paragraphOrder(afterPinp)
 
     // W1 + final emit, paragraphs visited in reading order
     val componentsInOrder = ordered.sortBy(_.order)(Ordering.Int).map(_.members)
-    val regions = WordOrder.finalWordOrder(componentsInOrder, words)
-
-    Result(ordered, regions, x, y)
+    Result(WordOrder.finalWordOrder(componentsInOrder, words))
   }
 }

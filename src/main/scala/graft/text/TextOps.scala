@@ -806,11 +806,10 @@ object TextOps {
     * Scale shape: the committed side reduces to DISTINCT (band, bucket)
     * — ~16-byte rows, one per committed doc per band, with the text
     * column never leaving its scan (in a standing pipeline this is the
-    * stored signature-bucket table, maintained incrementally and ideally
-    * bucket-table-clustered, see [[graft.io.Bucketed]]); the batch side
-    * anti-joins on (band, bucket) and a doc survives iff ALL its nBands
-    * rows survive — a count(=nBands) groupBy over nBands-per-doc rows,
-    * partial-aggregated. No pairs are ever materialized. */
+    * stored signature-bucket table, maintained incrementally); the batch
+    * side anti-joins on (band, bucket) and a doc survives iff ALL its
+    * nBands rows survive — a count(=nBands) groupBy over nBands-per-doc
+    * rows, partial-aggregated. No pairs are ever materialized. */
   def nearDupIngest(newDocs: DataFrame, committed: DataFrame,
                     nHashes: Int = 8, bandSize: Int = 4): DataFrame = {
     val nBands = nHashes / bandSize

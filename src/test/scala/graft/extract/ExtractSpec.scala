@@ -2,14 +2,14 @@ package graft.extract
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.UTF_8
-import graft.html.{Dom, Entities, Tokenizer, HtmlToken}
+import graft.html.{Dom, Entities, HtmlToken}
 import graft.pages.PageGen
 
 class ExtractSpec extends AnyFunSuite {
 
   test("tokenizer: tags, attrs, rawtext, comments, bare '<'") {
     val html = """<!DOCTYPE html><p class="a b" id=x>hi &amp; 5 < 10</p><script>if(a<b){}</script><!-- c -->"""
-    val toks = Tokenizer.tokenize(html.getBytes(UTF_8))
+    val toks = HtmlToken.tokenize(html.getBytes(UTF_8))
     assert(toks.collect { case HtmlToken.Start(n, _, _, _) => n } == Vector("p", "script"))
     val p = toks.collectFirst { case s: HtmlToken.Start if s.name == "p" => s }.get
     assert(p.attrs == List("class" -> "a b", "id" -> "x"))

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Locale
 import scala.collection.mutable.ArrayBuffer
 import graft.geom.BBox
-import graft.html.{Dom, HtmlToken, Outlink, Outlinks, Tokenizer}
+import graft.html.{Dom, HtmlToken, Outlink, Outlinks}
 import graft.pages.PageGen
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,7 +19,7 @@ class FrontEndSpec extends AnyFunSuite {
   import FrontEndSpec.Old
 
   private def check(name: String, bytes: Array[Byte]): Unit = {
-    assert(Tokenizer.tokenize(bytes) == Old.tokenize(bytes), s"$name tokens")
+    assert(HtmlToken.tokenize(bytes) == Old.tokenize(bytes), s"$name tokens")
 
     val dom = Dom.parse(bytes)
     val old = Old.parse(bytes)
@@ -517,18 +517,18 @@ object FrontEndSpec {
     def tablesOf(dom: Dom): Vector[TableStruct] = {
       val tables = ArrayBuffer.empty[Int]
       dom.walk(dom.root) { i => if (dom.tag(i) == "table") tables += i }
-      var yCursor = Tables.Margin
+      var yCursor = Extractor.MarginX
       tables.zipWithIndex.map { case (tableNode, tableIdx) =>
         val rows = ArrayBuffer.empty[Int]
         collectRows(dom, tableNode, rows)
-        val width = Tables.PageWidth - 2 * Tables.Margin
+        val width = Extractor.PageW - 2 * Extractor.MarginX
         val cellrows = rows.zipWithIndex.map { case (tr, r) =>
           val cells = ArrayBuffer.empty[Int]
           collectCells(dom, tr, cells)
           val cw = width / math.max(cells.length, 1)
-          r -> cells.indices.map(c => BBox(Tables.Margin + c * cw, yCursor + r * Tables.LineHeight, cw, Tables.LineHeight)).toVector
+          r -> cells.indices.map(c => BBox(Extractor.MarginX + c * cw, yCursor + r * Extractor.LineH, cw, Extractor.LineH)).toVector
         }.toMap
-        yCursor += rows.length * Tables.LineHeight + Tables.LineHeight
+        yCursor += rows.length * Extractor.LineH + Extractor.LineH
         TableStruct(tableIdx, rows.length, cellrows.valuesIterator.map(_.length).sum, cellrows)
       }.toVector
     }

@@ -20,9 +20,9 @@ class TablesSpec extends AnyFunSuite {
     // row 0 cells split the content width evenly and tile without overlap
     val r0 = t.cellrows(0)
     assert(r0(0).x2 == r0(1).x)
-    assert(r0.forall(_.h == Tables.LineHeight))
+    assert(r0.forall(_.h == Extractor.LineH))
     // rows stack one line apart
-    assert(t.cellrows(1).head.y == t.cellrows(0).head.y + Tables.LineHeight)
+    assert(t.cellrows(1).head.y == t.cellrows(0).head.y + Extractor.LineH)
   }
 
   test("thead/tbody indirection and th cells are traversed") {

@@ -45,6 +45,15 @@ class TextAttributesSpec extends AnyFunSuite {
     assert(attrs("<p>plain</p>").head.fontColor == "")
   }
 
+  test("blocks align with Extractor.blocksOf: skipped form and template subtrees count nothing") {
+    val html = "<p>Hello <button>Subscribe now</button></p>" +
+      "<template><p>x</p></template><p>World wide</p>"
+    val blocks = Extractor.blocksOf(Dom.parse(html.getBytes("UTF-8")))
+    val a = attrs(html)
+    assert(blocks.map(_.text) == Vector("Hello", "World wide"))
+    assert(a.map(_.chars) == blocks.map(_.text.count(!_.isWhitespace)))
+  }
+
   test("script/style/title text is never counted") {
     val a = attrs("<head><title>t</title><style>p{}</style></head><p>ok</p>")
     assert(a.map(_.chars).sum == 2)

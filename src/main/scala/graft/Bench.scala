@@ -91,13 +91,9 @@ object Bench {
     // GraphOps.edges rep costs 70+ s at sf0.1 vs ~3.4 s steady-state, and
     // best-of-2 alone only reached rep-2 territory, 5–9 s)
     locally {
-      import spark.implicits._
       val sample = spark.read.parquet(pagesPath).select("url", "html")
         .limit((PagesTable.rowsFor(sfName) / 20).toInt.max(500))
-      sample
-        .as[(String, Array[Byte])]
-        .mapPartitions(_.map { case (u, h) => graft.extract.Extractor.extract(u, h) })
-        .write.mode("overwrite").format("noop").save()
+      ExtractionJob.extract(sample).write.mode("overwrite").format("noop").save()
       graft.graph.GraphOps.edges(sample)
         .write.mode("overwrite").format("noop").save()
     }

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.extract.Extractor
 import graft.graph.GraphOps
+import graft.jobs.ExtractionJob
 import graft.pages.PagesTable
 import graft.sim.{Ann, AnnIndex}
 import graft.text.{LangId, ScriptId, TextOps}
@@ -33,12 +33,8 @@ object SparkEntry {
   private def pagesDf(s: SparkSession, sfDir: String): DataFrame =
     s.read.parquet(PagesTable.ensure(s, sfName(sfDir)))
 
-  private def extractedDf(s: SparkSession, sfDir: String): DataFrame = {
-    import s.implicits._
-    pagesDf(s, sfDir).select("url", "html").as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (u, h) => Extractor.extract(u, h) })
-      .toDF()
-  }
+  private def extractedDf(s: SparkSession, sfDir: String): DataFrame =
+    ExtractionJob.extract(pagesDf(s, sfDir)).toDF()
 
   /** PageRank iterations for g3 — the oracle unrolls the same count. */
   private val PrIters = 3

@@ -4,22 +4,14 @@ package graft.geom
   *
   * Mirrors the reference's `BoundingBox` record
   * (reference: server/modules/main/models.py:34-85). Structural equality is
-  * kept (Spark encoders need it); the reference's center-containment
-  * `__eq__` is exposed as the named predicate [[BBox.centerEq]].
+  * kept (Spark encoders need it). The reference's `center`, `overlaps` and
+  * center-containment `__eq__` have no counterpart: no layout stage uses
+  * them.
   */
 final case class BBox(x: Int, y: Int, w: Int, h: Int) {
   def x2: Int = x + w
   def y2: Int = y + h
   def area: Long = w.toLong * h.toLong
-
-  /** Center point with integer floor division
-    * (reference: models.py:60-65). */
-  def center: (Int, Int) = (x + w / 2, y + h / 2)
-
-  /** Closed-interval separating-axis overlap test
-    * (reference: models.py:67-75). Touching edges do NOT overlap. */
-  def overlaps(o: BBox): Boolean =
-    !(x + w <= o.x || o.x + o.w <= x || y + h <= o.y || o.y + o.h <= y)
 
   /** Edge midpoints as (x, y) doubles, used throughout the reading-order
     * pipeline (reference: routils/neighbor_utils.py:11-33). */
@@ -33,17 +25,6 @@ object BBox {
   /** (x1, y1, x2, y2) → BBox (reference: models.py:78-85). */
   def fromXyxy(x1: Int, y1: Int, x2: Int, y2: Int): BBox =
     BBox(x1, y1, x2 - x1, y2 - y1)
-
-  /** Mutual-center-containment equality — the reference's surprising
-    * `BoundingBox.__eq__` (reference: models.py:48-58). */
-  def centerEq(a: BBox, b: BBox): Boolean = {
-    val ac = (a.x + a.w / 2.0, a.y + a.h / 2.0)
-    val bc = (b.x + b.w / 2.0, b.y + b.h / 2.0)
-    b.x <= ac._1 && ac._1 <= b.x + b.w &&
-    b.y <= ac._2 && ac._2 <= b.y + b.h &&
-    a.x <= bc._1 && bc._1 <= a.x + a.w &&
-    a.y <= bc._2 && bc._2 <= a.y + a.h
-  }
 }
 
 /** 2-D point (edge midpoint, center, ...). */

@@ -2,16 +2,23 @@ package graft.jobs
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.TaskContext
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import graft.extract.{Extracted, Extractor}
 import graft.io.{ParquetTableIO, TableIO}
 
 /** Per-partition lineage row — the metrics table of the north rule
   * (docs parsed, bytes tokenized, extraction failures), replacing the
   * reference's stats counters and `logtime` prints
-  * (reference: server/modules/main/helper.py:14-15,313-318). */
+  * (reference: server/modules/main/helper.py:14-15,313-318). The one
+  * definition of its columns: the sidecar format, its read schema and
+  * the table's select all derive from these fields. */
 final case class PartitionMetrics(
     run_id: String,
     partition_id: Int,
@@ -19,6 +26,45 @@ final case class PartitionMetrics(
     bytes_tokenized: Long,
     extraction_failures: Long,
     wall_ms: Long)
+
+/** Where [[ExtractionJob.extract]] sends a busy task's counter row: one
+  * JSON sidecar per task attempt, `p<pid>-a<attempt>.json` under `dir`,
+  * written by the executor through the dir's own Hadoop FileSystem
+  * (hdfs/s3/local alike; the driver's Hadoop conf travels as one
+  * broadcast). */
+final class MetricsSink(val runId: String, dir: String,
+                        conf: Broadcast[SerializableConfiguration]) extends Serializable {
+
+  def write(m: PartitionMetrics): Unit = {
+    val attempt = Option(TaskContext.get()).fold(0)(_.attemptNumber())
+    // write-then-rename: a task killed mid-write (speculation,
+    // preemption) must not leave a truncated sidecar that the
+    // PERMISSIVE json read would turn into an all-null row
+    val path = new Path(s"$dir/p${m.partition_id}-a$attempt.json")
+    val tmp = new Path(s"$dir/.p${m.partition_id}-a$attempt.inprogress")
+    val fs = path.getFileSystem(conf.value.value)
+    val os = fs.create(tmp, true)
+    try os.write(MetricsSink.json(m, attempt).getBytes(StandardCharsets.UTF_8))
+    finally os.close()
+    // a false rename with the target present is a zombie twin of
+    // this attempt having already delivered the same bytes —
+    // benign; anything else must fail the task so a retry rewrites
+    if (!fs.rename(tmp, path) && !fs.exists(path))
+      throw new java.io.IOException(s"metrics sidecar rename $tmp -> $path failed")
+  }
+}
+
+object MetricsSink {
+
+  /** A sidecar line: the row's fields by name, then the writing attempt. */
+  private[jobs] val schema = Encoders.product[PartitionMetrics].schema.add("attempt", IntegerType)
+
+  private def json(m: PartitionMetrics, attempt: Int): String =
+    (m.productElementNames.zip(m.productIterator) ++ Iterator("attempt" -> attempt)).map {
+      case (k, v: String) => s""""$k":"${new String(JsonStringEncoder.getInstance.quoteAsString(v))}""""
+      case (k, v)         => s""""$k":$v"""
+    }.mkString("{", ",", "}")
+}
 
 /** @param io        the storage seam (SURVEY §7): ParquetTableIO in the
   *                   sandbox/tests, `new IcebergTableIO` + catalog conf on
@@ -47,7 +93,7 @@ final case class JobConfig(
   *   scan pages [url, html]  (columns pruned at the parquet reader)
   *   → LEFT ANTI join committed urls          (resume from checkpoint)
   *   → repartition(n, url)    n = max(4 × cores, scanned bytes / advisory)
-  *   → mapPartitions extractPage              (the per-page operator DAG)
+  *   → extract                (the one extraction operator, [[extract]])
   *   → append extracted + append metrics
   *
   * Scale notes: the anti-join's right side is url-only (Catalyst prunes),
@@ -63,13 +109,18 @@ final case class JobConfig(
   * All table reads/writes go through `cfg.io` ([[graft.io.TableIO]]);
   * only the pages INPUT path and the metric-sidecar scratch dir are raw
   * addresses (the input may equally be a catalog table read upstream and
-  * passed in as a DataFrame via [[extractDataset]]).
+  * passed in as a DataFrame via [[extract]]).
   */
 object ExtractionJob {
 
   /** The `failed` flag read as a boolean, null (a pre-`failed` row after a
     * schema merge) as false. */
   private def isFailed: Column = coalesce(col("failed").cast("boolean"), lit(false))
+
+  /** `path` with Hadoop's glob characters escaped: a Spark file read globs
+    * its path, and a run id, which names its sidecar dir, is free text. */
+  private def literalPath(path: String): String =
+    path.replaceAll("""([{}\[\]*?\\])""", """\\$1""")
 
   /** Urls already committed to the extracted table, or None on first run.
     * With `retryFailed` the rows whose extraction failed (committed with
@@ -184,29 +235,46 @@ object ExtractionJob {
     if (cfg.shuffle) graft.util.Spread.byKey(remaining, "url", raw) else remaining
   }
 
-  /** Run extraction; returns the extracted Dataset (not yet written). */
-  def extractDataset(spark: SparkSession, work: DataFrame, cfg: JobConfig): Dataset[Extracted] = {
+  /** The extraction operator — every Spark plan that extracts pages runs
+    * it, and nothing else in a plan calls [[Extractor.extract]]: one
+    * `mapPartitions` over the `(url, html)` columns of `work`. Each task
+    * counts docs, html bytes and failures as it goes; with a `sink`, a
+    * task that extracted a page hands its [[PartitionMetrics]] row to the
+    * sink once its partition is consumed (an empty task — the cost-sized
+    * count hashes a small or resumed input into some empty partitions —
+    * leaves no row). */
+  def extract(work: DataFrame, sink: Option[MetricsSink] = None): Dataset[Extracted] = {
+    val spark = work.sparkSession
     import spark.implicits._
-    work.as[(String, Array[Byte])].mapPartitions(_.map { case (url, html) =>
-      Extractor.extract(url, html)
-    })
+    work.select("url", "html").as[(String, Array[Byte])].mapPartitions { it =>
+      val t0 = System.nanoTime()
+      var docs, bytes, failures = 0L
+      val out = it.map { case (url, html) =>
+        docs += 1
+        if (html != null) bytes += html.length
+        val e = Extractor.extract(url, html)
+        if (e.failed) failures += 1
+        e
+      }
+      // `++` evaluates its argument only once `out` is exhausted
+      sink.fold(out)(s => out ++ {
+        if (docs > 0) s.write(PartitionMetrics(s.runId, TaskContext.getPartitionId(),
+          docs, bytes, failures, (System.nanoTime() - t0) / 1000000))
+        Iterator.empty
+      })
+    }
   }
 
-  /** One JSON line per counter row — the executor-side sidecar format. */
-  private def metricsJson(m: PartitionMetrics, attempt: Int): String =
-    s"""{"run_id":"${m.run_id}","partition_id":${m.partition_id},""" +
-      s""""docs_parsed":${m.docs_parsed},"bytes_tokenized":${m.bytes_tokenized},""" +
-      s""""extraction_failures":${m.extraction_failures},"wall_ms":${m.wall_ms},""" +
-      s""""attempt":$attempt}"""
+  /** Run extraction; returns the extracted Dataset (not yet written, and
+    * no metrics: a run's sidecar names are `run`'s alone). */
+  def extractDataset(spark: SparkSession, work: DataFrame, cfg: JobConfig): Dataset[Extracted] =
+    extract(work)
 
   /** Full job: extract → append extracted + append metrics rows.
     *
-    * Lineage is gathered inside the same pass (one counter row per task
-    * that extracted a page, flushed after the partition is fully
-    * consumed) and written BY THE EXECUTOR to a per-task sidecar file
-    * under `metrics_raw/<runId>/` of the scratch dir, through the path's
-    * own Hadoop FileSystem (hdfs/s3/local all work; the Hadoop conf
-    * travels as a broadcast entry map).
+    * Lineage is gathered inside the same pass: [[extract]] hands each busy
+    * task's counter row to a [[MetricsSink]] that writes it BY THE
+    * EXECUTOR to a sidecar under `metrics_raw/<runId>/` of the scratch dir.
     * The driver never accumulates per-task rows, so 10⁷–10⁸ tasks at the
     * 10^12-row scale cost the driver nothing; after the write action the
     * sidecars are compacted into the `metrics` table in one small job and
@@ -226,72 +294,11 @@ object ExtractionJob {
     // partition (TableIO.recover) and a half-done swap would otherwise
     // let a plain resume re-attempt permanently-failing urls
     cfg.io.recover(spark, cfg.extractedTable)
-    val work = planWorkSet(spark, cfg)
-    val runId = cfg.runId
-    val rawDir = s"${cfg.scratch}/metrics_raw/$runId"
-
-    // the executor rebuilds a Hadoop Configuration from this entry map
-    // (Configuration itself is not serializable)
-    val confEntries = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val it = conf.iterator()
-      val b = Map.newBuilder[String, String]
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-      b.result()
-    }
-    val confBc = spark.sparkContext.broadcast(confEntries)
-
-    val extracted: Dataset[Extracted] =
-      work.as[(String, Array[Byte])].mapPartitions { it =>
-        val t0 = System.nanoTime()
-        var docs = 0L
-        var bytes = 0L
-        var failures = 0L
-        val tc = TaskContext.get()
-        val pid = TaskContext.getPartitionId()
-        val out = it.map { case (url, html) =>
-          docs += 1
-          if (html != null) bytes += html.length
-          val e = Extractor.extract(url, html)
-          if (e.failed) failures += 1
-          e
-        }
-        // wrap so the counter sidecar flushes after the partition is consumed
-        new Iterator[Extracted] {
-          def hasNext: Boolean = {
-            val h = out.hasNext
-            if (!h) flush()
-            h
-          }
-          def next(): Extracted = out.next()
-          private var flushed = false
-          // an empty task (the cost-sized count hashes a small or resumed
-          // input into some empty partitions) leaves no metrics row
-          private def flush(): Unit = if (!flushed && docs > 0) {
-            flushed = true
-            val wallMs = (System.nanoTime() - t0) / 1000000
-            val m = PartitionMetrics(runId, pid, docs, bytes, failures, wallMs)
-            val attempt = if (tc != null) tc.attemptNumber() else 0
-            val conf = new org.apache.hadoop.conf.Configuration(false)
-            confBc.value.foreach { case (k, v) => conf.set(k, v) }
-            // write-then-rename: a task killed mid-write (speculation,
-            // preemption) must not leave a truncated sidecar that the
-            // PERMISSIVE json read would turn into an all-null row
-            val path = new org.apache.hadoop.fs.Path(s"$rawDir/p$pid-a$attempt.json")
-            val tmp = new org.apache.hadoop.fs.Path(s"$rawDir/.p$pid-a$attempt.inprogress")
-            val fs = path.getFileSystem(conf)
-            val os = fs.create(tmp, true)
-            try os.write(metricsJson(m, attempt).getBytes(StandardCharsets.UTF_8))
-            finally os.close()
-            // a false rename with the target present is a zombie twin of
-            // this attempt having already delivered the same bytes —
-            // benign; anything else must fail the task so a retry rewrites
-            if (!fs.rename(tmp, path) && !fs.exists(path))
-              throw new java.io.IOException(
-                s"metrics sidecar rename $tmp -> $path failed")
-          }
-        }
-      }
+    val rawDir = s"${cfg.scratch}/metrics_raw/${cfg.runId}"
+    val sc = spark.sparkContext
+    val sink = new MetricsSink(cfg.runId, rawDir,
+      sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)))
+    val extracted = extract(planWorkSet(spark, cfg), Some(sink))
 
     // `failed` as a partition column: the (tiny) failure partition stays
     // physically separate from the success rows, so readers prune it and
@@ -322,26 +329,21 @@ object ExtractionJob {
       }
     }
 
-    // compact sidecars → metrics table (dedupe retries: max attempt wins)
-    val rawPath = new org.apache.hadoop.fs.Path(rawDir)
-    val fs = rawPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // compact sidecars → metrics table (dedupe retries: max attempt wins);
+    // the raw dir exists only if some task wrote a sidecar
+    val rawPath = new Path(rawDir)
+    val fs = rawPath.getFileSystem(sc.hadoopConfiguration)
     if (fs.exists(rawPath)) {
-      val raw = spark.read
-        .schema("run_id string, partition_id int, docs_parsed long, " +
-          "bytes_tokenized long, extraction_failures long, wall_ms long, attempt int")
-        .json(rawDir)
+      val raw = spark.read.schema(MetricsSink.schema).json(literalPath(rawDir))
         // belt over the rename braces: a malformed sidecar parses to an
         // all-null row under PERMISSIVE; drop it instead of letting
-        // .as[PartitionMetrics] throw on null non-nullable fields
+        // readMetrics' .as[PartitionMetrics] throw on null non-nullable fields
         .filter(col("run_id").isNotNull && col("partition_id").isNotNull)
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("run_id", "partition_id").orderBy(col("attempt").desc)
       val rows = raw.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select("run_id", "partition_id", "docs_parsed", "bytes_tokenized",
-          "extraction_failures", "wall_ms")
-        .as[PartitionMetrics]
-      if (!rows.isEmpty)
-        cfg.io.append(rows.toDF(), cfg.metricsTable)
+        .select(Encoders.product[PartitionMetrics].schema.fieldNames.map(col).toIndexedSeq: _*)
+      cfg.io.append(rows, cfg.metricsTable)
       fs.delete(rawPath, true)
     }
 

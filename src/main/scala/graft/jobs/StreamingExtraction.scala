@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigger}
-import graft.extract.{Extracted, Extractor}
+import graft.extract.Extracted
 
 /** Running per-host crawl-progress state (mapGroupsWithState). */
 final case class HostState(docs: Long, bytes: Long)
@@ -341,15 +341,11 @@ object StreamingExtraction {
 
   def extractedStream(spark: SparkSession, pagesDir: String,
                       pagesSchemaFrom: String): Dataset[Extracted] = {
-    import spark.implicits._
     val schema = spark.read.parquet(pagesSchemaFrom).schema
-    spark.readStream
+    ExtractionJob.extract(spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 8) // bounded micro-batches
-      .parquet(pagesDir)
-      .select("url", "html")
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (u, h) => Extractor.extract(u, h) })
+      .parquet(pagesDir))
   }
 
   /** Start the stream; caller awaits/stops. */

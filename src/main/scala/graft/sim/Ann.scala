@@ -119,10 +119,10 @@ object Ann {
     * passes — same join/shuffle shape) if per-cell joins grow too big. */
   val MaxAutoCells = 4096
 
-  /** Auto-scaled cell count: ~√n cells keeps per-cell JOIN work linear in
-    * n, clamped to [[MaxAutoCells]] (see above). */
-  def autoCells(n: Long): Int =
-    math.max(4, math.min(MaxAutoCells, math.ceil(math.sqrt(n.toDouble)).toInt))
+  /** Auto-scaled cell count of a row count `n`: ~√n cells keeps per-cell
+    * JOIN work linear in n, clamped to [4, [[MaxAutoCells]]] (see above). */
+  def autoCells(n: Column): Column =
+    greatest(lit(4L), least(lit(MaxAutoCells.toLong), ceil(sqrt(n)).cast("long")))
 
   /** The family's one centroid table: the md5-stride sample ([[centroids]])
     * of `v` (vec_id, e) at ≈`cells` seeds, or [[autoCells]] of the row
@@ -132,10 +132,7 @@ object Ann {
     * no separate `emb.count()` action, so a 10⁹-row table is scanned
     * once, not twice per query. */
   def cellCentroids(v: DataFrame, cells: Int): DataFrame = {
-    val cellsCol =
-      if (cells > 0) lit(cells.toLong)
-      else greatest(lit(4L),
-        least(lit(MaxAutoCells.toLong), ceil(sqrt(col("n"))).cast("long")))
+    val cellsCol = if (cells > 0) lit(cells.toLong) else autoCells(col("n"))
     val par = v.agg(count(lit(1)).as("n"))
       .select(greatest(lit(1L), floor(col("n") / cellsCol).cast("long")).as("stride"))
     centroids(v.crossJoin(broadcast(par)), col("stride"))
@@ -469,31 +466,6 @@ object Ann {
       .select(ks :+ coalesce(col("cv"), col("pcv")).as("cv"): _*)
   }
 
-  /** Product-quantization codebooks + codes over the SQ code space — the
-    * memory path PAST scalar quantization. The d-dim integer code vector
-    * is cut into `subspaces` contiguous subvectors; each subspace learns
-    * its own `ksub`-centroid codebook by the same deterministic
-    * integer-exact Lloyd rounds as [[kmeansAssign]] (md5-stride seeds
-    * salted "pq:", exact squared-L2, cluster-asc ties, floor-mean
-    * updates, empty cells keep their previous centroid). A vector's PQ
-    * code is its per-subspace nearest-centroid id — `subspaces` small
-    * ints instead of d, an 8× shrink vs the SQ codes at d=64/M=8 (32× vs
-    * float32): at 10⁹ vectors the resident neighbor index drops to ~10 GB
-    * cluster-wide, comfortably cacheable.
-    *
-    * Scale shape: the subspace id is DATA (one `explode(sequence)` per
-    * row), so all M codebooks train in ONE DAG — assignment is a
-    * broadcast equi-join on `sub` (codebook table is M·ksub·(d/M) = d·ksub
-    * values, a few KB) + a map-side-combinable `min(struct(dist,
-    * cluster))` groupBy, and the update is a (sub, cluster, j)-keyed
-    * partial-aggregated groupBy. No window over n·ksub rows anywhere.
-    *
-    * Returns (codes, codebook): codes = (vec_id, sub, cluster); codebook =
-    * (sub, cluster, cv array<long>) after `iters` Lloyd rounds. */
-  def pqModel(emb: DataFrame, subspaces: Int = 8, ksub: Int = 16,
-              iters: Int = 1): (DataFrame, DataFrame) =
-    pqModelFromCodes(graft.util.CacheOnce(sqQuantize(emb)), subspaces, ksub, iters)
-
   /** Cut each code vector into `subspaces` contiguous subvectors:
     * (vec_id, sub, sv). The subspace id is DATA (explode), so all M
     * codebooks train/encode in one DAG. */
@@ -540,9 +512,29 @@ object Ann {
       .select((col("vec_id") +: keys.map(col)) :+
         flatten(transform(col("a"), s => s.getField("cv"))).as("rv"): _*)
 
-  /** [[pqModel]] over an already-quantized (and ideally cached) code
-    * table — lets [[pqKnn]] share ONE quantization pass between codebook
-    * training and the ADC query side. */
+  /** Product-quantization codebooks + codes over the SQ code table `qv`
+    * (vec_id, qv) of [[sqQuantize]] — the memory path PAST scalar
+    * quantization. Pass it cached, so [[pqKnn]] shares ONE quantization
+    * pass between codebook training and the ADC query side. The d-dim integer code vector
+    * is cut into `subspaces` contiguous subvectors; each subspace learns
+    * its own `ksub`-centroid codebook by the same deterministic
+    * integer-exact Lloyd rounds as [[kmeansAssign]] (md5-stride seeds
+    * salted "pq:", exact squared-L2, cluster-asc ties, floor-mean
+    * updates, empty cells keep their previous centroid). A vector's PQ
+    * code is its per-subspace nearest-centroid id — `subspaces` small
+    * ints instead of d, an 8× shrink vs the SQ codes at d=64/M=8 (32× vs
+    * float32): at 10⁹ vectors the resident neighbor index drops to ~10 GB
+    * cluster-wide, comfortably cacheable.
+    *
+    * Scale shape: the subspace id is DATA (one `explode(sequence)` per
+    * row), so all M codebooks train in ONE DAG — assignment is a
+    * broadcast equi-join on `sub` (codebook table is M·ksub·(d/M) = d·ksub
+    * values, a few KB) + a map-side-combinable `min(struct(dist,
+    * cluster))` groupBy, and the update is a (sub, cluster, j)-keyed
+    * partial-aggregated groupBy. No window over n·ksub rows anywhere.
+    *
+    * Returns (codes, codebook): codes = (vec_id, sub, cluster); codebook =
+    * (sub, cluster, cv array<long>) after `iters` Lloyd rounds. */
   def pqModelFromCodes(qv: DataFrame, subspaces: Int, ksub: Int,
                        iters: Int): (DataFrame, DataFrame) = {
     val sv = pqSubvectors(qv, subspaces)
@@ -574,7 +566,7 @@ object Ann {
     * id-asc ties), the MIPS analogue on the min-max-normalised code
     * space — deliberately its own semantics, like [[sqKnn]].
     *
-    * Scale shape on top of [[pqModel]]: the reconstruction join is
+    * Scale shape on top of [[pqModelFromCodes]]: the reconstruction join is
     * broadcast (codebook is KBs), the per-cell candidate join ships
     * M-int codes instead of d-dim vectors, and the top-k compiles to
     * WindowGroupLimit (partial top-k below the exchange). Assignment and

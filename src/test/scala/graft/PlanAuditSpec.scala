@@ -76,7 +76,10 @@ class PlanAuditSpec extends AnyFunSuite with SparkSuite {
   test("IVF centroid broadcast stays bounded by the cell cap") {
     // the capped auto-cell count bounds the broadcast row count: even at
     // 10^9 vectors the centroid table is <= 4096 rows (~2 MB at dim 128)
-    assert(graft.sim.Ann.autoCells(Long.MaxValue) == graft.sim.Ann.MaxAutoCells)
+    val s = spark
+    import s.implicits._
+    assert(Seq(Long.MaxValue).toDF("n").select(graft.sim.Ann.autoCells($"n")).as[Long].head()
+      == graft.sim.Ann.MaxAutoCells)
     // and the explicit-cells path honours the caller's bound
     val assign = graft.sim.Ann.ivfAssign(
       spark.read.parquet(s"$sf/embeddings.parquet"), cells = 8, nprobe = 2)

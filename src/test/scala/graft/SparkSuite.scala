@@ -4,16 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** The one test session: [[Sessions.get]] on `local[4]` with 4 shuffle
-  * partitions and ERROR logging; built before the suite's first test and
-  * stopped after its last. */
+  * partitions (or a suite's own `sessionConf`) and ERROR logging; built
+  * before the suite's first test and stopped after its last. */
 trait SparkSuite extends BeforeAndAfterAll { this: Suite =>
 
   private var session: SparkSession = _
   protected def spark: SparkSession = session
+  protected def sessionConf: Map[String, String] = SparkSuite.Local4
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    session = Sessions.get(suiteName, SparkSuite.Local4)
+    session = Sessions.get(suiteName, sessionConf)
     session.sparkContext.setLogLevel("ERROR")
   }
 

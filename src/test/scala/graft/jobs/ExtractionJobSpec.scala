@@ -36,6 +36,16 @@ class ExtractionJobSpec extends AnyFunSuite with SparkSuite {
     assert(ExtractionJob.readMetrics(spark, cfg).collect().map(_.extraction_failures).sum == 1)
   }
 
+  test("a run id with a quote and a backslash keeps its metrics rows") {
+    val runId = "r\"1\\x"
+    val cfg = JobConfig(s"$tmp/runid/pages", s"$tmp/runid/out", runId = runId)
+    PagesTable.generate(spark, seed = 5L, n = 40, partitions = 2).write.parquet(cfg.pagesPath)
+    assert(ExtractionJob.run(spark, cfg) == 40, "run returns this run's successes")
+    val m = ExtractionJob.readMetrics(spark, cfg).collect()
+    assert(m.nonEmpty && m.forall(_.run_id == runId), m.mkString("\n"))
+    assert(m.map(_.docs_parsed).sum == 40)
+  }
+
   test("extraction job: full run, byte-identical text, resume anti-join, metrics reconcile") {
     val pagesPath = s"$tmp/pages"
     val outPath = s"$tmp/out"

@@ -89,10 +89,12 @@ class AnnSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("autoCells scales as sqrt(n) and clamps at MaxAutoCells") {
-    assert(Ann.autoCells(16) == 4)
-    assert(Ann.autoCells(500) == 23)
-    assert(Ann.autoCells(16777216) == 4096)
-    assert(Ann.autoCells(1000000000L) == 4096,
+    val s = spark
+    import s.implicits._
+    val cells = Seq(16L, 500L, 16777216L, 1000000000L).toDF("n")
+      .select(Ann.autoCells($"n")).as[Long].collect().toSeq
+    assert(cells.take(3) == Seq(4L, 23L, 4096L))
+    assert(cells(3) == 4096L,
       "at 10^9 vectors the cap must bind (bounded broadcast + O(n*4096) assignment)")
   }
 
@@ -304,7 +306,8 @@ class AnnSpec extends AnyFunSuite with SparkSuite {
 
   test("PQ model: code/codebook shapes, seed clusters, reconstruction dimension") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val (codes, book) = Ann.pqModel(emb, subspaces = 8, ksub = 16, iters = 1)
+    val (codes, book) = Ann.pqModelFromCodes(graft.util.CacheOnce(Ann.sqQuantize(emb)),
+      subspaces = 8, ksub = 16, iters = 1)
     val c = codes.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(c.length == 500 * 8, s"one code per (vector, subspace): ${c.length}")
     assert(c.map(_._2).distinct.sorted.toSeq == (0 until 8),

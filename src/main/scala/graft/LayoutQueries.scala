@@ -1,24 +1,23 @@
 package graft
 
-import graft.extract.Extractor
+import graft.extract.{BlockOut, Extractor}
 import graft.geom.BBox
 import graft.html.Dom
 import graft.layout._
 
 /** Per-page layout-operator drivers for the query surface: build
-  * deterministic detector box sets from a page's extracted blocks and run
-  * the ensemble-merge / projection operators over them. The second and
+  * deterministic detector box sets from a page's extracted blocks (the
+  * `blocks` of [[graft.jobs.ExtractionJob.extract]]'s rows) and run the
+  * ensemble-merge / projection operators over them. The second and
   * third "detectors" are jittered variants of the first (pure function of
   * the box geometry), standing in for the reference's multi-model
   * ensembles (V-05.xx). */
 object LayoutQueries {
 
-  private def blockBoxes(url: String, html: Array[Byte]): Vector[Region] = {
-    val ex = Extractor.extract(url, html)
-    ex.blocks.iterator.zipWithIndex.map { case (b, i) =>
+  private def blockBoxes(blocks: Array[BlockOut]): Vector[Region] =
+    blocks.iterator.zipWithIndex.map { case (b, i) =>
       Region(BBox(b.x, b.y, b.w, b.h), order = i + 1, line = b.line)
     }.toVector
-  }
 
   /** Deterministic jitter: shift/scale derived from box coordinates. */
   private def jitter(rs: Vector[Region], dx: Int, dy: Int, grow: Int): Vector[Region] =
@@ -28,15 +27,15 @@ object LayoutQueries {
         math.max(1, b.w + grow), math.max(1, b.h + grow)), order = 0, line = r.line)
     }
 
-  def mergeEnsemble(url: String, html: Array[Byte]): (String, Int, Long) = {
-    val set1 = blockBoxes(url, html)
+  def mergeEnsemble(url: String, blocks: Array[BlockOut]): (String, Int, Long) = {
+    val set1 = blockBoxes(blocks)
     val set2 = jitter(set1, 3, 2, 4)
     val merged = Merge.mergePipelineTwo(set1, set2)
     (url, merged.length, merged.iterator.map(_.order.toLong).sum)
   }
 
-  def mergeThreeV3(url: String, html: Array[Byte]): (String, Int, Long) = {
-    val set1 = blockBoxes(url, html)
+  def mergeThreeV3(url: String, blocks: Array[BlockOut]): (String, Int, Long) = {
+    val set1 = blockBoxes(blocks)
     val set2 = jitter(set1, 3, 2, 4)
     val set3 = jitter(set1, -2, 5, -2)
     val merged = MergeV3.mergePipelineThreeV3(set1, set2, set3)
@@ -46,9 +45,8 @@ object LayoutQueries {
   /** W4 + W5: top-down/left-right paragraph sort, then column grouping —
     * runs the pipeline's envelope prefix and the two column operators
     * over it; emits per-page column stats. */
-  def columns(url: String, html: Array[Byte]): (String, Int, Int, Long) = {
-    val ex = Extractor.extract(url, html)
-    val words = ex.blocks.iterator.zipWithIndex.map { case (b, i) =>
+  def columns(url: String, blocks: Array[BlockOut]): (String, Int, Int, Long) = {
+    val words = blocks.iterator.zipWithIndex.map { case (b, i) =>
       Word(i, BBox(b.x, b.y, b.w, b.h))
     }.toVector
     if (words.isEmpty) return (url, 0, 0, 0L)
@@ -60,13 +58,12 @@ object LayoutQueries {
 
   /** F6: layout-class filter — table/figure blocks become zones; paragraph
     * envelopes ≥50% inside them are dropped. Emits (kept, dropped). */
-  def layoutFilter(url: String, html: Array[Byte]): (String, Int, Int) = {
-    val ex = Extractor.extract(url, html)
-    val zones = ex.blocks.iterator
+  def layoutFilter(url: String, blocks: Array[BlockOut]): (String, Int, Int) = {
+    val zones = blocks.iterator
       .filter(b => b.label == "table_cell" || b.label == "caption")
       .map(b => (b.x.toDouble, b.y.toDouble, (b.x + b.w).toDouble, (b.y + b.h).toDouble))
       .toSeq
-    val paras = ex.blocks.iterator.zipWithIndex.map { case (b, i) =>
+    val paras = blocks.iterator.zipWithIndex.map { case (b, i) =>
       Para(members = Vector(i), id = i,
         top = graft.geom.Pt(b.x + b.w / 2.0, b.y.toDouble),
         bottom = graft.geom.Pt(b.x + b.w / 2.0, (b.y + b.h).toDouble),
@@ -94,8 +91,8 @@ object LayoutQueries {
 
   /** F1/F2/F9: detector-side filter chain over a deterministic box set
     * with synthetic confidences (pure function of geometry). */
-  def detectorFilters(url: String, html: Array[Byte]): (String, Int, Int, Int, Int) = {
-    val raw = blockBoxes(url, html).zipWithIndex.map { case (r, i) =>
+  def detectorFilters(url: String, blocks: Array[BlockOut]): (String, Int, Int, Int, Int) = {
+    val raw = blockBoxes(blocks).zipWithIndex.map { case (r, i) =>
       // synthetic confidence in [-0.1, 0.9] derived from coordinates
       r.copy(confidence = ((r.bbox.x * 31 + r.bbox.y * 17 + i) % 100) / 100.0 - 0.1)
     }
@@ -122,10 +119,9 @@ object LayoutQueries {
     * block-ink grid, then padding clamped to the page
     * (reference: post_helper.py:10-35 `process_region` + 57-79
     * `add_region_padding`). Emits the post-processed xyxy per block. */
-  def postprocess(url: String, html: Array[Byte], padding: Int = 5)
+  def postprocess(url: String, blocks: Array[BlockOut], padding: Int = 5)
       : Seq[(String, Int, Int, Int, Int, Int)] = {
-    val ex = Extractor.extract(url, html)
-    val boxes = ex.blocks.map(b => BBox(b.x, b.y, b.w, b.h)).toIndexedSeq
+    val boxes = blocks.map(b => BBox(b.x, b.y, b.w, b.h)).toIndexedSeq
     if (boxes.isEmpty) return Seq.empty
     val pageW = Extractor.PageW
     val pageH = math.max(boxes.iterator.map(_.y2).max + 40, 200)
@@ -140,8 +136,8 @@ object LayoutQueries {
   /** Hi-SAM line→paragraph grouping over the page's projection-profile
     * lines (each line = one run box), geometric affinity at the
     * reference's default threshold shape. */
-  def hisamGroups(url: String, html: Array[Byte]): (String, Int, Int) = {
-    val boxes = blockBoxes(url, html)
+  def hisamGroups(url: String, blocks: Array[BlockOut]): (String, Int, Int) = {
+    val boxes = blockBoxes(blocks)
     if (boxes.isEmpty) return (url, 0, 0)
     val height = boxes.iterator.map(_.bbox.y2).foldLeft(200)(math.max) + 20
     val hpp = new Array[Long](height)
@@ -160,21 +156,19 @@ object LayoutQueries {
     * admit NO exact .5 rounding ties (96x=100k+50 has no integer
     * solution), so the oracle's plain round() agrees with rint on every
     * representable input. */
-  def geometryProjection(url: String, html: Array[Byte])
-      : Seq[(String, Int, Int, Int, Int, Int)] = {
-    val ex = Extractor.extract(url, html)
-    ex.blocks.iterator.zipWithIndex.map { case (b, i) =>
+  def geometryProjection(url: String, blocks: Array[BlockOut])
+      : Seq[(String, Int, Int, Int, Int, Int)] =
+    blocks.iterator.zipWithIndex.map { case (b, i) =>
       val norm = (b.x / 4000.0, b.y / 8000.0,
         (b.x + b.w) / 4000.0, (b.y + b.h) / 8000.0)
       val bb = Filters.geometryProjection(norm, pageW = 960, pageH = 1280, padding = 3)
       (url, i, bb.x, bb.y, bb.w, bb.h)
     }.toSeq
-  }
 
   /** Projection-profile line segmentation over the pseudo-page ink
     * density (block boxes rasterised onto the y axis). */
-  def projectionLines(url: String, html: Array[Byte]): (String, Int, Long) = {
-    val boxes = blockBoxes(url, html)
+  def projectionLines(url: String, blocks: Array[BlockOut]): (String, Int, Long) = {
+    val boxes = blockBoxes(blocks)
     val height = boxes.iterator.map(_.bbox.y2).foldLeft(200)(math.max) + 20
     val hpp = new Array[Long](height)
     for (r <- boxes; y <- r.bbox.y until r.bbox.y2) hpp(y) += r.bbox.w.toLong

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.extract.BlockOut
 import graft.graph.GraphOps
 import graft.jobs.ExtractionJob
 import graft.pages.PagesTable
@@ -35,6 +37,13 @@ object SparkEntry {
 
   private def extractedDf(s: SparkSession, sfDir: String): DataFrame =
     ExtractionJob.extract(pagesDf(s, sfDir)).toDF()
+
+  /** A per-page layout driver over the extraction operator's rows: the
+    * rows `f` emits for each page's (url, blocks), as columns `cols`. */
+  private def layoutRows[T <: Product : TypeTag](s: SparkSession, sfDir: String,
+      cols: String*)(f: (String, Array[BlockOut]) => IterableOnce[T]): DataFrame =
+    ExtractionJob.extract(pagesDf(s, sfDir))
+      .flatMap(e => f(e.url, e.blocks))(Encoders.product[T]).toDF(cols: _*)
 
   /** PageRank iterations for g3 — the oracle unrolls the same count. */
   private val PrIters = 3
@@ -98,64 +107,40 @@ object SparkEntry {
           max(col("b.order")).as("ord_max"),
           countDistinct(col("b.order")).as("n_ord_distinct"))),
 
-    "l2_merge_ensemble" -> ((s, d) => {
-      import s.implicits._
-      pagesDf(s, d).select("url", "html").as[(String, Array[Byte])]
-        .map { case (u, h) => LayoutQueries.mergeEnsemble(u, h) }
-        .toDF("url", "n_merged", "order_sum")
-    }),
+    "l2_merge_ensemble" -> ((s, d) =>
+      layoutRows(s, d, "url", "n_merged", "order_sum")((u, b) =>
+        Some(LayoutQueries.mergeEnsemble(u, b)))),
 
-    "l3_merge3_v3" -> ((s, d) => {
-      import s.implicits._
-      pagesDf(s, d).select("url", "html").as[(String, Array[Byte])]
-        .map { case (u, h) => LayoutQueries.mergeThreeV3(u, h) }
-        .toDF("url", "n_merged", "order_sum")
-    }),
+    "l3_merge3_v3" -> ((s, d) =>
+      layoutRows(s, d, "url", "n_merged", "order_sum")((u, b) =>
+        Some(LayoutQueries.mergeThreeV3(u, b)))),
 
-    "l4_projection_lines" -> ((s, d) => {
-      import s.implicits._
-      pagesDf(s, d).select("url", "html").as[(String, Array[Byte])]
-        .map { case (u, h) => LayoutQueries.projectionLines(u, h) }
-        .toDF("url", "n_lines", "line_height_sum")
-    }),
+    "l4_projection_lines" -> ((s, d) =>
+      layoutRows(s, d, "url", "n_lines", "line_height_sum")((u, b) =>
+        Some(LayoutQueries.projectionLines(u, b)))),
 
-    "l5_columns" -> ((s, d) => {
-      import s.implicits._
-      pagesDf(s, d).select("url", "html").as[(String, Array[Byte])]
-        .map { case (u, h) => LayoutQueries.columns(u, h) }
-        .toDF("url", "n_paras", "n_cols", "order_sum")
-    }),
+    "l5_columns" -> ((s, d) =>
+      layoutRows(s, d, "url", "n_paras", "n_cols", "order_sum")((u, b) =>
+        Some(LayoutQueries.columns(u, b)))),
 
-    "l6_layout_filter" -> ((s, d) => {
-      import s.implicits._
-      pagesDf(s, d).select("url", "html").as[(String, Array[Byte])]
-        .map { case (u, h) => LayoutQueries.layoutFilter(u, h) }
-        .toDF("url", "kept", "dropped")
-    }),
+    "l6_layout_filter" -> ((s, d) =>
+      layoutRows(s, d, "url", "kept", "dropped")((u, b) =>
+        Some(LayoutQueries.layoutFilter(u, b)))),
 
     // A8+A9: 4-edge dilate + padding clamp per block
-    "l10_postprocess" -> ((s, d) => {
-      import s.implicits._
-      pagesDf(s, d).select("url", "html").as[(String, Array[Byte])]
-        .flatMap { case (u, h) => LayoutQueries.postprocess(u, h) }
-        .toDF("url", "idx", "x1", "y1", "x2", "y2")
-    }),
+    "l10_postprocess" -> ((s, d) =>
+      layoutRows(s, d, "url", "idx", "x1", "y1", "x2", "y2")((u, b) =>
+        LayoutQueries.postprocess(u, b))),
 
     // F3: normalized-coordinate geometry projection per block
-    "l11_geometry_projection" -> ((s, d) => {
-      import s.implicits._
-      pagesDf(s, d).select("url", "html").as[(String, Array[Byte])]
-        .flatMap { case (u, h) => LayoutQueries.geometryProjection(u, h) }
-        .toDF("url", "idx", "gx", "gy", "gw", "gh")
-    }),
+    "l11_geometry_projection" -> ((s, d) =>
+      layoutRows(s, d, "url", "idx", "gx", "gy", "gw", "gh")((u, b) =>
+        LayoutQueries.geometryProjection(u, b))),
 
     // Hi-SAM line->paragraph grouping over projection-profile lines
-    "l12_hisam_groups" -> ((s, d) => {
-      import s.implicits._
-      pagesDf(s, d).select("url", "html").as[(String, Array[Byte])]
-        .map { case (u, h) => LayoutQueries.hisamGroups(u, h) }
-        .toDF("url", "n_lines", "n_paras")
-    }),
+    "l12_hisam_groups" -> ((s, d) =>
+      layoutRows(s, d, "url", "n_lines", "n_paras")((u, b) =>
+        Some(LayoutQueries.hisamGroups(u, b)))),
 
     "l7_text_attributes" -> ((s, d) => {
       import s.implicits._
@@ -205,12 +190,9 @@ object SparkEntry {
     }),
 
     // ---- F1/F2/F9: detector-side filters over jittered box sets --------
-    "l8_detector_filters" -> ((s, d) => {
-      import s.implicits._
-      pagesDf(s, d).select("url", "html").as[(String, Array[Byte])]
-        .map { case (u, h) => LayoutQueries.detectorFilters(u, h) }
-        .toDF("url", "n_raw", "n_conf", "n_size", "n_capped")
-    }),
+    "l8_detector_filters" -> ((s, d) =>
+      layoutRows(s, d, "url", "n_raw", "n_conf", "n_size", "n_capped")((u, b) =>
+        Some(LayoutQueries.detectorFilters(u, b)))),
 
     // ---- table structure (iitb/table): nrows/ncells/cellrows ----------
     "l9_table_structure" -> ((s, d) => {
@@ -556,7 +538,7 @@ object SparkEntry {
     "x18_robots_filter" -> ((s, d) => {
       val pages = pagesDf(s, d).select("url")
       val hosts = pages
-        .select(regexp_extract(col("url"), "^[a-z]+://([^/]+)", 1).as("host"))
+        .select(graft.web.UrlNorm.hostOf(col("url")).as("host"))
         .distinct()
       val n = regexp_extract(col("host"), "site(\\d+)", 1).cast("long")
       def rule(cond: org.apache.spark.sql.Column, prefix: String, allow: Boolean) =

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.util.CacheOnce.reroot
+import graft.web.UrlNorm.hostOf
 
 /** Web-graph operators over the outlink edge list — the host-graph /
   * link-analysis side of a Common-Crawl-style corpus pipeline (crawl
@@ -39,9 +41,6 @@ object GraphOps {
       }
       .toDF("src", "pos", "href", "anchor", "target")
   }
-
-  /** `scheme://host` → host. */
-  def hostOf(url: Column): Column = regexp_extract(url, "^[a-z]+://([^/]+)", 1)
 
   /** Host-level link graph: one row per (source host, destination host)
     * pair with link count, distinct linking pages and distinct targets.
@@ -118,17 +117,22 @@ object GraphOps {
     * re-rooted plan per round, loud non-convergence). Output:
     * `(host, component, is_keeper)` with component = min reachable host.
     */
-  def hostComponents(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val hostEdges = edges
+  def hostComponents(spark: SparkSession, edges: DataFrame): DataFrame =
+    graft.sim.Components.keepers(spark, hostsOf(edges), crossHostPairs(edges))
+
+  /** Distinct directed `(a, b)` host pairs of the cross-host edges. */
+  private def crossHostPairs(edges: DataFrame): DataFrame =
+    edges
       .select(hostOf(col("src")).as("a"), hostOf(col("target")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    val hosts = edges
+
+  /** Every host that appears at either end of an edge, once. */
+  private def hostsOf(edges: DataFrame): DataFrame =
+    edges
       .select(hostOf(col("src")).as("host"))
       .union(edges.select(hostOf(col("target")).as("host")))
       .distinct()
-    graft.sim.Components.keepers(spark, hosts, hostEdges)
-  }
 
   /** Synchronous label-propagation communities over the host graph
     * (Raghavan et al. 2007) — the DENSITY clustering that complements
@@ -159,10 +163,7 @@ object GraphOps {
   def lpaCommunities(spark: SparkSession, edges: DataFrame,
                      rounds: Int = 2): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val hp = edges
-      .select(hostOf(col("src")).as("a"), hostOf(col("target")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val hp = crossHostPairs(edges)
     // distinct AFTER symmetrization: if the crawl holds both directions
     // of a pair, the two swap legs would otherwise double a neighbour's
     // vote (votes are per distinct neighbour host, unweighted)
@@ -172,11 +173,7 @@ object GraphOps {
       .repartition(col("u"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     und.count() // materialize before the per-round joins branch off it
-    val hosts = edges
-      .select(hostOf(col("src")).as("host"))
-      .union(edges.select(hostOf(col("target")).as("host")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val hosts = hostsOf(edges).persist(StorageLevel.MEMORY_AND_DISK)
     var cur = hosts.select(col("host"), col("host").as("label"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     cur.count() // also materializes `hosts` (same job scans it)
@@ -189,16 +186,11 @@ object GraphOps {
       val won = votes.join(top, "v")
         .filter(col("cnt") === col("mx"))
         .groupBy("v").agg(min(col("label")).as("label"))
-      // re-rooted as a fresh plan leaf (the Components/hits idiom): the
-      // vote chain references `votes` twice (max leg + winner join), so
-      // without re-rooting each round's analyzed plan embeds the
-      // previous one multiple times and driver-side plan work grows
-      // geometrically with `rounds`
-      val nextPlan = hosts
+      // re-rooted: the vote chain references `votes` twice (max leg +
+      // winner join)
+      val next = reroot(hosts
         .join(won.withColumnRenamed("v", "host"), Seq("host"), "left")
-        .select(col("host"), coalesce(col("label"), col("host")).as("label"))
-      val next = spark.createDataFrame(nextPlan.rdd, nextPlan.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(col("host"), coalesce(col("label"), col("host")).as("label")))
       next.count() // materialize before releasing the labels it reads
       cur.unpersist()
       cur = next
@@ -256,78 +248,8 @@ object GraphOps {
     * unpersisted.
     */
   def pagerank(spark: SparkSession, edges: DataFrame, iterations: Int = 3,
-               initMass: Long = DefaultInitMass): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    // the edge list is THE big table here (10^12 rows at corpus scale):
-    // hash-cluster it on the join key ONCE and cache that layout — every
-    // iteration's edge–mass join then reuses the cached partitioning
-    // (only the small mass table moves per round), and the per-src
-    // outdeg aggregation combines within partitions exchange-free
-    val e = edges.select(col("src"), col("target"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize the narrow edge cache BEFORE it branches: deg + the
-    // two union legs of `nodes` all scan `e` inside one job, and racing
-    // legs each re-run the upstream projection (the DOM parse, for
-    // page-derived edges) instead of finding cached blocks — measured
-    // 27.6 s → 8 s at sf0.1 from this one pass ordering
-    e.count()
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("od"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("target").as("node")))
-      .distinct()
-    var cur = nodes.join(deg, Seq("node"), "left")
-      .select(col("node"), coalesce(col("od"), lit(0L)).as("od"),
-        lit(initMass).as("mass"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // n is one scalar off the just-persisted node table (the same pass
-    // that materializes it) — constant across iterations
-    val n = cur.count()
-    val base = initMass * 15L / 100L
-    var it = 0
-    while (it < iterations) {
-      // re-rooted as a fresh plan leaf (the Components/hits idiom): the
-      // iteration references `cur` three times (contrib join, dangling
-      // aggregate, carry-through select), so without re-rooting the
-      // analyzed plan triples per round and driver-side plan work grows
-      // geometrically with `iterations`
-      val nextPlan = pagerankIteration(e, cur, n, base)
-      val next = spark.createDataFrame(nextPlan.rdd, nextPlan.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      next.count() // materialize before releasing the input it reads
-      cur.unpersist()
-      cur = next
-      it += 1
-    }
-    e.unpersist()
-    // the final iteration's table is already persisted + materialized;
-    // hand it out with a one-shot release so the caller's first action
-    // reads the cached blocks and then frees them (no session-lifetime
-    // cache, no caller-side clearCache contract)
-    graft.util.CacheOnce.release(cur).select("node", "mass")
-  }
-
-  /** One PageRank step over `cur(node, od, mass)` — separated so the
-    * plan-audit suite can pin its physical shape: the edge–mass
-    * equi-join on `src` (narrow rows both sides), the map-side-combined
-    * groupBy on `target`, and the 1-row dangling aggregate returning as
-    * a BroadcastNestedLoopJoin (constant-size build side by
-    * construction). */
-  private[graft] def pagerankIteration(e: DataFrame, cur: DataFrame,
-                                       n: Long, base: Long): DataFrame = {
-    val contrib = e.join(cur.hint("shuffle_hash"), e("src") === cur("node"))
-      .select(col("target").as("node"),
-        expr("mass * 85 div 100 div od").as("c"))
-      .groupBy("node").agg(sum(col("c")).as("in_mass"))
-    val dangling = cur.filter(col("od") === 0L)
-      .agg(coalesce(sum(expr("mass * 85 div 100")), lit(0L)).as("ds"))
-    cur.select("node", "od")
-      .join(contrib, Seq("node"), "left")
-      .crossJoin(broadcast(dangling))
-      .select(col("node"), col("od"),
-        (lit(base) + coalesce(col("in_mass"), lit(0L)) +
-          expr(s"ds div ${n}L")).as("mass"))
-  }
+               initMass: Long = DefaultInitMass): DataFrame =
+    personalizedRank(edges, None, iterations, initMass)
 
   /** TrustRank (Gyöngyi/Garcia-Molina/Pedersen 2004): PageRank
     * personalized to a trusted seed set — trust flows OUT of the seeds
@@ -351,55 +273,91 @@ object GraphOps {
     * Returns (node, mass) like [[pagerank]]. */
   def trustRank(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
                 iterations: Int = 3,
-                initMass: Long = DefaultInitMass): DataFrame = {
+                initMass: Long = DefaultInitMass): DataFrame =
+    personalizedRank(edges, Some(seeds), iterations, initMass)
+
+  /** The loop [[pagerank]] and [[trustRank]] share: mass starts on the
+    * seeds, teleport and dangling mass land on the seeds only, and
+    * PageRank is the case where every node is a seed (`seeds = None`:
+    * the flag is a literal, so that plan gains no seed join). */
+  private def personalizedRank(edges: DataFrame, seeds: Option[DataFrame],
+                               iterations: Int, initMass: Long): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
+    // the edge list is THE big table here (10^12 rows at corpus scale):
+    // hash-cluster it on the join key ONCE and cache that layout — every
+    // iteration's edge–mass join then reuses the cached partitioning
+    // (only the small mass table moves per round), and the per-src
+    // outdeg aggregation combines within partitions exchange-free
     val e = edges.select(col("src"), col("target"))
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count() // materialize before the narrow cache branches (see pagerank)
+    // materialize the narrow edge cache BEFORE it branches: deg + the
+    // two union legs of `nodes` all scan `e` inside one job, and racing
+    // legs each re-run the upstream projection (the DOM parse, for
+    // page-derived edges) instead of finding cached blocks — measured
+    // 27.6 s → 8 s at sf0.1 from this one pass ordering
+    e.count()
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("od"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("target").as("node")))
       .distinct()
-    val seedSet = seeds.select(col("node")).distinct()
-      .withColumn("is_seed", lit(1))
-    var cur = nodes.join(deg, Seq("node"), "left")
-      .join(seedSet, Seq("node"), "left")
+    val withDeg = nodes.join(deg, Seq("node"), "left")
+    val flagged = seeds.fold(withDeg.withColumn("is_seed", lit(1))) { s =>
+      withDeg.join(s.select(col("node")).distinct().withColumn("is_seed", lit(1)),
+        Seq("node"), "left")
+    }
+    var cur = flagged
       .select(col("node"), coalesce(col("od"), lit(0L)).as("od"),
         coalesce(col("is_seed"), lit(0)).as("is_seed"),
         when(col("is_seed") === 1, lit(initMass)).otherwise(lit(0L)).as("mass"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nSeeds = cur.agg(sum(col("is_seed"))).head.getLong(0)
-    require(nSeeds > 0, "trustRank needs at least one seed present in the graph")
+    // the seed count is one scalar off the just-persisted node table (the
+    // same pass that materializes it) — constant across iterations
+    val n = cur.agg(coalesce(sum(col("is_seed")), lit(0L))).head.getLong(0)
+    require(n > 0 || seeds.isEmpty,
+      "trustRank needs at least one seed present in the graph")
     val base = initMass * 15L / 100L
     var it = 0
     while (it < iterations) {
-      val contrib = e.join(cur.hint("shuffle_hash"), e("src") === cur("node"))
-        .select(col("target").as("node"),
-          expr("mass * 85 div 100 div od").as("c"))
-        .groupBy("node").agg(sum(col("c")).as("in_mass"))
-      val dangling = cur.filter(col("od") === 0L)
-        .agg(coalesce(sum(expr("mass * 85 div 100")), lit(0L)).as("ds"))
-      // re-rooted as a fresh plan leaf: `cur` appears three times per
-      // iteration (join, dangling aggregate, carry-through) — same
-      // geometric-plan-growth guard as pagerank/hits/lpa
-      val nextPlan = cur.select("node", "od", "is_seed")
-        .join(contrib, Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"), col("od"), col("is_seed"),
-          (coalesce(col("in_mass"), lit(0L)) +
-            when(col("is_seed") === 1,
-              lit(base) + expr(s"ds div ${nSeeds}L")).otherwise(lit(0L)))
-            .as("mass"))
-      val next = spark.createDataFrame(nextPlan.rdd, nextPlan.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      // re-rooted: the iteration references `cur` three times (contrib
+      // join, dangling aggregate, carry-through select)
+      val next = reroot(pagerankIteration(e, cur, n, base))
       next.count() // materialize before releasing the input it reads
       cur.unpersist()
       cur = next
       it += 1
     }
     e.unpersist()
+    // the final iteration's table is already persisted + materialized;
+    // hand it out with a one-shot release so the caller's first action
+    // reads the cached blocks and then frees them (no session-lifetime
+    // cache, no caller-side clearCache contract)
     graft.util.CacheOnce.release(cur).select("node", "mass")
+  }
+
+  /** One personalized PageRank step over `cur(node, od, is_seed, mass)`,
+    * with `n` seeds each taking `base` teleport mass and an equal share
+    * of the dangling mass — separated so the plan-audit suite can pin
+    * its physical shape: the edge–mass equi-join on `src` (narrow rows
+    * both sides), the map-side-combined groupBy on `target`, and the
+    * 1-row dangling aggregate returning as a BroadcastNestedLoopJoin
+    * (constant-size build side by construction). */
+  private[graft] def pagerankIteration(e: DataFrame, cur: DataFrame,
+                                       n: Long, base: Long): DataFrame = {
+    val contrib = e.join(cur.hint("shuffle_hash"), e("src") === cur("node"))
+      .select(col("target").as("node"),
+        expr("mass * 85 div 100 div od").as("c"))
+      .groupBy("node").agg(sum(col("c")).as("in_mass"))
+    val dangling = cur.filter(col("od") === 0L)
+      .agg(coalesce(sum(expr("mass * 85 div 100")), lit(0L)).as("ds"))
+    cur.select("node", "od", "is_seed")
+      .join(contrib, Seq("node"), "left")
+      .crossJoin(broadcast(dangling))
+      .select(col("node"), col("od"), col("is_seed"),
+        (coalesce(col("in_mass"), lit(0L)) +
+          when(col("is_seed") === 1,
+            lit(base) + expr(s"ds div ${n}L")).otherwise(lit(0L)))
+          .as("mass"))
   }
 
   /** HITS (Kleinberg 1999) hubs & authorities, integer-exact: the
@@ -464,19 +422,14 @@ object GraphOps {
     def renorm(raw0: DataFrame, valCol: String): DataFrame = {
       val raw = raw0.persist(StorageLevel.MEMORY_AND_DISK)
       val tot = raw.agg(coalesce(sum(col(valCol)), lit(0L)).as("tot"))
-      // re-root the materialized result as a fresh plan leaf (the
-      // Components idiom): the crossJoin references `raw` on BOTH legs,
-      // so without re-rooting every half-step's analyzed plan embeds the
-      // previous one TWICE and Catalyst's analysis/optimization time
-      // grows geometrically — measured 340 s for 2 iterations at sf0.1
-      // on an already-cached edge list, vs ~8 s re-rooted (the data work
-      // per half-step is ~2 s; the rest was the optimizer)
-      val outPlan = raw.crossJoin(broadcast(tot))
+      // re-rooted: the crossJoin references `raw` on BOTH legs — measured
+      // 340 s for 2 iterations at sf0.1 on an already-cached edge list
+      // without it, vs ~8 s re-rooted (the data work per half-step is
+      // ~2 s; the rest was the optimizer)
+      val out = reroot(raw.crossJoin(broadcast(tot))
         .select(col("node"),
           expr(s"$valCol div greatest(1L, tot div ${n}L div ${initMass}L)")
-            .as(valCol))
-      val out = spark.createDataFrame(outPlan.rdd, outPlan.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+            .as(valCol)))
       out.count()
       raw.unpersist()
       out

@@ -53,18 +53,8 @@ object CorpusBuildJob {
 
     val ex = ExtractionJob.readExtracted(spark, cfg)
 
-    val textTiers = TextOps.tierAssign(
-        ex.select(col("url").as("doc_id"), col("text")))
-      .select(col("doc_id"), col("tier"))
-    val tiers = edgesTable match {
-      case None => textTiers
-      case Some(et) =>
-        val feats = graft.graph.GraphOps.hostLinkFeatures(
-          spark, io.read(spark, et), pagerankIterations)
-        graft.graph.GraphOps.linkTiers(
-            textTiers.withColumnRenamed("doc_id", "url"), feats)
-          .select(col("url").as("doc_id"), col("tier"))
-    }
+    val tiers = TierJob.tierStep(spark, ex, io, edgesTable, pagerankIterations)
+      .select(col("url").as("doc_id"), col("tier"))
     val kept = TextOps.tierMix(tiers, ratesBp, seed)
     val membership = TextOps.hashSplit(kept)
       .join(kept, "doc_id")

@@ -58,7 +58,11 @@ object ExtractMain {
       JobConfig(pages, out, shuffle = shuffle, runId = runId,
         retryFailed = retryFailed, io = io, scratchPath = scratch,
         collapseRecrawls = collapse))
-    println(s"""{"run_id":"$runId","committed_docs":$total}""")
+    println(resultLine(runId, total))
     spark.stop()
   }
+
+  /** The one JSON line `main` prints, the run id escaped. */
+  private[jobs] def resultLine(runId: String, total: Long): String =
+    s"""{"run_id":${MetricsSink.quoted(runId)},"committed_docs":$total}"""
 }

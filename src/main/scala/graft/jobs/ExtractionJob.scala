@@ -61,9 +61,13 @@ object MetricsSink {
 
   private def json(m: PartitionMetrics, attempt: Int): String =
     (m.productElementNames.zip(m.productIterator) ++ Iterator("attempt" -> attempt)).map {
-      case (k, v: String) => s""""$k":"${new String(JsonStringEncoder.getInstance.quoteAsString(v))}""""
+      case (k, v: String) => s""""$k":${quoted(v)}"""
       case (k, v)         => s""""$k":$v"""
     }.mkString("{", ",", "}")
+
+  /** `v` as a JSON string literal, quotes included. */
+  private[jobs] def quoted(v: String): String =
+    "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(v)) + "\""
 }
 
 /** @param io        the storage seam (SURVEY §7): ParquetTableIO in the

@@ -62,7 +62,7 @@ object StreamingExtraction {
   def hostProgress(spark: SparkSession, pages: DataFrame): Dataset[HostProgress] = {
     import spark.implicits._
     pages
-      .select(regexp_extract(col("url"), "//([^/]+)/", 1).as("host"),
+      .select(graft.web.UrlNorm.hostOf(col("url")).as("host"),
         octet_length(col("html")).cast("long").as("b"))
       .as[(String, Long)]
       .groupByKey(_._1)
@@ -160,10 +160,8 @@ object StreamingExtraction {
     * re-scan cheap by committing the hash column. */
   def ingestDedupedPages(pages: DataFrame, committed: DataFrame,
                          watermark: String = "2 hours"): DataFrame = {
-    val committedHashes =
-      if (committed.columns.contains("content_hash"))
-        committed.select(col("content_hash"))
-      else committed.select(md5(col("text")).as("content_hash"))
+    val committedHashes = committed.select(
+      graft.text.TextOps.committedHash(committed).as("content_hash"))
     dedupedPages(pages, watermark)
       .join(committedHashes.distinct(), Seq("content_hash"), "left_anti")
   }

@@ -46,16 +46,7 @@ object TierJob {
           edgesTable: Option[String] = None,
           pagerankIterations: Int = 3): DataFrame = {
     val ex = ExtractionJob.readExtracted(spark, extractedRoot, io)
-    val textTiers = TextOps.tierAssign(
-      ex.select(col("url").as("doc_id"), col("text")))
-      .withColumnRenamed("doc_id", "url")
-    val tiers = edgesTable match {
-      case None => textTiers
-      case Some(et) =>
-        val feats = graft.graph.GraphOps.hostLinkFeatures(
-          spark, io.read(spark, et), pagerankIterations)
-        graft.graph.GraphOps.linkTiers(textTiers, feats)
-    }
+    val tiers = tierStep(spark, ex, io, edgesTable, pagerankIterations)
     // shuffle-hash-join hint on the NARROW side: the default sort-merge
     // join would sort the wide text-payload rows after shuffling them —
     // pure extra bandwidth on the one unavoidable payload move. SHJ
@@ -69,5 +60,22 @@ object TierJob {
     // prunes to parquet footers + the directory-valued tier column
     io.read(spark, tieredTable)
       .groupBy("tier").agg(count(lit(1)).as("docs"))
+  }
+
+  /** The tier step [[run]] and [[CorpusBuildJob.run]] share: the text
+    * tiers of the extracted rows `ex` as `(url, tier, reasons)`, bumped
+    * by [[graft.graph.GraphOps.linkTiers]] (which adds `text_tier` and
+    * `endorsed`) when `edgesTable` is set. */
+  private[jobs] def tierStep(spark: SparkSession, ex: DataFrame, io: TableIO,
+                             edgesTable: Option[String],
+                             pagerankIterations: Int): DataFrame = {
+    val textTiers = TextOps.tierAssign(
+      ex.select(col("url").as("doc_id"), col("text")))
+      .withColumnRenamed("doc_id", "url")
+    edgesTable.fold(textTiers) { et =>
+      val feats = graft.graph.GraphOps.hostLinkFeatures(
+        spark, io.read(spark, et), pagerankIterations)
+      graft.graph.GraphOps.linkTiers(textTiers, feats)
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.util.CacheOnce.reroot
 
 /** Distributed connected components over a near-duplicate pair graph —
   * the cluster-then-keep step that turns pairwise dedup candidates
@@ -35,7 +36,7 @@ object Components {
     * singletons (nodes with no pairs) as their own component.
     *
     * Each round's result is re-rooted as a fresh plan leaf
-    * (`createDataFrame(rdd, schema)`): without that, the Catalyst plan
+    * ([[graft.util.CacheOnce.reroot]]): without that, the Catalyst plan
     * references the previous round's plan twice and DOUBLES every
     * iteration — by round ~15 the optimizer alone takes minutes even
     * though the data is cached. Re-rooting keeps every round's plan one
@@ -49,8 +50,6 @@ object Components {
     val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
       .union(pairs.select(col("b").as("src"), col("a").as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    def reroot(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema).persist(StorageLevel.MEMORY_AND_DISK)
     var labels = reroot(edges.select(col("src").as("v")).distinct()
       .select(col("v"), col("v").as("label")))
     var round = 0

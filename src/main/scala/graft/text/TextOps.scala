@@ -37,6 +37,16 @@ object TextOps {
     docs.select(col("doc_id"), tokens(col("text")).as("w"))
       .select(col("doc_id"), explode(gramsOf(col("w"), n)).as(out))
 
+  /** One (doc_id, gh) row per word `n`-gram position, the gram hashed to
+    * its 8-byte xxhash64 key map-side (the gram string never shuffles). */
+  private def gramHashes(docs: DataFrame, n: Int): DataFrame =
+    explodedGrams(docs, n, "g").select(col("doc_id"), xxhash64(col("g")).as("gh"))
+
+  /** The distinct `n`-gram hashes of a benchmark/eval set (column `gh`),
+    * for the decontamination joins to broadcast. */
+  private def benchmarkGrams(benchmark: DataFrame, n: Int): DataFrame =
+    gramHashes(benchmark, n).select("gh").distinct()
+
   /** 60-bit md5-derived hash of a string column. */
   def md5Hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
@@ -86,20 +96,25 @@ object TextOps {
   /** LSH candidate pairs: docs sharing a MinHash band (bands of
     * `bandSize` consecutive signature slots). Output (a, b, band). */
   def minhashPairs(docs: DataFrame, nHashes: Int = 8, bandSize: Int = 4): DataFrame = {
-    val sig = minhash(docs, nHashes)
-    val nBands = nHashes / bandSize
-    val banded = (0 until nBands).map { b =>
-      val slots = (0 until bandSize).map(k => col(s"h${b * bandSize + k}"))
-      sig.select(col("doc_id"),
-        lit(b).as("band"),
-        md5(concat_ws(",", slots.map(_.cast("string")): _*)).as("bucket"))
-    }.reduce(_ unionByName _)
+    val banded = minhashBands(docs, nHashes, bandSize)
     val l = banded.as("l")
     val r = banded.as("r")
     l.join(r, col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
       col("l.doc_id") < col("r.doc_id"))
       .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"), col("l.band").as("band"))
       .distinct()
+  }
+
+  /** One (doc_id, band, bucket) row per MinHash band: `bucket` is the md5
+    * of the band's `bandSize` consecutive signature slots. */
+  private def minhashBands(docs: DataFrame, nHashes: Int, bandSize: Int): DataFrame = {
+    val sig = minhash(docs, nHashes)
+    (0 until nHashes / bandSize).map { b =>
+      val slots = (0 until bandSize).map(k => col(s"h${b * bandSize + k}"))
+      sig.select(col("doc_id"),
+        lit(b).as("band"),
+        md5(concat_ws(",", slots.map(_.cast("string")): _*)).as("bucket"))
+    }.reduce(_ unionByName _)
   }
 
   /** SimHash over per-token 60-bit hashes (each occurrence votes ±1 per
@@ -170,7 +185,17 @@ object TextOps {
     * shares many shingles; losing its few ubiquitous ones barely moves
     * the estimate). Disabled by default (exact semantics, oracle-matched);
     * set a few hundred for corpus-scale runs. */
-  def jaccardPairs(docs: DataFrame, maxDf: Long = 0L): DataFrame = {
+  def jaccardPairs(docs: DataFrame, maxDf: Long = 0L): DataFrame =
+    shingleOverlap(docs, maxDf)
+      .filter(col("inter") * 10 >= col("un") * 3)
+      .select(col("a"), col("b"), col("inter"), col("un"))
+
+  /** The shingle-overlap frame [[jaccardPairs]] and [[containmentPairs]]
+    * share: one row per doc pair `a < b` (columns a, b, inter, na, nb, un)
+    * sharing at least one distinct word 3-shingle — shingle-set sizes,
+    * intersection and union — with the optional `maxDf` stop-shingle
+    * guard applied before the self-join. */
+  private def shingleOverlap(docs: DataFrame, maxDf: Long): DataFrame = {
     // gram strings never leave the projection: every downstream join /
     // aggregation keys on the 8-byte xxhash64 instead (same convention
     // as crossDupCoverage — at web scale the self-join shuffle carries
@@ -195,8 +220,6 @@ object TextOps {
       .join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n", "na"), "a")
       .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n", "nb"), "b")
       .withColumn("un", col("na") + col("nb") - col("inter"))
-      .filter(col("inter") * 10 >= col("un") * 3)
-      .select(col("a"), col("b"), col("inter"), col("un"))
   }
 
   /** Document fingerprint: md5-derived 60-bit hash of the normalised
@@ -367,8 +390,7 @@ object TextOps {
     * gram-key join stays the bounded-fanout shape of the banded LSH
     * joins: each (doc, gram) row meets exactly one df row. */
   def crossDupCoverage(docs: DataFrame, n: Int = 8): DataFrame = {
-    val pos = explodedGrams(docs, n, "g")
-      .select(col("doc_id"), xxhash64(col("g")).as("gh"))
+    val pos = gramHashes(docs, n)
     val cnt = pos.groupBy("doc_id", "gh").agg(count(lit(1)).as("cnt"))
     // cnt rows are already distinct per (doc, gram): df = plain count
     val df = cnt.groupBy("gh").agg(count(lit(1)).as("df"))
@@ -669,7 +691,7 @@ object TextOps {
     * reducer — the window is skew-proof without salting. */
   def hostCap(docs: DataFrame, k: Int = 3): DataFrame = {
     val scored = docs.select(col("url"),
-      regexp_extract(col("url"), "^[a-z]+://([^/]+)", 1).as("host"),
+      graft.web.UrlNorm.hostOf(col("url")).as("host"),
       size(tokens(col("text"))).cast("long").as("n_tokens"))
     val w = Window.partitionBy("host")
       .orderBy(col("n_tokens").desc, col("url"))
@@ -691,12 +713,8 @@ object TextOps {
     * partial-aggregate back to one row per doc within the map task. */
   def decontaminate(docs: DataFrame, benchmark: DataFrame,
                     n: Int = 8): DataFrame = {
-    val pos = explodedGrams(docs, n, "g")
-      .select(col("doc_id"), xxhash64(col("g")).as("gh"))
-    val bg = broadcast(
-      explodedGrams(benchmark, n, "g")
-        .select(xxhash64(col("g")).as("gh")).distinct()
-        .withColumn("hit", lit(1L)))
+    val pos = gramHashes(docs, n)
+    val bg = broadcast(benchmarkGrams(benchmark, n).withColumn("hit", lit(1L)))
     pos.join(bg, Seq("gh"), "left")
       .groupBy("doc_id").agg(
         sum(coalesce(col("hit"), lit(0L))).as("contaminated_positions"),
@@ -720,17 +738,23 @@ object TextOps {
     * the big side; Spark's runtime bloom-filter injection additionally
     * prunes the batch side before the shuffle when the batch is the
     * smaller leg. */
-  def ingestDedup(newDocs: DataFrame, committed: DataFrame): DataFrame = {
-    val committedHashes =
-      if (committed.columns.contains("content_hash"))
-        committed.select(col("content_hash").as("h"))
-      else committed.select(md5(col("text")).as("h"))
-    val keepWithin = newDocs.select(col("doc_id"), md5(col("text")).as("h"))
-      .groupBy("h").agg(min(col("doc_id")).as("doc_id"))
-    keepWithin
-      .join(committedHashes.distinct(), Seq("h"), "left_anti")
+  def ingestDedup(newDocs: DataFrame, committed: DataFrame): DataFrame =
+    batchKeepers(newDocs)
+      .join(committed.select(committedHash(committed).as("h")).distinct(),
+        Seq("h"), "left_anti")
       .select("doc_id")
-  }
+
+  /** The committed table's content hash: the stored `content_hash` when
+    * the table carries one (then no text bytes are read), else md5(text). */
+  def committedHash(committed: DataFrame): Column =
+    if (committed.columns.contains("content_hash")) col("content_hash")
+    else md5(col("text"))
+
+  /** Within-batch exact dedup: one `(h, doc_id)` row per text hash, the
+    * min doc_id its keeper (t3's rule). */
+  private def batchKeepers(newDocs: DataFrame): DataFrame =
+    newDocs.select(col("doc_id"), md5(col("text")).as("h"))
+      .groupBy("h").agg(min(col("doc_id")).as("doc_id"))
 
   /** Bloom-accelerated variant of [[ingestDedup]] — the 10^12-committed-row
     * resume/ingest path. [[ingestDedup]]'s anti-join shuffles BOTH sides on
@@ -768,12 +792,8 @@ object TextOps {
     import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-    val committedHashes =
-      if (committed.columns.contains("content_hash"))
-        committed.select(col("content_hash").as("h"))
-      else committed.select(md5(col("text")).as("h"))
-    val keepWithin = newDocs.select(col("doc_id"), md5(col("text")).as("h"))
-      .groupBy("h").agg(min(col("doc_id")).as("doc_id"))
+    val committedHashes = committed.select(committedHash(committed).as("h"))
+    val keepWithin = batchKeepers(newDocs)
 
     val bloomAgg = toCol(new BloomFilterAggregate(
       toExpr(xxhash64(col("h"))), expectedItems).toAggregateExpression())
@@ -812,20 +832,12 @@ object TextOps {
     * rows, partial-aggregated. No pairs are ever materialized. */
   def nearDupIngest(newDocs: DataFrame, committed: DataFrame,
                     nHashes: Int = 8, bandSize: Int = 4): DataFrame = {
-    val nBands = nHashes / bandSize
-    def banded(src: DataFrame): DataFrame = {
-      val sig = minhash(src, nHashes)
-      (0 until nBands).map { b =>
-        val slots = (0 until bandSize).map(k => col(s"h${b * bandSize + k}"))
-        sig.select(col("doc_id"), lit(b).as("band"),
-          md5(concat_ws(",", slots.map(_.cast("string")): _*)).as("bucket"))
-      }.reduce(_ unionByName _)
-    }
-    val committedBuckets = banded(committed).select("band", "bucket").distinct()
-    banded(newDocs)
+    val committedBuckets = minhashBands(committed, nHashes, bandSize)
+      .select("band", "bucket").distinct()
+    minhashBands(newDocs, nHashes, bandSize)
       .join(committedBuckets, Seq("band", "bucket"), "left_anti")
       .groupBy("doc_id").agg(count(lit(1)).as("nb"))
-      .filter(col("nb") === nBands)
+      .filter(col("nb") === nHashes / bandSize)
       .select("doc_id")
   }
 
@@ -1021,9 +1033,7 @@ object TextOps {
   def decontamRemoval(docs: DataFrame, benchmark: DataFrame,
                       n: Int = 8): DataFrame = {
     val toks = docs.select(col("doc_id"), tokens(col("text")).as("w"))
-    val bg = broadcast(
-      explodedGrams(benchmark, n, "g")
-        .select(xxhash64(col("g")).as("gh")).distinct())
+    val bg = broadcast(benchmarkGrams(benchmark, n))
     val leakStarts = gramStartPositions(toks, n)
       .join(bg, Seq("gh"))
       .groupBy("doc_id")
@@ -1420,41 +1430,20 @@ object TextOps {
     * pairs t7's 0.3-Jaccard rule would NOT have caught — the marginal
     * recall this operator buys.
     *
-    * Scale shape: identical derivation to [[jaccardPairs]] (distinct
-    * word-3-shingles hashed to 8-byte xxhash64 keys map-side, banded
+    * Scale shape: the [[shingleOverlap]] frame [[jaccardPairs]] runs
+    * (distinct word-3-shingles hashed to 8-byte xxhash64 keys map-side,
     * self-equi-join on the hash, partial-aggregated intersection
-    * counts); the optional `maxDf` guard drops stop-shingles before the
-    * self-join exactly as there. Only the similarity arithmetic and the
-    * emission rule differ, so the 100 TB cost profile is the one t7
-    * already measured. */
+    * counts, the same optional `maxDf` guard). Only the emission rule
+    * differs, so the 100 TB cost profile is the one t7 already
+    * measured. */
   def containmentPairs(docs: DataFrame, thresholdBp: Long = 8000L,
-                       maxDf: Long = 0L): DataFrame = {
-    val all = docs.select(col("doc_id"), tokens(col("text")).as("w"))
-      .select(col("doc_id"),
-        explode(array_distinct(gramsOf(col("w"), 3))).as("sg"))
-      .select(col("doc_id"), xxhash64(col("sg")).as("s"))
-    val sh =
-      if (maxDf <= 0) all
-      else {
-        val rare = all.groupBy("s").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf).select("s")
-        all.join(rare, "s")
-      }
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = sh.as("l").join(sh.as("r"),
-        col("l.s") === col("r.s") && col("l.doc_id") < col("r.doc_id"))
-      .groupBy(col("l.doc_id").as("a"), col("r.doc_id").as("b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n", "na"), "a")
-      .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n", "nb"), "b")
-      .withColumn("un", col("na") + col("nb") - col("inter"))
+                       maxDf: Long = 0L): DataFrame =
+    shingleOverlap(docs, maxDf)
       .withColumn("cont_bp", expr("(10000 * inter) div least(na, nb)"))
       .filter(col("cont_bp") >= thresholdBp)
       .withColumn("subset_only", !(col("inter") * 10 >= col("un") * 3))
       .select(col("a"), col("b"), col("inter"), col("un"),
         col("cont_bp"), col("subset_only"))
-  }
 
   /** Corpus vocabulary card — the top-`k` whitespace tokens by corpus
     * frequency with rank and cumulative coverage in basis points: the

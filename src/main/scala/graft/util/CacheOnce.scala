@@ -71,4 +71,15 @@ object CacheOnce {
     spark.listenerManager.register(listener)
     cached
   }
+
+  /** `plan` re-rooted as a fresh persisted plan leaf — the round step of
+    * the iterative loops (PageRank, HITS, label propagation, connected
+    * components). A round whose plan references the previous round's
+    * result more than once would otherwise embed that plan once per
+    * reference, so driver-side analysis and optimization grow
+    * geometrically with the round count. The caller runs the action that
+    * materializes it before releasing what it reads. */
+  def reroot(plan: DataFrame): DataFrame =
+    plan.sparkSession.createDataFrame(plan.rdd, plan.schema)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 }

@@ -24,8 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Robots {
 
-  private val HostRe = "^[a-z]+://([^/]+)"
-
   private def pathOf(url: Column): Column = {
     val p = regexp_replace(url, "^[a-z]+://[^/]+", "")
     when(p === "", "/").otherwise(p)
@@ -39,7 +37,7 @@ object Robots {
     * deterministic too, not just the verdict. */
   def verdicts(pages: DataFrame, rules: DataFrame): DataFrame = {
     val p = pages.select(col("url"),
-      regexp_extract(col("url"), HostRe, 1).as("host"),
+      UrlNorm.hostOf(col("url")).as("host"),
       pathOf(col("url")).as("path"))
     val hit = p.join(rules, Seq("host"), "left")
       .select(col("url"),

@@ -42,8 +42,6 @@ object Templates {
       regexp_extract_all(decode(html, "UTF-8"), lit("<([a-z][a-z0-9]*)[^>]*>"), lit(1)),
       ","))
 
-  private val HostRe = "^[a-z]+://([^/]+)"
-
   /** Per-page template assignment: `(url, host, tpl, tpl_pages)` where
     * `tpl_pages` is the number of the host's pages sharing the
     * fingerprint (≥2 ⇒ a reused render template). `pages` needs
@@ -51,7 +49,7 @@ object Templates {
   def templateClusters(pages: DataFrame): DataFrame = {
     val fp = graft.util.CacheOnce(pages.select(
       col("url"),
-      regexp_extract(col("url"), HostRe, 1).as("host"),
+      UrlNorm.hostOf(col("url")).as("host"),
       fingerprint(col("html")).as("tpl")))
     val sizes = fp.groupBy("host", "tpl").agg(count(lit(1)).as("tpl_pages"))
     fp.join(sizes, Seq("host", "tpl"))

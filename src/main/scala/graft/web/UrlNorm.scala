@@ -26,6 +26,12 @@ import org.apache.spark.sql.functions._
   */
 object UrlNorm {
 
+  /** `scheme://host` → host: everything between `://` and the next `/`
+    * (query and port included), "" for a url without a scheme. The one
+    * host key of the Scala operators; the oracle SQL replays the same
+    * regex. */
+  def hostOf(url: Column): Column = regexp_extract(url, "^[a-z]+://([^/]+)", 1)
+
   /** Canonical form of `u`. Urls without a `scheme://` prefix pass
     * through steps 1/4 only (no authority to normalize). */
   def canonical(u: Column): Column = {

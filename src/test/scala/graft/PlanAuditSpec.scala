@@ -446,6 +446,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSuite {
     val cur = e.select(org.apache.spark.sql.functions.col("src").as("node"))
       .distinct()
       .withColumn("od", org.apache.spark.sql.functions.lit(1L))
+      .withColumn("is_seed", org.apache.spark.sql.functions.lit(1))
       .withColumn("mass",
         org.apache.spark.sql.functions.lit(graft.graph.GraphOps.DefaultInitMass))
     val p = graft.graph.GraphOps.pagerankIteration(e, cur, n = 100L, base = 1L)

@@ -94,6 +94,27 @@ class StreamingExtractionSpec extends AnyFunSuite with SparkSuite {
     winQ.stop(); hostQ.stop()
   }
 
+  test("host progress keys pathless urls by their host") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+
+    val source = MemoryStream[graft.pages.PageRow]
+    val q = StreamingExtraction.hostProgress(spark, source.toDF())
+      .writeStream.format("memory").queryName("host_progress_pathless")
+      .outputMode("update").start()
+    val urls = Seq("https://a.com", "https://b.com", "https://a.com")
+    source.addData(graft.pages.PageGen.pages(42L, 0, urls.length).toSeq
+      .zip(urls).map { case (p, u) => p.copy(url = u) }: _*)
+    q.processAllAvailable()
+    val got = spark.sql(
+      """SELECT host, max(docs) FROM host_progress_pathless GROUP BY host""")
+      .as[(String, Long)].collect().toMap
+    q.stop()
+    assert(got == Map("a.com" -> 2L, "b.com" -> 1L))
+  }
+
   test("streaming pre-tier: stateless projection, append mode, batch-identical") {
     val s = spark
     import s.implicits._

@@ -137,13 +137,7 @@ object LayoutQueries {
     * lines (each line = one run box), geometric affinity at the
     * reference's default threshold shape. */
   def hisamGroups(url: String, blocks: Array[BlockOut]): (String, Int, Int) = {
-    val boxes = blockBoxes(blocks)
-    if (boxes.isEmpty) return (url, 0, 0)
-    val height = boxes.iterator.map(_.bbox.y2).foldLeft(200)(math.max) + 20
-    val hpp = new Array[Long](height)
-    for (r <- boxes; y <- r.bbox.y until r.bbox.y2) hpp(y) += r.bbox.w.toLong
-    val lines = Projection.segmentLines(hpp.toIndexedSeq, width = Extractor.PageW)
-      .map(r => Hisam.Line(Vector(r.bbox)))
+    val lines = profileLines(blocks).map(r => Hisam.Line(Vector(r.bbox)))
     val paras = Hisam.lineGroups(lines, layoutThresh = 0.5)
     (url, lines.length, paras.length)
   }
@@ -165,14 +159,19 @@ object LayoutQueries {
       (url, i, bb.x, bb.y, bb.w, bb.h)
     }.toSeq
 
-  /** Projection-profile line segmentation over the pseudo-page ink
-    * density (block boxes rasterised onto the y axis). */
+  /** Projection-profile line segmentation over the pseudo-page ink density. */
   def projectionLines(url: String, blocks: Array[BlockOut]): (String, Int, Long) = {
+    val lines = profileLines(blocks)
+    (url, lines.length, lines.iterator.map(_.bbox.h.toLong).sum)
+  }
+
+  /** The page's block boxes rasterised onto the y axis (the horizontal
+    * projection profile), segmented into lines. */
+  private def profileLines(blocks: Array[BlockOut]): Vector[Region] = {
     val boxes = blockBoxes(blocks)
     val height = boxes.iterator.map(_.bbox.y2).foldLeft(200)(math.max) + 20
     val hpp = new Array[Long](height)
     for (r <- boxes; y <- r.bbox.y until r.bbox.y2) hpp(y) += r.bbox.w.toLong
-    val lines = Projection.segmentLines(hpp.toIndexedSeq, width = Extractor.PageW)
-    (url, lines.length, lines.iterator.map(_.bbox.h.toLong).sum)
+    Projection.segmentLines(hpp.toIndexedSeq, width = Extractor.PageW)
   }
 }

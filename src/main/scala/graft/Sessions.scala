@@ -35,4 +35,12 @@ object Sessions {
     if (local) spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** A main's `--key value` arguments (a repeated key keeps its last value);
+    * a token that is not a flag in `known`, or a flag with no value, fails. */
+  def flags(args: Array[String], known: Set[String]): Map[String, String] =
+    args.grouped(2).map {
+      case Array(k, v) if k.startsWith("--") && known(k.drop(2)) => k.drop(2) -> v
+      case bad => throw new IllegalArgumentException(s"unknown flag, stray token or missing value: ${bad.head}")
+    }.toMap
 }

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.jobs.MetricsSink.quoted
 /** Driver-run correctness dump: `Verify <sfDir> <outDir> [name...]` writes
   * each SparkEntry.queries result to `outDir/<name>` parquet, plus
   * oracle_sql.json, for the driver's DuckDB compare. With no names every
@@ -36,24 +37,13 @@ object Verify {
       // don't accumulate session-lifetime blocks
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // dump the oracle map for the sf that actually ran (the driver's
     // sf0.01 flow is unchanged; a local sf0.001 replay now compares
-    // against its own pages tables instead of the driver scale's)
+    // against its own pages tables instead of the driver scale's), every
+    // string JSON-escaped, control chars included, so json.load reads it
     val json = SparkEntry.oracleSqlFor(new java.io.File(sfDir).getName)
       .filter { case (k, _) => names.isEmpty || names.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quoted(k)}: ${quoted(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
 }

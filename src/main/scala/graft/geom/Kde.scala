@@ -71,30 +71,61 @@ object Kde {
     if (variance <= 0.0) null else new Linspace(lo, (hi - lo) / (GRID - 1), variance)
   }
 
-  /** Density curve on the linspace grid (only [[kdePara]] needs it). The
-    * grid itself is affine in the index, so only the densities are
-    * materialised. */
-  private def densityCurve(data: Array[Double], s: Linspace, factor: Double): Array[Double] = {
-    val n = data.length
-    val bw2 = factor * factor * s.variance
-    val norm = 1.0 / (n * math.sqrt(2.0 * math.Pi * bw2))
-    val inv2bw2 = 1.0 / (2.0 * bw2)
-    val ys = new Array[Double](GRID)
-    var g = 0
-    while (g < GRID) {
+  /** One estimate's kernel on its linspace: bw² = factor² · Var, the normaliser
+    * 1/(n · sqrt(2π · bw²)) and the exponent scale 1/(2 · bw²), computed once. */
+  private final class Kernel(data: Array[Double], s: Linspace, factor: Double) {
+    private val bw2 = factor * factor * s.variance
+    private val norm = 1.0 / (data.length * math.sqrt(2.0 * math.Pi * bw2))
+    private val inv2bw2 = 1.0 / (2.0 * bw2)
+
+    /** The point loop: the density at grid point g, its terms summed from
+      * 0.0 in data order. */
+    def density(g: Int): Double = {
       val x = s.x(g)
       var acc = 0.0
       var i = 0
-      while (i < n) {
+      while (i < data.length) {
         val d = x - data(i)
         val e = d * d * inv2bw2
         if (e < UnderflowCut) acc += math.exp(-e)
         i += 1
       }
-      ys(g) = acc * norm
-      g += 1
+      acc * norm
     }
-    ys
+
+    /** The density at every grid point (only [[kdePara]] needs it). */
+    def curve: Array[Double] = {
+      val ys = new Array[Double](GRID)
+      for (g <- 0 until GRID) ys(g) = density(g)
+      ys
+    }
+
+    /** Fills `ub` with the [[modeIndex]] bounds of the Blocks consecutive
+      * blocks of `size` grid points from g0, and `ord` with the block
+      * numbers in descending-bound order (an insertion sort, ties by block
+      * number). */
+    def bounds(g0: Int, size: Int, ub: Array[Double], ord: Array[Int]): Unit = {
+      var b = 0
+      while (b < Blocks) {
+        val a = s.x(g0 + b * size)
+        val z = s.x(g0 + b * size + size - 1)
+        var acc = 0.0
+        var i = 0
+        while (i < data.length) {
+          val xi = data(i)
+          val d = if (xi < a) a - xi else if (xi > z) xi - z else 0.0
+          val e = d * d * inv2bw2
+          if (e < UnderflowCut) acc += math.exp(-e)
+          i += 1
+        }
+        val u = acc * norm
+        ub(b) = if (u.isNaN) Double.PositiveInfinity else u
+        var k = b
+        while (k > 0 && ub(ord(k - 1)) < ub(b)) { ord(k) = ord(k - 1); k -= 1 }
+        ord(k) = b
+        b += 1
+      }
+    }
   }
 
   /** First argmax of the density curve, by branch and bound: the same
@@ -102,8 +133,9 @@ object Kde {
     * maximum, bit for bit, at a fraction of the kernel evaluations.
     *
     * Each block of grid points [g0, g1] gets the bound
-    * UB = norm · Σᵢ K(dᵢ), where K(d) is the point loop's term
-    * (e = d·d·inv2bw2; exp(-e) if e < UnderflowCut, else nothing) and
+    * UB = norm · Σᵢ K(dᵢ), where K(d) is the term of the point loop
+    * [[Kernel.density]] (e = d·d·inv2bw2; exp(-e) if e < UnderflowCut,
+    * else nothing) and
     * dᵢ = x_g0 − xᵢ if xᵢ < x_g0, xᵢ − x_g1 if xᵢ > x_g1, else 0. The
     * computed UB is ≥ the computed y of every point in the block:
     *  - x_g = lo + g·step is non-decreasing in g, because IEEE
@@ -128,38 +160,26 @@ object Kde {
     * The search is two-level: the Blocks coarse blocks are visited in
     * descending-bound order, and inside each its Blocks fine blocks,
     * also in descending-bound order; each surviving fine block is scored
-    * with the unchanged point loop. */
+    * with the point loop that [[Kernel.curve]] scores every point with. */
   private def modeIndex(data: Array[Double], s: Linspace, factor: Double): Int = {
-    val n = data.length
-    val bw2 = factor * factor * s.variance
-    val norm = 1.0 / (n * math.sqrt(2.0 * math.Pi * bw2))
-    val inv2bw2 = 1.0 / (2.0 * bw2)
+    val k = new Kernel(data, s, factor)
     val coarseUb = new Array[Double](Blocks)
     val coarseOrd = new Array[Int](Blocks)
     val fineUb = new Array[Double](Blocks)
     val fineOrd = new Array[Int](Blocks)
     var best = 0
     var bestY = Double.NegativeInfinity
-    bounds(data, s, 0, Coarse, inv2bw2, norm, coarseUb, coarseOrd)
+    k.bounds(0, Coarse, coarseUb, coarseOrd)
     var c = 0
     while (c < Blocks && coarseUb(coarseOrd(c)) >= bestY) {
       val c0 = coarseOrd(c) * Coarse
-      bounds(data, s, c0, Fine, inv2bw2, norm, fineUb, fineOrd)
+      k.bounds(c0, Fine, fineUb, fineOrd)
       var f = 0
       while (f < Blocks && fineUb(fineOrd(f)) >= bestY) {
         var g = c0 + fineOrd(f) * Fine
         val end = g + Fine
         while (g < end) {
-          val x = s.x(g)
-          var acc = 0.0
-          var i = 0
-          while (i < n) {
-            val d = x - data(i)
-            val e = d * d * inv2bw2
-            if (e < UnderflowCut) acc += math.exp(-e)
-            i += 1
-          }
-          val y = acc * norm
+          val y = k.density(g)
           if (y > bestY || (y == bestY && g < best)) { bestY = y; best = g }
           g += 1
         }
@@ -174,36 +194,6 @@ object Kde {
   private[geom] def modeIndex(data: Array[Double], factor: Double): Int = {
     val s = linspace(data)
     if (s == null) -1 else modeIndex(data, s, factor)
-  }
-
-  /** Fills `ub` with the [[modeIndex]] bounds of the Blocks consecutive
-    * blocks of `size` grid points from g0, and `ord` with the block
-    * numbers in descending-bound order (an insertion sort, ties by block
-    * number). */
-  private def bounds(data: Array[Double], s: Linspace, g0: Int, size: Int,
-                     inv2bw2: Double, norm: Double,
-                     ub: Array[Double], ord: Array[Int]): Unit = {
-    val n = data.length
-    var b = 0
-    while (b < Blocks) {
-      val a = s.x(g0 + b * size)
-      val z = s.x(g0 + b * size + size - 1)
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        val xi = data(i)
-        val d = if (xi < a) a - xi else if (xi > z) xi - z else 0.0
-        val e = d * d * inv2bw2
-        if (e < UnderflowCut) acc += math.exp(-e)
-        i += 1
-      }
-      val u = acc * norm
-      ub(b) = if (u.isNaN) Double.PositiveInfinity else u
-      var k = b
-      while (k > 0 && ub(ord(k - 1)) < ub(b)) { ord(k) = ord(k - 1); k -= 1 }
-      ord(k) = b
-      b += 1
-    }
   }
 
   private def firstArgmax(ys: Array[Double]): Int = {
@@ -245,7 +235,7 @@ object Kde {
     val s = linspace(data)
     if (s == null) return math.ceil(data.max).toInt
     val factor = math.pow(data.length.toDouble, -1.0 / 5.0)
-    val ys = densityCurve(data, s, factor)
+    val ys = new Kernel(data, s, factor).curve
     val peaks = findPeaks(ys)
     val idx =
       if (peaks.isEmpty) firstArgmax(ys)

@@ -30,9 +30,8 @@ import graft.sim.AnnIndex
   */
 object AnnMain {
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+    val opts = graft.Sessions.flags(args, Set("mode", "vectors", "index", "io", "queries", "out",
+      "k", "nprobe", "cells"))
     val mode = opts.getOrElse("mode", sys.error("--mode required"))
     val vectors = opts.getOrElse("vectors", sys.error("--vectors required"))
     val index = opts.getOrElse("index", sys.error("--index required"))

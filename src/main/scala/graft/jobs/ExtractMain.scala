@@ -36,9 +36,8 @@ import graft.Sessions
   */
 object ExtractMain {
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+    val opts = Sessions.flags(args, Set("pages", "out", "shuffle", "run-id", "retry-failed",
+      "io", "scratch", "collapse-recrawls"))
     val pages = opts.getOrElse("pages", sys.error("--pages required"))
     val out = opts.getOrElse("out", sys.error("--out required"))
     val shuffle = opts.get("shuffle").forall(_.toBoolean)

@@ -66,7 +66,7 @@ object MetricsSink {
     }.mkString("{", ",", "}")
 
   /** `v` as a JSON string literal, quotes included. */
-  private[jobs] def quoted(v: String): String =
+  private[graft] def quoted(v: String): String =
     "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(v)) + "\""
 }
 

@@ -25,9 +25,7 @@ import graft.graph.GraphOps
   */
 object GraphMain {
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+    val opts = graft.Sessions.flags(args, Set("pages", "out", "iterations", "io"))
     val pages = opts.getOrElse("pages", sys.error("--pages required"))
     val out = opts.getOrElse("out", sys.error("--out required"))
     val iterations = opts.get("iterations").map(_.toInt).getOrElse(3)

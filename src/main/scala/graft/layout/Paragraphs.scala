@@ -17,7 +17,6 @@ final case class Para(
     bottomBox: NLink = NLink.none,
     visited: Boolean = false,
     order: Int = -1,
-    merged: Boolean = false,
     col: Int = 0) {
   /** (x1, y1, x2, y2) envelope rectangle from the edge midpoints
     * (reference: pinp_utils.py:83-90). */
@@ -32,38 +31,30 @@ final case class Para(
 object Paragraphs {
 
   /** A1: component envelopes → Para rows
-    * (reference: paragraph.py:31-94 `recognise_paragraphs` head). Edge
-    * midpoints are rounded half-even via Python's round() — replicated with
-    * RoundingMode.HALF_EVEN.
+    * (reference: paragraph.py:31-94 `recognise_paragraphs` head). The
+    * reference rounds the edge midpoints with Python's round(); they are
+    * the box's integer x, x2, y and y2, read as they are. An edge of -1
+    * is skipped, as in the reference.
     *
     * The reference walks the word table in id order per component; min and
     * max do not depend on order, so each component visits only the words
-    * of its member ids, through an id → words index built once. */
+    * of its member ids, through [[WordsById]]. */
   def envelopes(components: Seq[Vector[Int]], words: IndexedSeq[Word]): Vector[Para] = {
     if (components.isEmpty) return Vector.empty
-    val maxId = if (words.isEmpty) 0 else words.iterator.map(_.id).max + 1
-    // word indices by id: head(id) is the last word with that id, next(k)
-    // the word before k with the same id (-1 ends a chain)
-    val head = Array.fill(maxId)(-1)
-    val next = new Array[Int](words.length)
-    var k = 0
-    while (k < words.length) { next(k) = head(words(k).id); head(words(k).id) = k; k += 1 }
+    val byId = new WordsById(words)
     components.iterator.zipWithIndex.map { case (members, count) =>
       var l, t = Int.MaxValue
       var r, b = Int.MinValue
-      for (m <- members if m < maxId) {
-        var w = head(m)
+      val m = members.iterator
+      while (m.hasNext) {
+        var w = byId.last(m.next())
         while (w >= 0) {
           val box = words(w).bbox
-          val li = pyRound(box.leftMid.x)
-          val ri = pyRound(box.rightMid.x)
-          val ti = pyRound(box.topMid.y)
-          val bi = pyRound(box.bottomMid.y)
-          if (li != -1 && li < l) l = li
-          if (ri != -1 && ri > r) r = ri
-          if (ti != -1 && ti < t) t = ti
-          if (bi != -1 && bi > b) b = bi
-          w = next(w)
+          if (box.x != -1 && box.x < l) l = box.x
+          if (box.x2 != -1 && box.x2 > r) r = box.x2
+          if (box.y != -1 && box.y < t) t = box.y
+          if (box.y2 != -1 && box.y2 > b) b = box.y2
+          w = byId.next(w)
         }
       }
       Para(
@@ -76,9 +67,15 @@ object Paragraphs {
     }.toVector
   }
 
-  /** Python 3 round(): banker's rounding — Math.rint has exactly the
-    * round-half-even semantics, allocation-free. */
-  def pyRound(v: Double): Int = math.rint(v).toInt
+  /** Word indices by id: `last(id)` is the last word with that id (-1 when
+    * none), `next(k)` the word before k with the same id (-1 ends a
+    * chain). Ids are non-negative. */
+  private[layout] final class WordsById(words: IndexedSeq[Word]) {
+    private val head = Array.fill(if (words.isEmpty) 0 else words.iterator.map(_.id).max + 1)(-1)
+    val next = new Array[Int](words.length)
+    for (k <- words.indices) { next(k) = head(words(k).id); head(words(k).id) = k }
+    def last(id: Int): Int = if (id < head.length) head(id) else -1
+  }
 
   /** F5: margin filter — drop paragraphs in the header/footer band with
     * <10 members, or entirely inside the left/right gutter
@@ -165,9 +162,11 @@ object Paragraphs {
     val filtered = ignoreMargins(reIded, pageW, pageH, widthP, headerP, footerP)
     if (filtered.isEmpty) return Vector.empty
     val vertical = findClosestParagraphs(filtered)
-    val xPara1 = Kde.kdeEstimate(vertical)
-    val xPara2 = vertical.sum / vertical.length
-    val xPara = math.min(xPara1.toDouble, xPara2)
+    // Array.sum's additions: the first sample, then the rest in order
+    var sum = vertical(0)
+    var k = 1
+    while (k < vertical.length) { sum += vertical(k); k += 1 }
+    val xPara = math.min(Kde.kdeEstimate(vertical).toDouble, sum / vertical.length)
     calculateBottomboxPara(filtered, xPara)
   }
 
@@ -188,7 +187,7 @@ object Paragraphs {
            widthP: Double, headerP: Double, footerP: Double, theta: Int): Vector[Para] = {
     val n = paras0.length
     val small = (0 until n).filter(paras0(_).members.length <= theta).toArray
-    if (small.isEmpty) return paras0.map(_.copy(merged = false)).toVector
+    if (small.isEmpty) return paras0.toVector
 
     val env = new Envelopes(paras0)
     val index = new YIntervals(small, env.y1, env.y2)
@@ -206,7 +205,7 @@ object Paragraphs {
       }
       members(i1) = members(i1) ++ absorbed.flatten
     }
-    val kept = (0 until n).filterNot(merged).map(i => paras0(i).copy(members = members(i), merged = false))
+    val kept = (0 until n).filterNot(merged).map(i => paras0(i).copy(members = members(i)))
     pinpPost(kept, pageW, pageH, widthP, headerP, footerP)
   }
 
@@ -222,36 +221,32 @@ object Paragraphs {
   def pinp2(paras0: IndexedSeq[Para], pageW: Int, pageH: Int,
             widthP: Double, headerP: Double, footerP: Double, theta: Int): Vector[Para] = {
     val n = paras0.length
-    val paras = paras0.map(_.copy(merged = false)).toArray
+    val paras = paras0.toArray
     // live merged flags are tracked here; envelope snapshots for the
     // overlap tests come from the ORIGINAL rows (pandas iterrows copies)
     val mergedLive = new Array[Boolean](n)
     val env = new Envelopes(paras0)
     val index = new YIntervals(Array.range(0, n), env.y1, env.y2)
     for (i1 <- 0 until n) {
-      val r1 = paras0(i1)
       val absorbed = ArrayBuffer.empty[Vector[Int]]
       if (!mergedLive(i1)) {
         val count = index.overlapping(env.y1(i1), env.y2(i1))
         for (c <- 0 until count) {
           val i2 = index.found(c)
           if (i1 != i2 && !mergedLive(i2) && env.inside(i1, i2, 10.0)) {
-            val r2 = paras0(i2)
-            absorbed += r2.members
+            absorbed += paras0(i2).members
             mergedLive(i2) = true
-            val t1 = r1.tlbr
-            val t2 = r2.tlbr
-            val m = (math.min(t1._1, t2._1), math.min(t1._2, t2._2),
-                     math.max(t1._3, t2._3), math.max(t1._4, t2._4))
+            val x1 = math.min(env.x1(i1), env.x1(i2)); val x2 = math.max(env.x2(i1), env.x2(i2))
+            val y1 = math.min(env.y1(i1), env.y1(i2)); val y2 = math.max(env.y2(i1), env.y2(i2))
             paras(i1) = paras(i1).copy(
-              top = Pt(m._1 + (m._3 - m._1) / 2.0, m._2),
-              bottom = Pt(m._1 + (m._3 - m._1) / 2.0, m._4),
-              left = Pt(m._1, m._2 + (m._4 - m._2) / 2.0),
-              right = Pt(m._3, m._2 + (m._4 - m._2) / 2.0))
+              top = Pt(x1 + (x2 - x1) / 2.0, y1),
+              bottom = Pt(x1 + (x2 - x1) / 2.0, y2),
+              left = Pt(x1, y1 + (y2 - y1) / 2.0),
+              right = Pt(x2, y1 + (y2 - y1) / 2.0))
           }
         }
       }
-      paras(i1) = paras(i1).copy(members = r1.members ++ absorbed.flatten)
+      paras(i1) = paras(i1).copy(members = paras0(i1).members ++ absorbed.flatten)
     }
     val kept = (0 until n).filterNot(mergedLive).map(paras(_))
     pinpPost(kept, pageW, pageH, widthP, headerP, footerP)

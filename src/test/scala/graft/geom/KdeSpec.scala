@@ -87,6 +87,9 @@ class KdeSpec extends AnyFunSuite {
     assert(Kde.modeIndex(data, factor) == fullScanIndex(data, factor),
       s"$what: n=${data.length} factor=$factor")
 
+  /** Python 3 round(): half-even, as Math.rint. */
+  private def pyRound(v: Double): Int = math.rint(v).toInt
+
   /** Envelopes the way the reference builds them: for each component,
     * walk the whole word table in id order and keep the member boxes. */
   private def envelopesByWordWalk(components: Seq[Vector[Int]], words: IndexedSeq[Word]): Vector[Para] =
@@ -96,10 +99,10 @@ class KdeSpec extends AnyFunSuite {
       var r, b = Int.MinValue
       for (w <- words if isMember(w.id)) {
         val box = w.bbox
-        val li = Paragraphs.pyRound(box.leftMid.x)
-        val ri = Paragraphs.pyRound(box.rightMid.x)
-        val ti = Paragraphs.pyRound(box.topMid.y)
-        val bi = Paragraphs.pyRound(box.bottomMid.y)
+        val li = pyRound(box.leftMid.x)
+        val ri = pyRound(box.rightMid.x)
+        val ti = pyRound(box.topMid.y)
+        val bi = pyRound(box.bottomMid.y)
         if (li != -1 && li < l) l = li
         if (ri != -1 && ri > r) r = ri
         if (ti != -1 && ti < t) t = ti

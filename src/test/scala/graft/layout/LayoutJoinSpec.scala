@@ -279,7 +279,8 @@ object LayoutJoinSpec {
 
     def pinp(paras0: IndexedSeq[Para], pageW: Int, pageH: Int,
              widthP: Double, headerP: Double, footerP: Double, theta: Int): Vector[Para] = {
-      val paras = ArrayBuffer.from(paras0.map(_.copy(merged = false)))
+      val paras = ArrayBuffer.from(paras0)
+      val merged = new Array[Boolean](paras.length)
       val bigIdx = paras.indices.filter(i => paras(i).members.length > theta)
       val smallIdx = paras.indices.filter(i => paras(i).members.length <= theta)
       if (smallIdx.isEmpty) return paras.toVector
@@ -289,20 +290,20 @@ object LayoutJoinSpec {
         val absorbed = ArrayBuffer.empty[Vector[Int]]
         for (i2 <- smallIdx) {
           val r2 = paras(i2)
-          if (!r2.merged && Geometry.isBoxInside(t(i1), t(i2), 85.0)) {
+          if (!merged(i2) && Geometry.isBoxInside(t(i1), t(i2), 85.0)) {
             absorbed += r2.members
-            paras(i2) = r2.copy(merged = true)
+            merged(i2) = true
           }
         }
         paras(i1) = paras(i1).copy(members = r1.members ++ absorbed.flatten)
       }
-      pinpPost(paras.toVector.filterNot(_.merged), pageW, pageH, widthP, headerP, footerP)
+      pinpPost(paras.indices.filterNot(merged).map(paras(_)).toVector, pageW, pageH, widthP, headerP, footerP)
     }
 
     def pinp2(paras0: IndexedSeq[Para], pageW: Int, pageH: Int,
               widthP: Double, headerP: Double, footerP: Double, theta: Int): Vector[Para] = {
-      val paras = ArrayBuffer.from(paras0.map(_.copy(merged = false)))
-      val original = paras0.map(_.copy(merged = false)).toVector
+      val paras = ArrayBuffer.from(paras0)
+      val original = paras0.toVector
       val mergedLive = Array.fill(paras.length)(false)
       for (i1 <- paras.indices) {
         val r1 = original(i1)

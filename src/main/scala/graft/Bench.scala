@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.jobs.{ExtractionJob, JobConfig, TierJob}
+import graft.jobs.MetricsSink.{decimal, quoted}
 import graft.pages.PagesTable
 
 /** Benchmark main: headline queries + extraction throughput on
@@ -74,14 +75,14 @@ object Bench {
     // r4, now also bracketing the heavy extras (e12..g12) and the e1
     // baseline, whose r4 readings were capped by the run's own tail.
     def hostStamp(prefix: String): Unit = {
-      extras += s"${prefix}_probe_mt_mops" -> f"${HostProbe.mtProbe(cpus)}%.1f"
+      extras += s"${prefix}_probe_mt_mops" -> decimal(HostProbe.mtProbe(cpus), 1)
       val (_, ctlSec) = time {
         graft.sim.Ann.cosineKnn(
           spark.read.parquet(s"$sfDir/embeddings.parquet")
             .filter(col("vec_id") % 16 === 0), k = 5)
           .write.mode("overwrite").format("noop").save()
       }
-      extras += s"${prefix}_control_sec" -> f"$ctlSec%.3f"
+      extras += s"${prefix}_control_sec" -> decimal(ctlSec, 3)
       spark.catalog.clearCache()
     }
 
@@ -179,7 +180,7 @@ object Bench {
         spark.catalog.clearCache()
         sec
       }.min
-      f"$best%.3f"
+      decimal(best, 3)
     }
 
     // PQ memory path (round 4): IVF-PQ codebook training + ADC ranking —
@@ -199,13 +200,13 @@ object Bench {
       val (_, buildSec) = time {
         graft.sim.PqIndex.build(spark, emb, graft.io.ParquetTableIO, root)
       }
-      extras += "e12_model_build" -> f"$buildSec%.3f"
+      extras += "e12_model_build" -> decimal(buildSec, 3)
       val batch = emb.filter(org.apache.spark.sql.functions.col("vec_id") < 64)
       val (_, querySec) = time {
         graft.sim.PqIndex.query(spark, graft.io.ParquetTableIO, root, batch, k = 5)
           .write.mode("overwrite").format("noop").save()
       }
-      extras += "e12_query64" -> f"$querySec%.3f"
+      extras += "e12_query64" -> decimal(querySec, 3)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       spark.catalog.clearCache()
     }
@@ -230,13 +231,13 @@ object Bench {
       val (_, buildSec) = time {
         graft.sim.AnnIndex.build(spark, emb, graft.io.ParquetTableIO, root)
       }
-      extras += "e14_index_build" -> f"$buildSec%.3f"
+      extras += "e14_index_build" -> decimal(buildSec, 3)
       val batch = emb.filter(org.apache.spark.sql.functions.col("vec_id") < 64)
       val (_, querySec) = time {
         graft.sim.AnnIndex.query(spark, graft.io.ParquetTableIO, root, batch, k = 5)
           .write.mode("overwrite").format("noop").save()
       }
-      extras += "e14_index_query64" -> f"$querySec%.3f"
+      extras += "e14_index_query64" -> decimal(querySec, 3)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       spark.catalog.clearCache()
     }
@@ -276,7 +277,7 @@ object Bench {
         graft.sim.AnnIndex.append(spark, graft.io.ParquetTableIO, root,
           emb.filter(col("vec_id") % 4 === 0))
       }
-      extras += "e16_index_append" -> f"$sec%.3f"
+      extras += "e16_index_append" -> decimal(sec, 3)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       spark.catalog.clearCache()
     }
@@ -300,7 +301,7 @@ object Bench {
       SparkEntry.queries("e1_knn_exact")(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
     }
-    extras += "baseline_e1_knn_exact" -> f"$e1Sec%.3f"
+    extras += "baseline_e1_knn_exact" -> decimal(e1Sec, 3)
 
     // Headline total: the SCALE-PATH QUERIES ONLY — excludes the
     // baselines and the tier_job end-to-end pass below, so the figure is
@@ -328,7 +329,7 @@ object Bench {
       val (_, sec) = time {
         TierJob.run(spark, s"$outPath/extracted", outPath).collect()
       }
-      extras += "tier_job" -> f"$sec%.3f"
+      extras += "tier_job" -> decimal(sec, 3)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(outPath))
     }
 
@@ -339,23 +340,27 @@ object Bench {
       val approx = graft.sim.Ann.ivfKnn(emb, k = 5).select("vec_id", "neighbor_id")
       val hit = exact.join(approx, Seq("vec_id", "neighbor_id")).count().toDouble
       val totalPairs = exact.count().toDouble
-      extras += "e2_recall_at_5" -> f"${hit / math.max(totalPairs, 1.0)}%.4f"
+      extras += "e2_recall_at_5" -> decimal(hit / math.max(totalPairs, 1.0), 4)
       // the recall/cost curve point at doubled probes
       val approx8 = graft.sim.Ann.ivfKnn(emb, k = 5, nprobe = 8).select("vec_id", "neighbor_id")
       val hit8 = exact.join(approx8, Seq("vec_id", "neighbor_id")).count().toDouble
-      extras += "e2_recall_at_5_nprobe8" -> f"${hit8 / math.max(totalPairs, 1.0)}%.4f"
+      extras += "e2_recall_at_5_nprobe8" -> decimal(hit8 / math.max(totalPairs, 1.0), 4)
       spark.catalog.clearCache() // drop the persisted IVF assignments
     }
-    extras += "host_probe_mops" -> f"$probeMops%.1f"
-    extras += "host_probe_mt_mops" -> f"$probeMt%.1f"
+    extras += "host_probe_mops" -> decimal(probeMops, 1)
+    extras += "host_probe_mt_mops" -> decimal(probeMt, 1)
 
-    val qs = (results.map { case (k, v) => s""""$k":${f"$v%.3f"}""" } ++
+    val qs = (results.map { case (k, v) => s""""$k":${decimal(v, 3)}""" } ++
       extras.map { case (k, v) => s""""$k":$v""" } ++
-      Seq(s""""extract_docs_per_sec":${f"$docsPerSec%.1f"}""",
+      Seq(s""""extract_docs_per_sec":${decimal(docsPerSec, 1)}""",
           s""""extract_docs":$nDocs""", s""""extract_reps":$reps""",
           s""""cpus":$cpus"""))
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
+    println(resultLine(total, qs, sfDir))
     spark.stop()
   }
+
+  /** The one JSON line a run prints; `queries` is already a JSON object. */
+  private[graft] def resultLine(total: Double, queries: String, sfDir: String): String =
+    s"""{"metric":"total","value":${decimal(total, 3)},"unit":"sec","queries":$queries,"sf":${quoted(sfDir)}}"""
 }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.jobs.MetricsSink.decimal
+
 /** Host-state probe: the splitmix64+fp workload `Bench` stamps its
   * figures with (BASELINE.md calibration), also runnable in seconds between
   * measurements so any figure can be stamped with the host state it ran
@@ -50,6 +52,6 @@ object HostProbe {
       .getOrElse(Runtime.getRuntime.availableProcessors())
     val st = stProbe()
     val mt = mtProbe(nt)
-    println(f"""{"st_mops":$st%.1f,"mt_mops":$mt%.1f,"threads":$nt}""")
+    println(s"""{"st_mops":${decimal(st, 1)},"mt_mops":${decimal(mt, 1)},"threads":$nt}""")
   }
 }

@@ -21,9 +21,12 @@ package graft.geom
   * Every extracted page makes five mode searches: the x/y word thresholds
   * and one x_para in each of the three pinp post-passes. They read only
   * the curve's first argmax, so [[modeIndex]] finds it by branch and bound
-  * instead of scoring all 1000 grid points; see there for why the index is
-  * the full scan's, bit for bit. [[kdePara]] needs the whole curve and
-  * still scores every point.
+  * instead of scoring all 1000 grid points. Its bounds sum table loads
+  * from [[Table]], not `Math.exp` calls, over blocks of grid points and
+  * then over each point of a surviving block, and only a point whose
+  * bound reaches the best density so far is scored exactly; see there for
+  * why the index is the full scan's, bit for bit. [[kdePara]] needs the
+  * whole curve and still scores every point.
   */
 object Kde {
   private val GRID = 1000
@@ -38,6 +41,26 @@ object Kde {
     * non-negative accumulator bit-identical — so skipping those terms
     * changes NOTHING in the result while eliminating the exp() call. */
   private val UnderflowCut = 746.0
+
+  /** The bound kernel: Table(k) ≥ exp(−k/256) for k = 0..TableCap, one
+    * entry per 1/256 of exponent up to e = 40. An entry is v · (1 + 2⁻⁴⁰)
+    * raised to the next double, so it is ≥ that exact product, where v is
+    * `Math.exp(−k/256)` as computed here. `Math.exp` is within 1 ulp of
+    * the true value in every implementation, and an ulp of these normal
+    * values is ≤ 2⁻⁵² of them, so another implementation's w at the same
+    * point is ≤ v · (1 + 2⁻⁵²)/(1 − 2⁻⁵²) < v · (1 + 2⁻⁵⁰). An entry thus
+    * dominates the interpreter's, C2's and StrictMath's exp alike, whichever
+    * one built the table. TableScale = 256 was the fastest of 16, 64, 256
+    * and 1024 on tail pages. */
+  private val TableScale = 256.0
+  private val TableCap = 40 * 256
+  private val Table: Array[Double] =
+    Array.tabulate(TableCap + 1)(k => Math.nextUp(math.exp(-k / TableScale) * (1.0 + 1.0 / (1L << 40))))
+
+  /** The bound term of exponent e: Table(min(⌊256·e⌋, TableCap)). A NaN e
+    * loads Table(0) and an e past the cap (+∞ included) Table(TableCap);
+    * see [[modeIndex]] for why it is ≥ the point loop's term. */
+  private def tableTerm(e: Double): Double = Table(math.min((TableScale * e).toInt, TableCap))
 
   /** The linspace of a non-degenerate sample: x_g = lo + g·step. */
   private final class Linspace(val lo: Double, val step: Double, val variance: Double) {
@@ -93,6 +116,20 @@ object Kde {
       acc * norm
     }
 
+    /** The [[modeIndex]] bound of grid point g: the table terms of the
+      * point loop's exponents, summed from 0.0 in data order. */
+    def densityBound(g: Int): Double = {
+      val x = s.x(g)
+      var acc = 0.0
+      var i = 0
+      while (i < data.length) {
+        val d = x - data(i)
+        acc += tableTerm(d * d * inv2bw2)
+        i += 1
+      }
+      acc * norm
+    }
+
     /** The density at every grid point (only [[kdePara]] needs it). */
     def curve: Array[Double] = {
       val ys = new Array[Double](GRID)
@@ -114,12 +151,10 @@ object Kde {
         while (i < data.length) {
           val xi = data(i)
           val d = if (xi < a) a - xi else if (xi > z) xi - z else 0.0
-          val e = d * d * inv2bw2
-          if (e < UnderflowCut) acc += math.exp(-e)
+          acc += tableTerm(d * d * inv2bw2)
           i += 1
         }
-        val u = acc * norm
-        ub(b) = if (u.isNaN) Double.PositiveInfinity else u
+        ub(b) = acc * norm
         var k = b
         while (k > 0 && ub(ord(k - 1)) < ub(b)) { ord(k) = ord(k - 1); k -= 1 }
         ord(k) = b
@@ -130,37 +165,54 @@ object Kde {
 
   /** First argmax of the density curve, by branch and bound: the same
     * index as scoring all GRID points in order and keeping the first
-    * maximum, bit for bit, at a fraction of the kernel evaluations.
+    * maximum, bit for bit, at a fraction of the `Math.exp` calls.
     *
-    * Each block of grid points [g0, g1] gets the bound
-    * UB = norm · Σᵢ K(dᵢ), where K(d) is the term of the point loop
-    * [[Kernel.density]] (e = d·d·inv2bw2; exp(-e) if e < UnderflowCut,
-    * else nothing) and
-    * dᵢ = x_g0 − xᵢ if xᵢ < x_g0, xᵢ − x_g1 if xᵢ > x_g1, else 0. The
-    * computed UB is ≥ the computed y of every point in the block:
-    *  - x_g = lo + g·step is non-decreasing in g, because IEEE
-    *    round-to-nearest is monotone for `*` and `+` (step ≥ 0). Only
-    *    x_0 can be NaN (0·∞, for a range past Double.MaxValue); a NaN
-    *    x_g0 fails `xᵢ < x_g0`, which only loosens the bound;
-    *  - so |fl(x_g − xᵢ)| ≥ dᵢ: subtraction is monotone too, and
-    *    fl(a − b) = −fl(b − a) exactly;
-    *  - K is non-increasing in d ≥ 0: `*` is monotone, Java never
-    *    contracts d·d·inv2bw2 into an FMA, the cut is a threshold on e,
-    *    and `Math.exp` is semi-monotonic by its specification. (A NaN e,
-    *    from 0·∞ or ∞·0, adds nothing on either side.)
-    *  - the n terms are summed from 0.0 in the same data order, and `+`
-    *    and the final `* norm` are monotone, so UB ≥ y termwise by
-    *    induction. A NaN UB proves nothing and is treated as +∞; a NaN y
+    * Write K(e) for the term of the point loop [[Kernel.density]]:
+    * `Math.exp(-e)` if e < UnderflowCut, else nothing; and B(e) for
+    * [[tableTerm]]. Each block of grid points [g0, g1] gets the bound
+    * UB = norm · Σᵢ B(eᵢ'), with eᵢ' = dᵢ·dᵢ·inv2bw2 and
+    * dᵢ = x_g0 − xᵢ if xᵢ < x_g0, xᵢ − x_g1 if xᵢ > x_g1, else 0. Each
+    * point g of a block that survives gets PB = norm · Σᵢ B(eᵢ), with eᵢ
+    * the exponent the point loop computes for (g, xᵢ). Both are ≥ the
+    * computed y of the point(s) they cover, term by term in data order:
+    *  - the block exponent is ≤ the point's. x_g = lo + g·step is
+    *    non-decreasing in g, because IEEE round-to-nearest is monotone for
+    *    `*` and `+` (step ≥ 0). Only x_0 can be NaN (0·∞, for a range past
+    *    Double.MaxValue); a NaN x_g0 fails `xᵢ < x_g0`, which only loosens
+    *    the bound. So |fl(x_g − xᵢ)| ≥ dᵢ (subtraction is monotone, and
+    *    fl(a − b) = −fl(b − a) exactly), and eᵢ' ≤ eᵢ because `*` is
+    *    monotone and Java never contracts d·d·inv2bw2 into an FMA. The
+    *    point bound computes eᵢ itself, by the same expression.
+    *  - B(e') ≥ K(e) for every e' ≤ e, and for a NaN e' or e:
+    *    - K(e) adds nothing (e ≥ UnderflowCut, +∞ or NaN): every Table
+    *      entry is > 0;
+    *    - e' NaN (0·∞) and e finite: B loads Table(0) ≥ exp(0) ≥ exp(−e),
+    *      as e ≥ 0 and `Math.exp` is semi-monotonic by its specification;
+    *    - otherwise 0 ≤ e' ≤ e < UnderflowCut. 256·e' is exact (a power of
+    *      two, no overflow), and `toInt` floors a non-negative value, so
+    *      k = min(⌊256·e'⌋, TableCap) has k/256 ≤ e' ≤ e. −k/256 is exact
+    *      too, so semi-monotonicity gives exp(−e) ≤ exp(−k/256) ≤ Table(k)
+    *      in whatever `Math.exp` the point loop runs (see [[Table]]).
+    *  - both sums start from 0.0 and add their n terms in the same data
+    *    order, and `+` and the final `* norm` (norm ≥ 0) are monotone, so
+    *    UB and PB are ≥ y by induction.
+    *  - a table sum of n finite positive entries is finite and positive,
+    *    so a bound is NaN only when norm is, and norm is NaN only when bw²
+    *    is (0·∞: a factor whose square underflows to 0 times a variance
+    *    that overflows; or a NaN factor). Then every y is NaN too: the full scan takes none and
+    *    returns 0, and this search visits no block and returns 0. A NaN y
     *    is never taken, as in the full scan.
-    * No ε is needed. A block is pruned only when UB < bestY strictly, so a
-    * point that ties the best is never pruned, and the take rule
-    * (y > bestY, or y == bestY at a lower g) keeps the first argmax
-    * whatever order blocks are visited in.
+    * No ε is needed. A block or point is skipped only when its bound is
+    * < bestY strictly, so a point that ties the best is never skipped, and
+    * the take rule (y > bestY, or y == bestY at a lower g) keeps the first
+    * argmax whatever order points are scored in. While no point has been
+    * scored bestY is −∞, so the first point reached is always scored.
     *
     * The search is two-level: the Blocks coarse blocks are visited in
     * descending-bound order, and inside each its Blocks fine blocks,
-    * also in descending-bound order; each surviving fine block is scored
-    * with the point loop that [[Kernel.curve]] scores every point with. */
+    * also in descending-bound order. In each surviving fine block every
+    * point whose PB reaches bestY is scored with the point loop that
+    * [[Kernel.curve]] scores every point with. */
   private def modeIndex(data: Array[Double], s: Linspace, factor: Double): Int = {
     val k = new Kernel(data, s, factor)
     val coarseUb = new Array[Double](Blocks)
@@ -179,8 +231,10 @@ object Kde {
         var g = c0 + fineOrd(f) * Fine
         val end = g + Fine
         while (g < end) {
-          val y = k.density(g)
-          if (y > bestY || (y == bestY && g < best)) { bestY = y; best = g }
+          if (k.densityBound(g) >= bestY) {
+            val y = k.density(g)
+            if (y > bestY || (y == bestY && g < best)) { bestY = y; best = g }
+          }
           g += 1
         }
         f += 1

@@ -68,6 +68,11 @@ object MetricsSink {
   /** `v` as a JSON string literal, quotes included. */
   private[graft] def quoted(v: String): String =
     "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(v)) + "\""
+
+  /** `v` as a JSON number with `digits` decimals, whatever the default
+    * locale (under de-DE, `f"%.3f"` writes a decimal comma). */
+  private[graft] def decimal(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
 }
 
 /** @param io        the storage seam (SURVEY §7): ParquetTableIO in the

@@ -194,18 +194,19 @@ object Paragraphs {
     val merged = new Array[Boolean](n)
     val members = paras0.map(_.members).toArray
     for (i1 <- 0 until n if paras0(i1).members.length > theta) {
-      val absorbed = ArrayBuffer.empty[Vector[Int]]
       val count = index.overlapping(env.y1(i1), env.y2(i1))
       for (c <- 0 until count) {
         val i2 = index.found(c)
         if (!merged(i2) && env.inside(i1, i2, 85.0)) {
-          absorbed += members(i2)
+          members(i1) = members(i1) ++ members(i2)
           merged(i2) = true
         }
       }
-      members(i1) = members(i1) ++ absorbed.flatten
     }
-    val kept = (0 until n).filterNot(merged).map(i => paras0(i).copy(members = members(i)))
+    // a component that absorbed nothing keeps its row
+    val kept = (0 until n).filterNot(merged).map { i =>
+      if (members(i) eq paras0(i).members) paras0(i) else paras0(i).copy(members = members(i))
+    }
     pinpPost(kept, pageW, pageH, widthP, headerP, footerP)
   }
 
@@ -227,26 +228,23 @@ object Paragraphs {
     val mergedLive = new Array[Boolean](n)
     val env = new Envelopes(paras0)
     val index = new YIntervals(Array.range(0, n), env.y1, env.y2)
-    for (i1 <- 0 until n) {
-      val absorbed = ArrayBuffer.empty[Vector[Int]]
-      if (!mergedLive(i1)) {
-        val count = index.overlapping(env.y1(i1), env.y2(i1))
-        for (c <- 0 until count) {
-          val i2 = index.found(c)
-          if (i1 != i2 && !mergedLive(i2) && env.inside(i1, i2, 10.0)) {
-            absorbed += paras0(i2).members
-            mergedLive(i2) = true
-            val x1 = math.min(env.x1(i1), env.x1(i2)); val x2 = math.max(env.x2(i1), env.x2(i2))
-            val y1 = math.min(env.y1(i1), env.y1(i2)); val y2 = math.max(env.y2(i1), env.y2(i2))
-            paras(i1) = paras(i1).copy(
-              top = Pt(x1 + (x2 - x1) / 2.0, y1),
-              bottom = Pt(x1 + (x2 - x1) / 2.0, y2),
-              left = Pt(x1, y1 + (y2 - y1) / 2.0),
-              right = Pt(x2, y1 + (y2 - y1) / 2.0))
-          }
+    // a paragraph that absorbs nothing keeps its row
+    for (i1 <- 0 until n if !mergedLive(i1)) {
+      val count = index.overlapping(env.y1(i1), env.y2(i1))
+      for (c <- 0 until count) {
+        val i2 = index.found(c)
+        if (i1 != i2 && !mergedLive(i2) && env.inside(i1, i2, 10.0)) {
+          mergedLive(i2) = true
+          val x1 = math.min(env.x1(i1), env.x1(i2)); val x2 = math.max(env.x2(i1), env.x2(i2))
+          val y1 = math.min(env.y1(i1), env.y1(i2)); val y2 = math.max(env.y2(i1), env.y2(i2))
+          paras(i1) = paras(i1).copy(
+            members = paras(i1).members ++ paras0(i2).members,
+            top = Pt(x1 + (x2 - x1) / 2.0, y1),
+            bottom = Pt(x1 + (x2 - x1) / 2.0, y2),
+            left = Pt(x1, y1 + (y2 - y1) / 2.0),
+            right = Pt(x2, y1 + (y2 - y1) / 2.0))
         }
       }
-      paras(i1) = paras(i1).copy(members = paras0(i1).members ++ absorbed.flatten)
     }
     val kept = (0 until n).filterNot(mergedLive).map(paras(_))
     pinpPost(kept, pageW, pageH, widthP, headerP, footerP)

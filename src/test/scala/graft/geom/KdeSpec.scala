@@ -48,14 +48,7 @@ class KdeSpec extends AnyFunSuite {
   private def fullScanIndex(data: Array[Double], factor: Double): Int = {
     val n = data.length
     if (n < 2 || !data.forall(d => !d.isNaN && !d.isInfinite)) return -1
-    var sum = 0.0
-    var i = 0
-    while (i < n) { sum += data(i); i += 1 }
-    val mean = sum / n
-    var sq = 0.0
-    i = 0
-    while (i < n) { val d = data(i) - mean; sq += d * d; i += 1 }
-    val variance = sq / (n - 1)
+    val variance = sampleVariance(data)
     if (variance <= 0.0) return -1
     val bw2 = factor * factor * variance
     val lo = data.min
@@ -69,7 +62,7 @@ class KdeSpec extends AnyFunSuite {
     while (g < 1000) {
       val x = lo + g * step
       var acc = 0.0
-      i = 0
+      var i = 0
       while (i < n) {
         val d = x - data(i)
         val e = d * d * inv2bw2
@@ -81,6 +74,45 @@ class KdeSpec extends AnyFunSuite {
       g += 1
     }
     best
+  }
+
+  /** The two-pass sample variance, in data order, as the estimator's
+    * prelude computes it. */
+  private def sampleVariance(data: Array[Double]): Double = {
+    var sum = 0.0
+    data.foreach(sum += _)
+    val mean = sum / data.length
+    var sq = 0.0
+    data.foreach { v => val d = v - mean; sq += d * d }
+    sq / (data.length - 1)
+  }
+
+  /** The exponent scale 1/(2·bw²) the estimator computes for a sample and
+    * factor, and the exponent it gives an offset d. */
+  private def inv2bw2(data: Array[Double], factor: Double): Double =
+    1.0 / (2.0 * (factor * factor * sampleVariance(data)))
+  private def exponent(data: Array[Double], factor: Double, d: Double): Double =
+    d * d * inv2bw2(data, factor)
+
+  /** The 2·span + 1 consecutive doubles around f. */
+  private def doublesAround(f: Double, span: Int): Seq[Double] = {
+    val below = Iterator.iterate(f)(Math.nextDown).slice(1, span + 1).toSeq
+    val above = Iterator.iterate(f)(Math.nextUp).take(span + 1).toSeq
+    below.reverse ++ above
+  }
+
+  /** A factor whose computed exponent scale is exactly `inv`, if one lies
+    * within 200 doubles of the real-valued solution. */
+  private def factorFor(data: Array[Double], inv: Double): Option[Double] =
+    doublesAround(math.sqrt(1.0 / (2.0 * inv * sampleVariance(data))), 200).find(inv2bw2(data, _) == inv)
+
+  /** Factors near the one that gives offset d the exponent e: the one with
+    * the largest computed exponent below e, and the one with the smallest
+    * at or above it. */
+  private def factorsAround(data: Array[Double], d: Double, e: Double): Seq[Double] = {
+    val fs = doublesAround(d / math.sqrt(2.0 * e * sampleVariance(data)), 200)
+    val (below, atOrAbove) = fs.partition(exponent(data, _, d) < e)
+    Seq(below.maxByOption(exponent(data, _, d)), atOrAbove.minByOption(exponent(data, _, d))).flatten
   }
 
   private def assertSameMode(data: Array[Double], factor: Double, what: String): Unit =
@@ -177,6 +209,61 @@ class KdeSpec extends AnyFunSuite {
     for (data <- Seq(Array.empty[Double], Array(1.0), Array(2.0, 2.0), Array(1.0, Double.NaN),
                      Array(1.0, Double.PositiveInfinity)))
       assert(Kde.modeIndex(data, 0.1) == -1)
+  }
+
+  test("the pruned mode search returns the full scan's index where the table bound is tight") {
+    val rng = new scala.util.Random(11)
+    /** Integer samples spanning [0, 999]: the grid step is exactly 1, so
+      * every offset from a grid point to a sample is an integer. */
+    def integerSample(n: Int): Array[Double] =
+      rng.shuffle(Seq(0.0, 999.0) ++ Seq.fill(n - 2)(rng.nextInt(1000).toDouble)).toArray
+    // a power-of-two exponent scale 2^-p (p ≤ 8) puts every integer offset
+    // d on a table-bin edge: e = d²·2^-p = k/256 exactly
+    var edges = 0
+    for (k <- 0 until 60; p <- Seq(0, 2, 5, 8)) {
+      val data = integerSample(2 + rng.nextInt(200))
+      for (f <- factorFor(data, 1.0 / (1 << p))) {
+        assert(exponent(data, f, 7.0) * 256 == 49 << (8 - p))
+        assertSameMode(data, f, s"bin edges #$k p=$p")
+        edges += 1
+      }
+    }
+    assert(edges >= 100, s"only $edges bin-edge samples")
+    // the exponent of one offset just below and at or above the table cap
+    // (e = 40) and the underflow cut (e = 746)
+    var around = 0
+    for (k <- 0 until 40; e <- Seq(40.0, 746.0)) {
+      val data = integerSample(2 + rng.nextInt(200))
+      val d = (1 + rng.nextInt(999)).toDouble
+      val fs = factorsAround(data, d, e)
+      assert(fs.exists(exponent(data, _, d) < e) && fs.exists(exponent(data, _, d) >= e))
+      fs.foreach { f => assertSameMode(data, f, s"around e=$e #$k d=$d"); around += 1 }
+    }
+    assert(around == 160)
+    // NaN exponents: bw² underflows to 0, so inv2bw2 = +∞ and a zero
+    // offset gives ∞·0; an infinite grid step makes x_0 = 0·∞
+    for (k <- 0 until 10) {
+      val data = integerSample(2 + rng.nextInt(50))
+      assert(exponent(data, 1e-200, 0.0).isNaN)
+      assertSameMode(data, 1e-200, s"inv2bw2 = +inf #$k")
+    }
+    for (data <- Seq(Array(-Double.MaxValue, Double.MaxValue),
+                     Array(Double.MaxValue, 1.0, -Double.MaxValue, 1.0, 2.0),
+                     Array.tabulate(100)(i => if (i % 2 == 0) -1e308 else 1e308 - i)))
+      Seq(0.1, 1e-3, 1e3, 1e-200).foreach(assertSameMode(data, _, s"NaN x_0 ${data.length}"))
+    // flat curves: a huge bandwidth rounds every term to 1.0, so all 1000
+    // points tie and the first wins; a tiny one leaves only zero offsets,
+    // so the points on the samples repeated five times tie
+    for (k <- 0 until 20) {
+      val data = integerSample(3 + rng.nextInt(300))
+      assertSameMode(data, 1e12, s"flat #$k")
+      assert(Kde.modeIndex(data, 1e12) == 0)
+      val tops = Seq.fill(2 + rng.nextInt(5))(1 + rng.nextInt(998)).distinct
+      val once = rng.shuffle((1 until 999).filterNot(tops.contains)).take(rng.nextInt(300))
+      val plateau = rng.shuffle(Seq(0, 999) ++ once ++ tops.flatMap(Seq.fill(5)(_))).map(_.toDouble).toArray
+      assertSameMode(plateau, 1e-5, s"plateau #$k")
+      assert(Kde.modeIndex(plateau, 1e-5) == tops.min)
+    }
   }
 
   test("envelopes match the per-component word walk on every page") {

@@ -2,9 +2,12 @@
 """Full-precision content hash per query of a graft.Verify dump.
 
     python3 tools/board_hash.py <outDir> > hashes.txt
+    python3 tools/board_hash.py <parentDir> <changeDir>
 
-Prints one line per query directory under <outDir>: the query name, its
-row count and an md5 over its rows. Columns are taken in name order, rows
+With one directory, prints one line per query directory under it: the
+query name, its row count and an md5 over its rows. With two, prints only
+the queries whose row count or hash differs, or that exist on one side
+only, and exits 1 if there is any such query, else 0. Columns are taken in name order, rows
 are sorted, and values are serialized without rounding (floats by their
 shortest round-trip repr, binary as hex, nested arrays/structs/maps
 recursively), so two dumps of the same board diff line by line: a float
@@ -50,19 +53,33 @@ def query_hash(path):
     return len(rows), h.hexdigest()
 
 
-def main():
-    if len(sys.argv) != 2:
-        sys.exit("usage: board_hash.py <outDir>")
-    out = sys.argv[1]
+def board(out):
+    """{query name: "rows md5"} of every query directory under out."""
+    hashes = {}
     for name in sorted(os.listdir(out)):
         path = os.path.join(out, name)
         if not os.path.isdir(path):
             continue
         if not any(f.endswith(".parquet") for f in os.listdir(path)):
-            print(f"{name} NO_PARQUET")
+            hashes[name] = "NO_PARQUET"
             continue
         n, digest = query_hash(path)
-        print(f"{name} {n} {digest}")
+        hashes[name] = f"{n} {digest}"
+    return hashes
+
+
+def main():
+    if len(sys.argv) not in (2, 3):
+        sys.exit("usage: board_hash.py <outDir> | board_hash.py <parentDir> <changeDir>")
+    if len(sys.argv) == 2:
+        for name, h in board(sys.argv[1]).items():
+            print(f"{name} {h}")
+        return
+    parent, change = board(sys.argv[1]), board(sys.argv[2])
+    differing = [q for q in sorted(parent.keys() | change.keys()) if parent.get(q) != change.get(q)]
+    for q in differing:
+        print(f"{q} {parent.get(q, 'MISSING')} | {change.get(q, 'MISSING')}")
+    sys.exit(1 if differing else 0)
 
 
 if __name__ == "__main__":
